@@ -428,8 +428,8 @@ object Bench {
     var spark = newSession()
 
     // Warmup covering the representative codegen/JIT paths, so the first
-    // measured query doesn't absorb one-time compilation cost. Profiling
-    // (tools/Q01Prof) showed q01 at 3.9 s on first execution vs ~1.1 s
+    // measured query doesn't absorb one-time compilation cost. A cold
+    // single-query profile showed q01 at 3.9 s on first execution vs ~1.1 s
     // steady-state purely from first-use decimal-HashAggregate + parquet
     // reader JIT — the round-1 "q01 outlier" was warmup, not plan cost.
     spark.range(1000000).selectExpr("sum(id)").collect() // long agg
@@ -439,8 +439,8 @@ object Bench {
       .collect() // decimal hash agg (the q01-family path)
     spark.read.parquet(s"$sfDir/region.parquet").count() // parquet reader init
     // The remaining first-use paths each cost 1-5 s of classload/JIT on
-    // whichever query hits them first (measured via tools/ProfQuery:
-    // q07 5.97 s first run vs 0.57 s steady) — warm them all:
+    // whichever query hits them first (measured cold vs warm in one
+    // JVM: q07 5.97 s first run vs 0.57 s steady) — warm them all:
     locally {
       import org.apache.spark.sql.functions._
       val kv = spark.range(100000).selectExpr("id % 100 AS k", "id AS v")

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 /** Build-once, per-process keyed artifact directories — the ONE
   * implementation of "key → UUID-named dir under a process-random temp
   * base, reclaimed by a shutdown hook" that the label store
@@ -36,7 +38,7 @@ object ProcessStore {
     // shutdown hook is what actually reclaims the store
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       try org.apache.commons.io.FileUtils.deleteDirectory(f)
-      catch { case _: Throwable => () }))
+      catch { case NonFatal(_) => () }))
     f
   }
 
@@ -59,7 +61,7 @@ object ProcessStore {
         } catch {
           case t: Throwable =>
             try org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-            catch { case _: Throwable => () }
+            catch { case NonFatal(_) => () }
             throw t
         }
       }

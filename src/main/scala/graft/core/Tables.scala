@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated parquet star schema (TESTDATA.md).
   *
@@ -47,7 +48,7 @@ object Tables {
     * row-local kernel downstream of the scan (tokenize + explode, md5
     * gram folds, simhash votes, levenshtein, decimal partial
     * aggregation) inherits that single thread while the other 31 cores
-    * idle. Measured (tools/SpreadProf, sf0.1): the d25-shaped 5-gram
+    * idle. Measured (sf0.1, spread vs unspread): the d25-shaped 5-gram
     * md5 kernel 1.5 s → 0.65 s, a q01-shaped decimal aggregate
     * 2.0 s → 1.3 s, with per-task stage metrics showing 1283/260/163 ms
     * across the 3 "parallel" scan tasks before the fix.
@@ -74,9 +75,9 @@ object Tables {
         // but a handful are empty (lineitem at sf0.1: 32 splits, 1 row
         // group, one working task). Footers are consulted ONLY when the
         // file count is below `target` — a production layout with ≥ cores
-        // files never pays any footer I/O — and cached per (path, len,
-        // mtime) for the life of the process.
-        val files = try df.inputFiles catch { case _: Throwable => Array.empty[String] }
+        // files never pays any footer I/O — and cached per path, valid
+        // while the file's (len, mtime) is unchanged.
+        val files = try df.inputFiles catch { case NonFatal(_) => Array.empty[String] }
         if (files.nonEmpty && files.length < target &&
             totalRowGroups(s, files) < target) df.repartition(target)
         else df
@@ -85,9 +86,13 @@ object Tables {
 
   /** Sum of parquet row-group counts across `files` (capped, saturating).
     * Non-parquet or unreadable files count as infinitely splittable so a
-    * mixed source never triggers a spurious repartition.
+    * mixed source never triggers a spurious repartition. The cache holds
+    * one entry per path — `(len, mtime, rowGroups)` — so a file rewritten
+    * in place replaces its entry and the cache stays bounded by the
+    * number of distinct paths read.
     */
-  private val rowGroupCache = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  private[graft] val rowGroupCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
   private def totalRowGroups(s: SparkSession, files: Array[String]): Int = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -97,12 +102,14 @@ object Tables {
       val n = try {
         val p = new Path(f)
         val st = p.getFileSystem(conf).getFileStatus(p)
-        val key = s"$f:${st.getLen}:${st.getModificationTime}"
-        rowGroupCache.computeIfAbsent(key, _ => {
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-          try r.getFooter.getBlocks.size() finally r.close()
-        })
-      } catch { case _: Throwable => Int.MaxValue }
+        val (len, mtime) = (st.getLen, st.getModificationTime)
+        rowGroupCache.compute(f, (_, old) =>
+          if (old != null && old._1 == len && old._2 == mtime) old
+          else {
+            val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+            try (len, mtime, r.getFooter.getBlocks.size()) finally r.close()
+          })._3
+      } catch { case NonFatal(_) => Int.MaxValue }
       if (acc.toLong + n > Int.MaxValue) Int.MaxValue else acc + n
     }
   }
@@ -197,7 +204,7 @@ object Tables {
     // (it is a runtime SQL conf; if a future Spark makes it static this
     // no-ops and our own mains still set it at build time)
     try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val df = table(s, d, "events")
     val unit =
       if (df.schema("ts").dataType == LongType)

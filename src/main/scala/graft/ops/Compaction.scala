@@ -255,16 +255,6 @@ object Compaction {
     */
   private[graft] val DefaultStaleMs: Long = 60L * 60 * 1000
 
-  /** Stage-timing instrumentation for the profiling mains (enabled via
-    * -Dgraft.compact.prof=1 or the env var; zero cost when off).
-    */
-  private[graft] def profStage[A](label: String)(f: => A): A =
-    if (sys.props.get("graft.compact.prof").contains("1")) {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[compact-prof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    } else f
-
   private val warnings = new java.util.concurrent.atomic.AtomicLong
 
   /** Total layout reclaim failures observed this process (round-15
@@ -580,18 +570,18 @@ object Compaction {
                    closed: Long => Boolean = _ => true,
                    io: CommitIo = CommitIo.Local): (Seq[Long], LayoutStats, LayoutStats) = {
     require(budget >= 1, s"byte budget must be >= 1, got $budget")
-    profStage("recoverLayout") { recoverLayout(root, io = io) }
+    recoverLayout(root, io = io)
     val rootF = new java.io.File(root)
-    val before = profStage("layoutStats(before)") { layoutStats(root) }
+    val before = layoutStats(root)
     val log = LayoutLog.read(rootF, io)
     val plainClosed = plainDayDirs(rootF, log, io).filter { case (d, _) => closed(d) }
     val loggedClosed = log.filter { case (d, _) => closed(d) }
     // the physical census: manifest counts for rewritten days (no FS
     // walk — round-15 verdict #4), a listing walk for plain days
-    val current: Map[Long, Long] = profStage("physical census") {
+    val current: Map[Long, Long] =
       plainClosed.map { case (d, f) =>
         d -> liveParquetCount(f)
-      } ++ loggedClosed.map { case (d, r) => d -> r.files } }
+      } ++ loggedClosed.map { case (d, r) => d -> r.files }
     if (current.isEmpty) return (Nil, before, before)
     // EVERY scan below is path-selected to the closed days — under a
     // live writer, open days' in-flight files are never even listed
@@ -614,9 +604,8 @@ object Compaction {
         }
       }
     // days-sized collect (the GlobalOrder-offsets budget)
-    val censusRows = profStage("planned census collect") {
-      plannedCountsByDay(closedRows, budget, packKey)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))) }
+    val censusRows = plannedCountsByDay(closedRows, budget, packKey)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     // days holding a row larger than the budget: the closed-form count
     // reads high there (skipped file_idx values), which would suppress
     // the breach FOREVER (round-14 ADVICE #2) — price exactly those
@@ -643,18 +632,16 @@ object Compaction {
       // the census already knows the EXACT planned file count for the
       // breached days — one write task per planned file (see writeLayout)
       val nPlanned = breached.map(plannedCount).sum
-      profStage("breached plan built")(())
       // stage invisibly, then commit: the rewrite reads the OLD files,
       // which stay live (and stay on disk) until the manifest flips
       val stageName = s"$RewritesDirName/rw-" +
         java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       val stage = new java.io.File(rootF, stageName)
-      profStage("stage write") {
-        writeLayout(planned, stage.getAbsolutePath, packKey,
-          nFiles = nPlanned, budget = budget) }
-      val stagedCounts: Map[Long, Long] = profStage("staged counts walk") { breached.map { d =>
+      writeLayout(planned, stage.getAbsolutePath, packKey,
+        nFiles = nPlanned, budget = budget)
+      val stagedCounts: Map[Long, Long] = breached.map { d =>
         d -> liveParquetCount(new java.io.File(stage, dayName(d)))
-      }.toMap }
+      }.toMap
       // fail LOUDLY before committing if the rewrite produced nothing
       // for a breached day (a day dir whose files hold zero readable
       // rows censuses as breached but plans no output) — committing
@@ -680,7 +667,7 @@ object Compaction {
         tryDelete(new java.io.File(rootF, dir), io)
       }
     }
-    (breached, before, profStage("layoutStats(after)") { layoutStats(root) })
+    (breached, before, layoutStats(root))
   }
 
   private def liveParquetCount(dir: java.io.File): Long = {

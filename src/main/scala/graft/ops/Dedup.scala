@@ -366,11 +366,11 @@ object Dedup extends QueryModule {
     * cluster_id)`. Components via [[Graph.connectedComponents]] — see its
     * scale notes (hash-partitioned label propagation, O(diameter) rounds).
     */
-  /** The d07/d10-shared label frame (CC over the d03 pair graph),
-    * factored so tools/LabelOnceProf can materialize it ONCE and measure
-    * the label-once production shape (one labeling per ingest, every
-    * consumer reading the materialized frame) against the
-    * label-per-query bench shape.
+  /** The label frame shared by d07, d10, d19, p14 and p24 (CC over
+    * the d03 pair graph), materialized ONCE per input
+    * — the label-once production shape: one labeling per ingest, every
+    * consumer reading the materialized frame (see
+    * [[Graph.materializedOnce]] for the measured gain).
     */
   private[graft] def docClusterLabels(s: SparkSession, dir: String): DataFrame =
     Graph.materializedOnce(s,

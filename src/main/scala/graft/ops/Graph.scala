@@ -232,7 +232,7 @@ object Graph {
     * every consumer (keep-one-per-cluster, size histogram, funnel
     * report) reads the materialized table. Before this, d07/d10/p06 each
     * re-ran the full labeling inside their own query (22.4 s vs 14.0 s
-    * for the shared shape, tools/LabelOnceProf, docs/SCALE.md).
+    * for the shared shape, measured at sf0.1, docs/SCALE.md).
     *
     * The store is parquet under a per-PROCESS temp dir, keyed by the
     * caller's (input dir | edge definition | input fingerprint) string:

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** The trained ANN index as an ON-DISK ARTIFACT — the relational form
   * of a FAISS index file: the codebook (one nested-group-array row, the
@@ -75,7 +76,7 @@ object IndexArtifact {
       } catch {
         case t: Throwable =>
           try org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
           throw t
       }
     val aside = new java.io.File(dst.getParentFile,

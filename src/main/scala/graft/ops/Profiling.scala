@@ -242,13 +242,12 @@ object Profiling extends QueryModule {
     * the rule p02's pairwise drop approximates) and deterministic
     * train/val/test assignment (p03's hash) with per-split counts.
     */
-  /** p06's back half given an already-computed survivor label frame —
-    * factored so tools/LabelOnceProf can measure the label-once
-    * production shape (labels materialized once, consumers reading
-    * them) against the label-per-query bench shape.
+  /** p06's back half given an already-computed survivor label frame
+    * (the label-once production shape: labels materialized once by
+    * [[graft.ops.Graph.materializedOnce]], consumers reading them).
     */
-  private[graft] def p06Stages(withLang: DataFrame, kept: DataFrame,
-                               survivors: DataFrame, labels: DataFrame): DataFrame = {
+  private def p06Stages(withLang: DataFrame, kept: DataFrame,
+                        survivors: DataFrame, labels: DataFrame): DataFrame = {
     val reps = survivors.join(
       labels.filter(col("id") === col("comp")).select(col("id").as("doc_id")), "doc_id")
     val withSplit = reps.withColumn("split",

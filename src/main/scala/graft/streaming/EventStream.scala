@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Structured Streaming versions of the event-table computations.
   *
@@ -46,7 +47,7 @@ object EventStream {
     // defensive conf-set, as in Tables.events: nanos-era files only read
     // (as raw longs) when nanosAsLong is on
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val glob = "events*.parquet"
     val probed = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
     val unit =

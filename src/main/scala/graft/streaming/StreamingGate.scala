@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.queries.{QueryDef, QueryModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Gate (DuckDB-oracle) entries for streaming twins whose FINALIZED
   * output is batch-expressible.
@@ -36,20 +37,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StreamingGate extends QueryModule {
 
-  /** Run a (bounded) streaming frame to completion into a memory sink
-    * and return the sink's table. The temp view is dropped first so
-    * re-runs in one session (bench cold + warm samples) don't collide.
-    */
   /** Stream micro-batches pay one state-store task per shuffle partition
     * per stateful operator per batch; at gate/bench scale that fixed cost
     * dominates the actual work, so the bounded gate runs drop to 8
     * partitions for the stream's lifetime (results are partitioning-
-    * independent: counts, mins, decimal sums, and pair sets only). The
-    * session value is restored even on failure; a production deployment
-    * sizes this to cluster cores instead.
+    * independent: counts, mins, decimal sums, and pair sets only). A
+    * production deployment sizes this to cluster cores instead.
     */
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+  private val StreamShufflePartitions = "8"
+
+  /** Run `body` with the session's shuffle partitions at
+    * [[StreamShufflePartitions]]; the session value is restored even on
+    * failure.
+    */
+  private def withStreamPartitions[A](s: SparkSession)(body: => A): A = {
+    val before = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", before)
+  }
 
   /** Checkpoint root for the bounded gate runs. The gate's checkpoint is
     * throwaway BY DESIGN (each run recreates its sink; recovery
@@ -69,26 +74,27 @@ object StreamingGate extends QueryModule {
         // ENOSPC mid-stream there; require real headroom or fall back
         // to the disk tmpdir the pre-tmpfs default used
         java.nio.file.Files.getFileStore(shm).getUsableSpace > 2L * 1024 * 1024 * 1024
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
     if (usable) shm
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
+  /** Run a (bounded) streaming frame to completion into a memory sink
+    * and return the sink's table. The temp view is dropped first so
+    * re-runs in one session (bench cold + warm samples) don't collide.
+    */
   private def runToTable(s: SparkSession, name: String, mode: String = "append")(
       out: => DataFrame): DataFrame = {
-    try s.catalog.dropTempView(name) catch { case _: Throwable => () }
-    val before = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
+    try s.catalog.dropTempView(name) catch { case NonFatal(_) => () }
     val ck = java.nio.file.Files.createTempDirectory(ckRoot, s"graft_ck_$name")
-    try {
+    try withStreamPartitions(s) {
       val q = out.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ck.toString)
         .outputMode(mode).start()
       try q.processAllAvailable() finally q.stop()
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", before)
       try org.apache.commons.io.FileUtils.deleteDirectory(ck.toFile)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     s.table(name)
   }
@@ -763,9 +769,7 @@ object StreamingGate extends QueryModule {
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     val base = java.nio.file.Files.createTempDirectory("graft-es22")
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
-    val before = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
+    withStreamPartitions(s) {
       // a DURABLE file sink (memory sinks can't recover a checkpoint):
       // the parquet sink's _spark_metadata manifest is what makes the
       // re-run exactly-once — readers see only committed batches
@@ -782,7 +786,7 @@ object StreamingGate extends QueryModule {
       runOnce()
       require(s.read.parquet(out).count() == afterFirst,
         "AvailableNow re-run against the committed checkpoint must emit nothing")
-    } finally s.conf.set("spark.sql.shuffle.partitions", before)
+    }
     s.read.parquet(out)
   }
 
@@ -825,9 +829,7 @@ object StreamingGate extends QueryModule {
     import org.apache.spark.sql.functions.col
     val rootDir = new java.io.File(root)
     rootDir.mkdirs() // read-back below must not throw on a no-op stream
-    val before = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
+    withStreamPartitions(s) {
       val writeBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
         (batch, id) =>
           perBatch(batch.toDF())
@@ -838,7 +840,7 @@ object StreamingGate extends QueryModule {
         .option("checkpointLocation", ckpt)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", before)
+    }
     // A delta that matched ZERO files/rows never fires foreachBatch, so
     // no batch_id dir exists and a bare parquet read can't infer a
     // schema. Shape the empty result the same way the batches would

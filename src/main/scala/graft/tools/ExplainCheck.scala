@@ -1,11 +1,13 @@
 package graft.tools
 
 /** Plan-audit helper: for each named registry query (all of them with
-  * no args), print the pushed parquet filters, exchange count, and
-  * whether a cartesian product appears in the executed plan — the
-  * three things worth eyeballing before pinning a new entry (e.g. the
-  * round-14 check that the stored-index membership read pushes
-  * `EqualTo(crn, 1)` down to the scan footer).
+  * no args), print the pushed parquet filters, exchange counts, and the
+  * executed plan's red flags (cartesian product, single-partition
+  * exchange, sort-merge join, broadcast nested-loop join) — the things
+  * worth eyeballing before pinning a new entry (e.g. the round-14 check
+  * that the stored-index membership read pushes `EqualTo(crn, 1)` down
+  * to the scan footer). Full formatted plans: `graft.tools.Run <q>
+  * <dir> --explain`.
   *
   * Usage: `sbt "runMain graft.tools.ExplainCheck s32_artifact_serve ..."`
   * (reads /root/testdata/sf0.01 unless SPARK_GRAFT_SF_DIR is set).
@@ -23,9 +25,11 @@ object ExplainCheck {
       val p = df.queryExecution.executedPlan.toString
       val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(p).toList
       println(s"== $q pushed: ${pushed.mkString(" | ")}")
+      val flags = Seq("CartesianProduct", "SinglePartition", "SortMergeJoin",
+        "BroadcastNestedLoopJoin").filter(p.contains(_))
       println(s"   shuffles: ${"Exchange (hash|range)partitioning".r.findAllIn(p).size}, " +
         s"broadcasts: ${"BroadcastExchange".r.findAllIn(p).size}, " +
-        s"cartesian: ${p.contains("CartesianProduct")}")
+        s"flags: ${if (flags.isEmpty) "clean" else flags.mkString(", ")}")
       graft.core.Sessions.sweepPersistedState(spark)
     }
     spark.stop()

@@ -11,6 +11,14 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** A round-robin exchange: the node Tables.spread's parallelism floor plans. */
+  private def isRoundRobin(n: org.apache.spark.sql.execution.SparkPlan): Boolean = n match {
+    case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+      e.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]
+    case _ => false
+  }
+
   test("bucketed tables join without a shuffle exchange") {
     // saveAsTable writes under the default warehouse dir
     // (<repo>/spark-warehouse, gitignored); tables dropped at the end
@@ -431,16 +439,20 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     // row-group-starved layouts only (the 1x dir here is a single file;
     // the 10x write has ≥cores row groups) — layout-adaptive by design,
     // not the size-triggered JOIN-STRATEGY flip this pin exists to
-    // catch, so that one node is excluded from the stability compare.
-    def planShape(name: String, dir: String): Seq[String] =
-      SparkEntry.queries(name)(spark, dir).queryExecution.sparkPlan
-        .collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-            if e.outputPartitioning.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] =>
-            "SpreadFloor" // tracked, but identical whether or not it fired
-          case n => n.nodeName
-        }.filter(_ != "SpreadFloor")
+    // catch. So the shape compare leaves that node out, and its count
+    // is pinned per layout instead: (1x, 10x) round-robin exchanges, as
+    // measured — a new blanket repartition() fails this pin.
+    val roundRobins = Map(
+      "q01_agg_lineitem" -> (1, 0), "q03_join_topk" -> (0, 0),
+      "q05_multi_join" -> (0, 0), "q14_set_ops" -> (0, 0),
+      "q23_pivot" -> (0, 0), "q26_exact_percentiles" -> (0, 0),
+      "q39_stats_agg" -> (1, 0), "q42_changelog_compact" -> (0, 0))
+    /** (node names without round-robin exchanges, round-robin count) */
+    def planShape(name: String, dir: String): (Seq[String], Int) = {
+      val (rr, rest) = SparkEntry.queries(name)(spark, dir).queryExecution.sparkPlan
+        .collect { case n => n }.partition(isRoundRobin)
+      (rest.map(_.nodeName), rr.size)
+    }
     def time(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
@@ -451,9 +463,13 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     val dir1 = mkDir(1)
     val dir10 = mkDir(10)
     try {
-      for (q <- qs)
-        assert(planShape(q, dir1) === planShape(q, dir10),
-          s"$q: optimized plan shape flipped with corpus size")
+      for (q <- qs) {
+        val (shape1, rr1) = planShape(q, dir1)
+        val (shape10, rr10) = planShape(q, dir10)
+        assert(shape1 === shape10, s"$q: optimized plan shape flipped with corpus size")
+        assert((rr1, rr10) === roundRobins(q),
+          s"$q: round-robin exchanges (1x, 10x) changed")
+      }
       qs.foreach(time(_, dir1)) // warm codegen/JIT for every query shape
       val t1 = qs.map(q => q -> time(q, dir1)).toMap
       val t10 = qs.map(q => q -> time(q, dir10)).toMap
@@ -1383,5 +1399,45 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       graft.core.Sessions.sweepPersistedState(spark)
       org.apache.commons.io.FileUtils.deleteDirectory(base)
     }
+  }
+
+  test("Tables.spread: a file rewritten in place replaces its row-group cache entry") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rgcache").toFile
+    val file = new java.io.File(base, "t.parquet")
+    // many splits over one file, so spread reaches the footer check
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "32k")
+    def writeAt(blockSize: Long): Unit = {
+      val stage = new java.io.File(base, "stage")
+      s.range(50000).selectExpr("id", "cast(id * 7919 % 100003 as string) AS v")
+        .coalesce(1).write.option("parquet.block.size", blockSize.toString)
+        .parquet(stage.getAbsolutePath)
+      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, file.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      org.apache.commons.io.FileUtils.deleteDirectory(stage)
+    }
+    def entries = {
+      import scala.jdk.CollectionConverters._
+      graft.core.Tables.rowGroupCache.asScala.toSeq.filter(_._1.contains(file.getAbsolutePath))
+    }
+    def spreads(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.sparkPlan.find(isRoundRobin).isDefined
+    val target = s.sparkContext.defaultParallelism
+    try {
+      writeAt(128L * 1024 * 1024) // one row group
+      val one = s.read.parquet(file.getAbsolutePath)
+      assert(one.rdd.getNumPartitions >= target)
+      assert(spreads(graft.core.Tables.spread(one)), "a 1-row-group scan must be spread")
+      assert(entries.map(_._2._3) === Seq(1))
+      writeAt(16L * 1024) // many row groups, same path
+      val many = s.read.parquet(file.getAbsolutePath)
+      assert(many.rdd.getNumPartitions >= target)
+      val spread = graft.core.Tables.spread(many)
+      assert(entries.size === 1, s"one cache entry per path, got $entries")
+      assert(entries.head._2._3 >= target, s"rewrite must have >= $target row groups: $entries")
+      assert((spread eq many) && !spreads(spread),
+        "a scan with enough row groups must pass through")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
   }
 }

@@ -1037,4 +1037,28 @@ class StreamingSpec extends AnyFunSuite {
       assert(funnelGot === funnelWant, "funnel diverged from batch gold under RocksDB")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
+
+  test("stream gates restore the session's shuffle partitions after a failing and a normal run") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    assert(prior !== "8", "the restore check needs a session value other than the stream's 8")
+    val base = java.nio.file.Files.createTempDirectory("graft_partsrestore").toFile
+    try {
+      var seen: Option[String] = None
+      intercept[Exception] {
+        graft.streaming.StreamingGate.runDocBatchStream(spark,
+          graft.streaming.StreamingGate.readDocuments(spark, dir),
+          new java.io.File(base, "out").getAbsolutePath,
+          new java.io.File(base, "ckpt").getAbsolutePath,
+          Seq("doc_id")) { b =>
+          seen = Some(b.sparkSession.conf.get(key))
+          throw new IllegalStateException("perBatch failure")
+        }
+      }
+      assert(seen === Some("8"), "the stream must run under the stream partition count")
+      assert(spark.conf.get(key) === prior, "partitions not restored after a failing batch")
+      assert(SparkEntry.queries("es02_tumbling_closed")(spark, dir).count() > 0)
+      assert(spark.conf.get(key) === prior, "partitions not restored after a gate query")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
 }
