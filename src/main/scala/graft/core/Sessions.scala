@@ -7,7 +7,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   /** Pre-configured builder: UTC, nanos-as-long (events table), AQE, no
-    * UI. Callers add master-specific bits and getOrCreate.
+    * UI, and the `file:` scheme on [[LocalFs]]. Callers add master-specific
+    * bits and getOrCreate.
+    *
+    * The `file:` registration lives here so every session gets it: Bench,
+    * Verify, the tools, the benchmark's Runner and the tests all build
+    * their session through this builder. Without it Hadoop forks a
+    * `chmod` per created file and a `readlink` per checkpoint rename, about
+    * 390 processes per pass of the streaming and parquet-writing queries.
     */
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
@@ -17,6 +24,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.confs)
 
   /** Standard local session for the driver-contract mains. */
   def local(cpus: String): SparkSession = {

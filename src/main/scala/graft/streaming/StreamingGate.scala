@@ -56,37 +56,17 @@ object StreamingGate extends QueryModule {
     try body finally s.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  /** Checkpoint root for the bounded gate runs. The gate's checkpoint is
-    * throwaway BY DESIGN (each run recreates its sink; recovery
-    * semantics are separately pinned by StreamingRecoverySpec against
-    * real on-disk checkpoints), so it goes on tmpfs when the host has
-    * one: every state-store delta commit fsyncs to the checkpoint
-    * volume, and on a disk-bound host that IO — not the join/agg work —
-    * dominates a short stream's wall time. A production deployment
-    * points this at durable storage instead.
-    */
-  private lazy val ckRoot: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val usable =
-      try java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm) &&
-        // containers often cap /dev/shm at 64 MB — state-heavy gates
-        // (the interval joins hold every event in join state) would hit
-        // ENOSPC mid-stream there; require real headroom or fall back
-        // to the disk tmpdir the pre-tmpfs default used
-        java.nio.file.Files.getFileStore(shm).getUsableSpace > 2L * 1024 * 1024 * 1024
-      catch { case NonFatal(_) => false }
-    if (usable) shm
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-
   /** Run a (bounded) streaming frame to completion into a memory sink
     * and return the sink's table. The temp view is dropped first so
     * re-runs in one session (bench cold + warm samples) don't collide.
+    * The checkpoint is throwaway by design and goes to the tmpdir like
+    * the other gate scratch dirs; recovery semantics are pinned by
+    * StreamingRecoverySpec against real checkpoints.
     */
   private def runToTable(s: SparkSession, name: String, mode: String = "append")(
       out: => DataFrame): DataFrame = {
     try s.catalog.dropTempView(name) catch { case NonFatal(_) => () }
-    val ck = java.nio.file.Files.createTempDirectory(ckRoot, s"graft_ck_$name")
+    val ck = java.nio.file.Files.createTempDirectory(s"graft_ck_$name")
     try withStreamPartitions(s) {
       val q = out.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ck.toString)
@@ -760,16 +740,11 @@ object StreamingGate extends QueryModule {
     */
   private def es22(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    // sweep PRIOR runs' litter first (the returned frame reads the new
-    // dir lazily, so in-call deletion of the current one is impossible;
-    // bounding the accumulation at one surviving dir is the next best)
-    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
-    Option(tmpRoot.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("graft-es22"))
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     val base = java.nio.file.Files.createTempDirectory("graft-es22")
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
-    withStreamPartitions(s) {
+    // per-invocation cleanup, same contract as es24: pin the read-back
+    // into block storage, then delete only the directory this run created
+    try withStreamPartitions(s) {
       // a DURABLE file sink (memory sinks can't recover a checkpoint):
       // the parquet sink's _spark_metadata manifest is what makes the
       // re-run exactly-once — readers see only committed batches
@@ -786,8 +761,8 @@ object StreamingGate extends QueryModule {
       runOnce()
       require(s.read.parquet(out).count() == afterFirst,
         "AvailableNow re-run against the committed checkpoint must emit nothing")
-    }
-    s.read.parquet(out)
+      s.read.parquet(out).localCheckpoint()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 
   private val es22Sql = es02Sql

@@ -1,18 +1,15 @@
 package graft
 
-import graft.core.MapReduceJob
+import graft.core.{MapReduceJob, Sessions}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The tests' shared session: the bench's config (`Sessions.builder`), at
+  * four cores.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.builder("local[4]", "4").appName("graft-test").getOrCreate()
 }
 
 /** Reference-parity tests for the generic MapReduce contract.

@@ -107,4 +107,45 @@ class FormatsSpec extends AnyFunSuite {
     assert(imgs === 2)
     org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
+
+  test("the file: scheme is core.LocalFs and matches stock Hadoop on permissions and link status") {
+    import java.nio.file.{Files => JFiles}
+    import org.apache.hadoop.fs.{FileContext, FileSystem, Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(new java.net.URI("file:///"), conf)
+    assert(fs.isInstanceOf[graft.core.GraftLocalFileSystem])
+    assert(FileContext.getFileContext(new java.net.URI("file:///"), conf)
+      .getDefaultFileSystem.isInstanceOf[graft.core.GraftLocalFs])
+    val stock = new RawLocalFileSystem()
+    stock.initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
+    val dir = JFiles.createTempDirectory("graft-localfs")
+    try {
+      for (mode <- Seq("0600", "0644", "0700", "0755", "0777", "1777")) {
+        val perm = new FsPermission(Integer.parseInt(mode, 8).toShort)
+        val (ours, theirs) = (dir.resolve(s"ours_$mode"), dir.resolve(s"stock_$mode"))
+        Seq(ours, theirs).foreach(JFiles.createFile(_))
+        fs.setPermission(new Path(ours.toString), perm)
+        stock.setPermission(new Path(theirs.toString), perm)
+        assert(JFiles.getPosixFilePermissions(ours) === JFiles.getPosixFilePermissions(theirs), mode)
+        assert(java.nio.file.attribute.PosixFilePermissions.toString(
+          JFiles.getPosixFilePermissions(ours)) === perm.toString.replace('t', 'x'), mode)
+      }
+      val file = dir.resolve("ours_0644")
+      val link = JFiles.createSymbolicLink(dir.resolve("link"), file)
+      def linkStatus(f: FileSystem, p: Path) =
+        try {
+          val st = f.getFileLinkStatus(p)
+          Right((st.getPath, st.isFile, st.isDirectory, st.getLen, st.getModificationTime,
+            if (st.isSymlink) Some(st.getSymlink) else None))
+        } catch { case e: java.io.FileNotFoundException => Left(e.getClass) }
+      val (missing, linkPath) = (new Path(dir.resolve("missing").toString), new Path(link.toString))
+      for (p <- Seq(new Path(file.toString), missing, linkPath,
+          new Path(s"file:$file"), new Path(s"file:$link"))) {
+        assert(linkStatus(fs, p) === linkStatus(stock, p), p)
+      }
+      assert(linkStatus(fs, missing) === Left(classOf[java.io.FileNotFoundException]))
+      assert(linkStatus(fs, linkPath).exists(_._6.contains(new Path(s"file:$file"))))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

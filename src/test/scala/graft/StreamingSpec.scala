@@ -1061,4 +1061,63 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.conf.get(key) === prior, "partitions not restored after a gate query")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
   }
+
+  test("es22 run twice in one session: the second run leaves the first's frame readable") {
+    // each run owns its scratch dir: a prefix sweep of tmpdir by the second
+    // run would delete the files the first run's frame reads
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def es22Dirs: Set[String] = Option(tmpRoot.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("graft-es22")).map(_.getName).toSet
+    val before = es22Dirs
+    val es22 = SparkEntry.queries("es22_available_now")
+    try {
+      val first = es22(spark, dir)
+      val second = es22(spark, dir)
+      val rows = first.collect().toSet
+      assert(rows.nonEmpty)
+      assert(rows === second.collect().toSet)
+      assert(es22Dirs === before, "es22 must remove exactly the scratch dir it created")
+    } finally graft.core.Sessions.sweepPersistedState(spark)
+  }
+
+  test("local-file writes, checkpoint commits and renames fork no process (jdk.ProcessStart)") {
+    import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
+    import org.apache.hadoop.fs.{FileContext, Options, Path}
+    import scala.jdk.CollectionConverters._
+    // Shell's class init forks `setsid` once per JVM; the check is per operation
+    Class.forName("org.apache.hadoop.util.Shell")
+    // Spark's own async `rm -rf` of artifact dirs is not a Hadoop local-file
+    // operation: count only spawns whose stack passes through Hadoop's Shell
+    def viaShell(e: RecordedEvent) = Option(e.getStackTrace).exists(_.getFrames.asScala
+      .exists(_.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell")))
+    val spawns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushes = new java.util.concurrent.atomic.AtomicInteger()
+    val rs = new RecordingStream()
+    val base = java.nio.file.Files.createTempDirectory("graft-nospawn")
+    try {
+      rs.enable("jdk.ProcessStart").withStackTrace()
+      rs.onEvent("jdk.ProcessStart", e => if (viaShell(e)) spawns.add(e.getString("command")))
+      rs.onFlush(() => flushes.incrementAndGet())
+      rs.startAsync()
+      assert(SparkEntry.queries("es12_compact_snapshot")(spark, dir).count() > 0)
+      spark.range(200).selectExpr("id", "id % 4 AS k")
+        .write.partitionBy("k").parquet(s"$base/parts")
+      val fc = FileContext.getFileContext(new java.net.URI("file:///"),
+        spark.sparkContext.hadoopConfiguration)
+      val (src, dst) = (new Path(s"$base/src"), new Path(s"$base/dst"))
+      Seq(src, dst).foreach(p => fc.create(p, java.util.EnumSet.of(
+        org.apache.hadoop.fs.CreateFlag.CREATE)).close())
+      fc.rename(src, dst, Options.Rename.OVERWRITE)
+      assert(!fc.util.exists(src) && fc.util.exists(dst))
+      // events reach the stream at its next flush: wait for two full ones
+      val seen = flushes.get
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (flushes.get < seen + 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(flushes.get >= seen + 2, "the JFR stream never flushed")
+    } finally {
+      rs.close()
+      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+    }
+    assert(spawns.isEmpty, s"${spawns.size} forked, e.g. ${spawns.asScala.take(4).mkString("; ")}")
+  }
 }
