@@ -459,7 +459,9 @@ object Bench {
         "try_cast(cast(v AS string) AS bigint) AS c")
         .agg(count("d"), sum("c")).collect() // ANSI try_* eval paths (q43)
       val c = kv.persist(); c.count(); c.unpersist(true) // InMemoryRelation
-      // localCheckpoint + the label-propagation join/agg loop (d07/d08/p06)
+      // localCheckpoint, limit collect and broadcast anti-join: the
+      // in-memory finish of connectedComponents, the path of every sf0.1
+      // pair graph (the hop loop runs past Graph.InMemoryEdges edges)
       graft.ops.Graph.connectedComponents(
         spark.range(4).toDF("id"),
         spark.range(3).selectExpr("id AS a", "id + 1 AS b")).collect()

@@ -364,7 +364,8 @@ object Dedup extends QueryModule {
     * cluster (documents in no pair are their own singleton cluster).
     * Downstream "keep one per cluster" is then `filter(doc_id ===
     * cluster_id)`. Components via [[Graph.connectedComponents]] — see its
-    * scale notes (hash-partitioned label propagation, O(diameter) rounds).
+    * scale notes (union-find in driver memory up to Graph.InMemoryEdges
+    * pairs, hash-partitioned label propagation past it).
     */
   /** The label frame shared by d07, d10, d19, p14 and p24 (CC over
     * the d03 pair graph), materialized ONCE per input

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed graph primitives for dedup clustering.
   *
@@ -27,7 +29,123 @@ object Graph {
        |  UNION
        |  SELECT e.dst, w.comp FROM walk w JOIN e ON w.id = e.src)""".stripMargin
 
-  /** Connected components by iterative min-label propagation.
+  /** Edge count up to which [[connectedComponents]] labels in driver
+    * memory: 2^18 = 262,144 edges, i.e. at most 4 MB of id pairs in one
+    * long array and a local relation of at most 2^19 endpoint labels on
+    * the driver. Every pair graph the registry builds at sf0.1 fits
+    * (p06 108 edges, d08 140, m12 183, d07 256, d27 156,661 — the largest
+    * within 2x of the cap); past it, at warehouse scale, only the
+    * distributed loop works.
+    */
+  private[graft] val InMemoryEdges: Int = 1 << 18
+
+  /** Connected components: every node labeled with the min node id of
+    * its component.
+    *
+    * The edge frame is evaluated ONCE (`localCheckpoint`), then probed
+    * with one `limit(InMemoryEdges + 1)` collect, and the observed edge
+    * count picks the labeling:
+    *  - at most [[InMemoryEdges]] edges: the driver finishes the job with
+    *    union-find (union by min id, so each root IS its component's min
+    *    id — exactly the loop's fixpoint) and the labels become a local
+    *    relation. A pair graph that fits on one machine needs one round,
+    *    not O(log diameter) barriers of hop joins, checkpoints and
+    *    counts: this path fires 4 jobs (edge checkpoint, probe, the
+    *    broadcast of the labels for the singleton anti-join, result
+    *    checkpoint) where the loop fires 15-35 (m12's 183-edge graph: 19);
+    *  - more: the distributed min-label propagation loop
+    *    ([[connectedComponentsWithHops]]) over the same materialized
+    *    edges, so at scale the edge plan is still evaluated once.
+    * Both paths union the singletons (`nodes` that are no edge endpoint)
+    * in once and `localCheckpoint()` the result, so [[release]] frees it
+    * either way; the in-memory labels sit in ONE partition so the result
+    * has no more partitions than the loop's (consumers of stored labels
+    * scan one task per file).
+    *
+    * @param nodes single-column frame of `LongType` node ids
+    * @param edges two-column frame of non-null `LongType` undirected edges (need
+    *              not be symmetrized; self-loops and duplicates are
+    *              harmless; an empty edge set yields all-singleton
+    *              labels). Endpoints must be drawn from `nodes` — an
+    *              edge id outside `nodes` would add that id to the output
+    * @param maxRounds loop only: see [[connectedComponentsWithHops]]
+    * @param hops loop only: see [[connectedComponentsWithHops]]
+    * @return frame (id, comp): comp = min node id in id's component
+    */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
+                          hops: Int = 2): DataFrame = {
+    requireLongIds(nodes, edges)
+    val e = edges.toDF("src", "dst").localCheckpoint()
+    try {
+      // coalesce(1): the limit reads the checkpointed blocks in one task
+      // (one job), stopping after InMemoryEdges + 1 rows however many
+      // partitions the edges have; rows stay Spark's packed UnsafeRows
+      // until they are copied into one long array
+      val probe = e.coalesce(1).limit(InMemoryEdges + 1).queryExecution
+      val rows = SQLExecution.withNewExecutionId(probe, Some("cc edge probe"))(
+        probe.executedPlan.executeCollect())
+      if (rows.length <= InMemoryEdges) {
+        val ends = new Array[Long](2 * rows.length)
+        for (i <- rows.indices) {
+          require(!rows(i).anyNull, "connected components take non-null edge ids")
+          ends(2 * i) = rows(i).getLong(0)
+          ends(2 * i + 1) = rows(i).getLong(1)
+        }
+        labelInDriver(nodes, ends)
+      } else connectedComponentsWithHops(nodes, e, maxRounds, hops)._1
+    } finally releaseCheckpoint(e)
+  }
+
+  private def requireLongIds(nodes: DataFrame, edges: DataFrame): Unit =
+    require((nodes.schema.fields ++ edges.schema.fields).forall(_.dataType == LongType),
+      s"connected components take LongType ids; got nodes ${nodes.schema.simpleString}, " +
+        s"edges ${edges.schema.simpleString}")
+
+  /** The in-memory finish of [[connectedComponents]]: `ends` holds the
+    * edges as (src, dst) pairs back to back. Endpoint ids are sorted, so
+    * a node's index orders like its id and linking the larger root under
+    * the smaller keeps every root at its component's min id.
+    */
+  private def labelInDriver(nodes: DataFrame, ends: Array[Long]): DataFrame = {
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var k = 0
+    for (i <- sorted.indices if k == 0 || sorted(i) != sorted(k - 1)) {
+      sorted(k) = sorted(i)
+      k += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, k)
+    val parent = Array.tabulate(k)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) {
+        parent(r) = parent(parent(r)) // path halving
+        r = parent(r)
+      }
+      r
+    }
+    for (i <- 0 until ends.length by 2) {
+      val a = find(java.util.Arrays.binarySearch(ids, ends(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, ends(i + 1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val rows = new java.util.ArrayList[Row](k)
+    for (i <- 0 until k) rows.add(Row(ids(i), ids(find(i))))
+    val labels = nodes.sparkSession.createDataFrame(rows,
+      StructType(Seq(StructField("id", LongType), StructField("comp", LongType))))
+    // the anti-join broadcasts the labels (one small job); the union
+    // reads them as one partition
+    val singletons = nodes.toDF("id")
+      .join(labels.select(col("id")), Seq("id"), "left_anti")
+      .select(col("id"), col("id").as("comp"))
+    labels.coalesce(1).unionAll(singletons).localCheckpoint()
+  }
+
+  /** Connected components by iterative min-label propagation — the
+    * large-graph path of [[connectedComponents]] — plus the number of
+    * propagation hops actually executed before the fixpoint was observed:
+    * the convergence-round instrument the scale tests assert on (hops
+    * grow with log(diameter), NOT with corpus size).
     *
     * Each node starts labeled with its own id; every round, each node
     * takes the min of its own label and its neighbors' labels. At
@@ -71,32 +189,19 @@ object Graph {
     * driver round-trip barrier. On a 1000-executor cluster those are the
     * expensive parts of a round, not the hop's shuffle itself.
     *
-    * @param nodes single-column frame of node ids (any orderable type)
-    * @param edges two-column frame of undirected edges (need not be
-    *              symmetrized; self-loops and duplicates are harmless;
-    *              an empty edge set yields all-singleton labels).
-    *              Endpoints must be drawn from `nodes` — an edge id
-    *              outside `nodes` would add that id to the output
+    * @param nodes node ids, as in [[connectedComponents]]
+    * @param edges undirected edges, as in [[connectedComponents]]
     * @param maxRounds bound on total label-propagation HOPS (a batch
     *                  executes min(hops, remaining) of them, so the
     *                  budget is never overshot); convergence is only
     *                  checked at batch boundaries
     * @param hops propagation steps per checkpoint/convergence barrier
-    * @return frame (id, comp): comp = min node id in id's component
-    */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
-                          hops: Int = 2): DataFrame =
-    connectedComponentsWithHops(nodes, edges, maxRounds, hops)._1
-
-  /** [[connectedComponents]] plus the number of propagation hops actually
-    * executed before the fixpoint was observed — the convergence-round
-    * instrument the scale tests assert on (hops grow with log(diameter),
-    * NOT with corpus size).
     */
   private[graft] def connectedComponentsWithHops(
       nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
       hops: Int = 2): (DataFrame, Int) = {
     require(hops >= 1, "hops must be >= 1")
+    requireLongIds(nodes, edges)
     val e0 = edges.toDF("src", "dst")
     val sym = e0
       .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))

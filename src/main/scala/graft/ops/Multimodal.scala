@@ -369,16 +369,17 @@ object Multimodal extends QueryModule {
     * block-level savings, THIS names the files to drop.
     *
     * Scale shape: rides m07's banded pair generation (never all-pairs),
-    * CC is O(log diameter) barriers, and the survivor is a struct
+    * CC finishes in driver memory up to Graph.InMemoryEdges pairs and
+    * takes O(log diameter) barriers past it, and the survivor is a struct
     * extremum inside ONE cluster_id hash aggregate (the d19/q49 argmax
     * shape — no per-cluster window sort). Determinism: (n_bytes,
     * −doc_id) max == the oracle's ORDER BY n_bytes DESC, doc_id ASC;
     * all-integer.
     */
   private def m12(s: SparkSession, dir: String): DataFrame = {
-    // materialize the pair table once before CC: the hop loop's driver
-    // jobs would otherwise re-plan (and the sym legs re-run) the whole
-    // m07 banded-simhash pipeline — the d08/d17 lifecycle discipline
+    // connectedComponents checkpoints its edge frame itself, so the m07
+    // banded-simhash pipeline runs once with or without this copy of the
+    // pair table; the copy costs one job of the build
     val pairs = m07(s, dir).select(col("ida"), col("idb")).localCheckpoint()
     val bytes = media(s, dir).toDF().select(col("doc_id"), col("n_bytes"))
     val labels = graft.ops.Graph.connectedComponents(

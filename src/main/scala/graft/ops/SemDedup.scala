@@ -306,13 +306,13 @@ object SemDedup extends QueryModule {
     // oracle-aligned: DuckDB's 0/0 = NaN passes >= Threshold) if that
     // source contract ever loosens
     // The pair set is materialized ONCE (localCheckpoint) before CC
-    // consumes it: CC's hop loop plans ~37 driver-side jobs, and each
-    // re-analysis of a plan carrying the whole assignment + refinement
-    // lineage costs real driver time even with every frame cached
-    // (measured: identical stage/task totals, +5 s of wall at sf0.1
-    // purely from planning the 6x-larger tree). With the tiny pair
-    // table checkpointed, the scratch caches are released immediately —
-    // the d17 lifecycle-ownership discipline.
+    // consumes it, so the scratch caches are released immediately — the
+    // d17 lifecycle-ownership discipline — and CC's jobs plan against
+    // the tiny pair table, not the whole assignment + refinement lineage
+    // (re-analysing that tree per job cost +5 s of wall at sf0.1 under
+    // the hop loop's ~37 jobs, at identical stage/task totals). At sf0.1
+    // (d08 140 edges, d27 156,661) CC finishes in driver memory in 4
+    // jobs; the loop runs past Graph.InMemoryEdges.
     val pairs = cand
       .join(base.select(col("vec_id").as("ida"), col("v").as("va"), col("nrm").as("na")), "ida")
       .join(base.select(col("vec_id").as("idb"), col("v").as("vb"), col("nrm").as("nb")), "idb")

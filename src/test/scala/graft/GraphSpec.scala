@@ -1,18 +1,61 @@
 package graft
 
 import graft.ops.Graph
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected-components (Graph / d07) behavior on synthetic graphs where
-  * the answer is known by construction.
+  * the answer is known by construction. Graphs this small take
+  * `connectedComponents`' in-memory finish; each exact answer is also
+  * checked against the distributed loop (`connectedComponentsWithHops`).
   */
 class GraphSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Graph.connectedComponents(nodes.toDF("id"), edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def labelMap(labels: DataFrame): Map[Long, Long] =
+    labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The labels of both paths, asserted equal to each other. */
+  private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val (n, e) = (nodes.toDF("id"), edges.toDF("a", "b"))
+    val inMemory = labelMap(Graph.connectedComponents(n, e))
+    val loop = labelMap(Graph.connectedComponentsWithHops(n, e)._1)
+    assert(inMemory === loop, "in-memory finish and label-propagation loop disagree")
+    inMemory
+  }
+
+  /** `body`'s result and the number of Spark jobs it fired, counted by job
+    * group. Listener events arrive in order, so once a sentinel job fired
+    * after `body` has been seen, every job of `body` has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graph-spec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-sentinel" => sentinelSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup[R](g: String)(f: => R): R = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      val result = inGroup(group)(body)
+      inGroup(s"$group-sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("two components, a singleton, duplicate + self edges") {
     val labels = cc(
@@ -38,19 +81,23 @@ class GraphSpec extends AnyFunSuite {
     // propagation would need 299 hops; the per-hop pointer jump makes
     // propagation distance double per hop, so ~9 hops suffice
     val n = 300L
-    val labels = Graph.connectedComponents(
+    val labels = labelMap(Graph.connectedComponentsWithHops(
       (1L to n).toDF("id"),
       (1L until n).map(i => (i, i + 1)).toDF("a", "b"),
-      maxRounds = 20)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      maxRounds = 20)._1)
     assert(labels === (1L to n).map(_ -> 1L).toMap)
   }
 
-  test("2k-node random graph matches an in-memory union-find exactly") {
+  /** 2k nodes, ~1500 random edges → a mix of singletons, pairs, chains and blobs. */
+  private val randomN = 2000
+  private def randomEdges(): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
-    val n = 2000
-    // ~1500 random edges → a mix of singletons, pairs, chains and blobs
-    val edges = Seq.fill(1500)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    Seq.fill(1500)((rnd.nextInt(randomN).toLong, rnd.nextInt(randomN).toLong))
+  }
+
+  test("2k-node random graph matches an in-memory union-find exactly") {
+    val n = randomN
+    val edges = randomEdges()
 
     // reference: classic union-find with path compression
     val parent = Array.tabulate(n)(identity)
@@ -63,6 +110,55 @@ class GraphSpec extends AnyFunSuite {
 
     val got = cc((0L until n.toLong), edges)
     assert(got === expected)
+  }
+
+  /** A star centred on 0 with `edges` edges, as (nodes, edges) frames. */
+  private def star(edges: Int): (DataFrame, DataFrame) =
+    (spark.range(0, edges + 1L).toDF("id"),
+      spark.range(1, edges + 1L).select(lit(0L).as("a"), col("id").as("b")))
+
+  test("a small pair graph finishes in driver memory: 4 jobs, not the loop's barriers") {
+    val (nodes, edges) = ((0L until randomN.toLong).toDF("id"), randomEdges().toDF("a", "b"))
+    val (labels, jobs) = jobsOf(Graph.connectedComponents(nodes, edges))
+    val (loopLabels, loopJobs) = jobsOf(Graph.connectedComponentsWithHops(nodes, edges)._1)
+    try {
+      info(s"in-memory $jobs jobs, loop $loopJobs jobs; partitions " +
+        s"${labels.rdd.getNumPartitions} vs ${loopLabels.rdd.getNumPartitions}")
+      assert(labelMap(labels) === labelMap(loopLabels))
+      assert(jobs === 4, s"the in-memory finish fired $jobs jobs (the loop: $loopJobs)")
+      assert(labels.rdd.getNumPartitions <= loopLabels.rdd.getNumPartitions,
+        "the in-memory result must not have more partitions than the loop's")
+    } finally {
+      Graph.release(labels)
+      Graph.release(loopLabels)
+    }
+    // the cap is inclusive: exactly InMemoryEdges edges still finish in memory
+    val (starNodes, starEdges) = star(Graph.InMemoryEdges)
+    val (starLabels, starJobs) = jobsOf(Graph.connectedComponents(starNodes, starEdges))
+    try {
+      assert(starJobs === 4, s"a star of InMemoryEdges edges fired $starJobs jobs")
+      assert(starLabels.count() === Graph.InMemoryEdges + 1L)
+      assert(starLabels.filter(col("comp") =!= 0L).isEmpty)
+    } finally Graph.release(starLabels)
+  }
+
+  test("one edge past InMemoryEdges takes the label-propagation loop, same all-root labels") {
+    val (nodes, edges) = star(Graph.InMemoryEdges + 1)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (labels, jobs) = jobsOf(Graph.connectedComponents(nodes, edges))
+    try {
+      assert(jobs > 4, s"a star of InMemoryEdges + 1 edges must run the loop, fired $jobs jobs")
+      assert(labels.count() === Graph.InMemoryEdges + 2L)
+      assert(labels.filter(col("comp") =!= 0L).isEmpty)
+    } finally Graph.release(labels)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(persisted)
+    assert(leaked.isEmpty, s"the loop path leaked persisted blocks $leaked (the probe's edges?)")
+  }
+
+  test("ids must be LongType") {
+    val e = intercept[IllegalArgumentException](
+      Graph.connectedComponents(Seq(1, 2).toDF("id"), Seq((1, 2)).toDF("a", "b")))
+    assert(e.getMessage.contains("LongType"))
   }
 
   test("d07 labels are consistent with the d03 pair graph at sf0.001") {

@@ -122,7 +122,7 @@ class Round4Spec extends AnyFunSuite with BeforeAndAfterEach {
     val nodes = (0L until n).toDF("id")
     val edges = Seq.fill(400)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).toDF("a", "b")
     def labels(hops: Int) =
-      graft.ops.Graph.connectedComponents(nodes, edges, maxRounds = 60, hops = hops)
+      graft.ops.Graph.connectedComponentsWithHops(nodes, edges, maxRounds = 60, hops = hops)._1
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(labels(1) === labels(2))
     assert(labels(3) === labels(2))

@@ -173,6 +173,14 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       s"cc leaked persisted blocks $leaked: release() must free the result checkpoint")
     val (tasks10, hops10) = run(2000)
     assert(leaked.isEmpty, s"cc leaked persisted blocks at 10x: $leaked")
+    // a small graph through connectedComponents takes the in-memory
+    // finish: its probe's materialized edges go in the call, the result
+    // in release()
+    val small = graft.ops.Graph.connectedComponents(
+      spark.range(1, 51).toDF("id"), spark.range(1, 50).selectExpr("id AS a", "id + 1 AS b"))
+    assert(small.filter(col("comp") =!= 1L).count() === 0L, "path(50) must collapse to component 1")
+    graft.ops.Graph.release(small)
+    assert(leaked.isEmpty, s"in-memory cc leaked persisted blocks: $leaked")
     // pointer-jump doubling: 10x the diameter costs ~log2(10) extra barriers
     assert(hops1 <= 20, s"path(200) took $hops1 hops")
     assert(hops10 <= hops1 + 10, s"hops must grow with log(diameter): $hops1 -> $hops10")
