@@ -54,8 +54,10 @@ object Graph {
     *    broadcast of the labels for the singleton anti-join, result
     *    checkpoint) where the loop fires 15-35 (m12's 183-edge graph: 19);
     *  - more: the distributed min-label propagation loop
-    *    ([[connectedComponentsWithHops]]) over the same materialized
-    *    edges, so at scale the edge plan is still evaluated once.
+    *    ([[connectedComponentsWithHops]] at its defaults: a 50-hop
+    *    budget, 2 hops per barrier) over the same materialized edges,
+    *    so at scale the edge plan is still evaluated once. Callers that
+    *    need another budget or batching call the loop directly.
     * Both paths union the singletons (`nodes` that are no edge endpoint)
     * in once and `localCheckpoint()` the result, so [[release]] frees it
     * either way; the in-memory labels sit in ONE partition so the result
@@ -68,12 +70,9 @@ object Graph {
     *              harmless; an empty edge set yields all-singleton
     *              labels). Endpoints must be drawn from `nodes` — an
     *              edge id outside `nodes` would add that id to the output
-    * @param maxRounds loop only: see [[connectedComponentsWithHops]]
-    * @param hops loop only: see [[connectedComponentsWithHops]]
     * @return frame (id, comp): comp = min node id in id's component
     */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
-                          hops: Int = 2): DataFrame = {
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
     requireLongIds(nodes, edges)
     val e = edges.toDF("src", "dst").localCheckpoint()
     try {
@@ -92,7 +91,7 @@ object Graph {
           ends(2 * i + 1) = rows(i).getLong(1)
         }
         labelInDriver(nodes, ends)
-      } else connectedComponentsWithHops(nodes, e, maxRounds, hops)._1
+      } else connectedComponentsWithHops(nodes, e)._1
     } finally releaseCheckpoint(e)
   }
 

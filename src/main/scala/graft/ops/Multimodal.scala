@@ -378,9 +378,8 @@ object Multimodal extends QueryModule {
     */
   private def m12(s: SparkSession, dir: String): DataFrame = {
     // connectedComponents checkpoints its edge frame itself, so the m07
-    // banded-simhash pipeline runs once with or without this copy of the
-    // pair table; the copy costs one job of the build
-    val pairs = m07(s, dir).select(col("ida"), col("idb")).localCheckpoint()
+    // banded-simhash pipeline runs once without a copy of the pair table
+    val pairs = m07(s, dir).select(col("ida"), col("idb"))
     val bytes = media(s, dir).toDF().select(col("doc_id"), col("n_bytes"))
     val labels = graft.ops.Graph.connectedComponents(
         bytes.select(col("doc_id")), pairs)

@@ -91,10 +91,16 @@ object EventsQueries extends QueryModule {
     * lag + running-sum-of-boundaries pattern; at 100 TB this is one
     * shuffle on user_id and the window work is per-partition sequential.
     */
-  private def e03(s: SparkSession, dir: String): DataFrame = {
+  private def e03(s: SparkSession, dir: String): DataFrame = sessions(events(s, dir))
+
+  /** e03's body over any events frame: one (user_id, session_id,
+    * n_events, start_us, end_us) row per session. The batch reference
+    * the streaming sessionize twin is checked against.
+    */
+  private[graft] def sessions(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
     val gapUs = lit(30L * 60 * 1000 * 1000)
-    events(s, dir)
+    events
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
       .withColumn("is_new",

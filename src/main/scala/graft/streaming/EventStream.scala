@@ -106,13 +106,6 @@ object EventStream {
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Stream-stream interval self-join — the streaming twin of e05: each
-    * event pairs with the same user's other events within ±5 minutes.
-    * Both sides carry watermarks and the join condition bounds event
-    * time, so Spark can evict join state once the watermark passes an
-    * event's ±5-minute reach — bounded state on an unbounded stream (an
-    * unbounded-time stream-stream join would hoard every row forever).
-    */
   /** Bucket width for the interval-join equi-key = the match radius
     * (5 min): a partner within ±5 min sits in the SAME or an ADJACENT
     * bucket, so advertising each probe-side row under its 3 neighbor
@@ -125,37 +118,27 @@ object EventStream {
     */
   private val IntervalBucketUs = graft.queries.EventsQueries.IntervalWinUs
 
-  def intervalJoin(events: DataFrame): DataFrame = {
-    val a = events.withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("event_id").as("eid"), col("ts").as("ta"),
-        expr(s"unix_micros(ts) DIV $IntervalBucketUs").as("ba"))
-    val b = events.withWatermark("ts", "1 hour")
-      .select(col("user_id").as("user_b"), col("event_id").as("oid"), col("ts").as("tb"),
-        explode(expr(
-          s"array(unix_micros(ts) DIV $IntervalBucketUs - 1, " +
-          s"unix_micros(ts) DIV $IntervalBucketUs, " +
-          s"unix_micros(ts) DIV $IntervalBucketUs + 1)")).as("pb"))
-    a.join(b, expr(
-      """user_id = user_b AND ba = pb AND eid != oid AND
-        |tb BETWEEN ta - INTERVAL 5 MINUTES AND ta + INTERVAL 5 MINUTES""".stripMargin))
-      .select(col("user_id"), col("eid"), col("oid"))
-  }
-
-  /** Stream-stream LEFT OUTER interval self-join — [[intervalJoin]] plus
-    * the null-extended rows an outer join owes: an event with NO
-    * same-user partner within ±5 minutes is emitted with a null `oid`
-    * once the watermark passes the end of its match window (only then
-    * can the engine PROVE no partner is coming — the state-eviction
-    * emission that distinguishes streaming outer joins from inner ones).
-    * Matched pairs emit immediately, exactly as in the inner join; a
-    * tail row whose match window the final watermark never clears stays
-    * in state and emits nothing — the es14 oracle states that predicate.
+  /** Stream-stream interval self-join — the streaming twin of e05: each
+    * event pairs with the same user's other events within ±5 minutes.
+    * Both sides carry watermarks and the join condition bounds event
+    * time, so Spark can evict join state once the watermark passes an
+    * event's ±5-minute reach — bounded state on an unbounded stream (an
+    * unbounded-time stream-stream join would hoard every row forever).
+    *
+    * `joinType` is `"inner"` (es05) or `"left_outer"` (es14). The outer
+    * join also owes the null-extended rows: an event with NO same-user
+    * partner within ±5 minutes is emitted with a null `oid` once the
+    * watermark passes the end of its match window (only then can the
+    * engine PROVE no partner is coming — the state-eviction emission
+    * that distinguishes streaming outer joins from inner ones). Matched
+    * pairs emit immediately in both; a tail row whose match window the
+    * final watermark never clears stays in state and emits nothing —
+    * the es14 oracle states that predicate. The EXPLODE stays on the
+    * probe (right) side, so the left side is one row per event and a
+    * partnerless event owes exactly ONE null row — exploding the left
+    * side would emit three.
     */
-  def intervalJoinLeftOuter(events: DataFrame): DataFrame = {
-    // Same bucketed equi-key as [[intervalJoin]], with the EXPLODE kept
-    // on the probe (right) side: the outer (left) side stays one row per
-    // event, so a partnerless event owes exactly ONE null row — exploding
-    // the left side would emit three.
+  def intervalJoin(events: DataFrame, joinType: String): DataFrame = {
     val a = events.withWatermark("ts", "1 hour")
       .select(col("user_id"), col("event_id").as("eid"), col("ts").as("ta"),
         expr(s"unix_micros(ts) DIV $IntervalBucketUs").as("ba"))
@@ -168,7 +151,7 @@ object EventStream {
     a.join(b, expr(
       """user_id = user_b AND ba = pb AND eid != oid AND
         |tb BETWEEN ta - INTERVAL 5 MINUTES AND ta + INTERVAL 5 MINUTES""".stripMargin),
-      "left_outer")
+      joinType)
       .select(col("user_id"), col("eid"), col("oid"))
   }
 
@@ -636,23 +619,5 @@ object EventStream {
             Iterator.empty
           }
       }
-  }
-
-  /** Flush helper for tests/finite streams: emit still-open sessions from
-    * the final state by running the same gap rule over a batch view.
-    * (On an unbounded stream these would emit via timeout instead.)
-    */
-  def sessionizeBatchEquivalent(spark: SparkSession, events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_us").isNull || col("ts_us") - col("prev_us") > GapUs, lit(1L)).otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).as("n_events"), min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"))
   }
 }

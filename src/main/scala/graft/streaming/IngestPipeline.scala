@@ -61,11 +61,13 @@ object IngestPipeline extends QueryModule {
     * projection in SQL. Output root/checkpoint are keyed on the input
     * dir and rebuilt per run, so bench cold+warm samples measure the
     * full write+read cost each time — p15 MEASURES ingest, so unlike
-    * the compaction entries its fixture cost IS the operator.
+    * the compaction entries its fixture cost IS the operator. They live
+    * under the process's [[graft.core.ProcessStore.scratch]] base, so
+    * another process running p15 on the same input never deletes them.
     */
   private def p15(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ingest-" + java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")))
+    val base = graft.core.ProcessStore.scratch(
+      "ingest-" + java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")))
     org.apache.commons.io.FileUtils.deleteDirectory(base)
     val root = new java.io.File(base, "shards").getAbsolutePath
     val ckpt = new java.io.File(base, "ckpt").getAbsolutePath

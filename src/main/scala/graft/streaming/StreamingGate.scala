@@ -56,25 +56,45 @@ object StreamingGate extends QueryModule {
     try body finally s.conf.set("spark.sql.shuffle.partitions", before)
   }
 
+  /** Run `body` in a fresh `java.io.tmpdir` directory named `prefix`
+    * plus a random suffix, and delete that directory in `finally`: the
+    * one owner of every gate's scratch state. Each invocation gets its
+    * own directory and deletes only that one, so a concurrent run of the
+    * same query (another session or process) never loses its live
+    * checkpoint to a prefix sweep.
+    */
+  private def inScratchDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  /** Run an ingest gate in its own scratch dir: `run` gets an output
+    * root and a checkpoint path inside it, and its read-back is pinned
+    * into block storage (`localCheckpoint()`) before the directory is
+    * deleted, so the returned frame no longer reads the deleted files.
+    */
+  private def pinnedIngest(prefix: String)(
+      run: (String, String) => DataFrame): DataFrame =
+    inScratchDir(prefix)(base => run(s"$base/out", s"$base/ckpt").localCheckpoint())
+
   /** Run a (bounded) streaming frame to completion into a memory sink
     * and return the sink's table. The temp view is dropped first so
     * re-runs in one session (bench cold + warm samples) don't collide.
-    * The checkpoint is throwaway by design and goes to the tmpdir like
-    * the other gate scratch dirs; recovery semantics are pinned by
-    * StreamingRecoverySpec against real checkpoints.
+    * The checkpoint is throwaway by design and lives in a scratch dir
+    * like the other gates'; recovery semantics are pinned by
+    * StreamingRecoverySpec against real checkpoints. The memory sink
+    * holds the rows, so the result needs no pinning.
     */
   private def runToTable(s: SparkSession, name: String, mode: String = "append")(
       out: => DataFrame): DataFrame = {
     try s.catalog.dropTempView(name) catch { case NonFatal(_) => () }
-    val ck = java.nio.file.Files.createTempDirectory(s"graft_ck_$name")
-    try withStreamPartitions(s) {
-      val q = out.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ck.toString)
-        .outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(ck.toFile)
-      catch { case NonFatal(_) => () }
+    inScratchDir(s"graft_ck_$name") { ck =>
+      withStreamPartitions(s) {
+        val q = out.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ck.toString)
+          .outputMode(mode).start()
+        try q.processAllAvailable() finally q.stop()
+      }
     }
     s.table(name)
   }
@@ -233,7 +253,8 @@ object StreamingGate extends QueryModule {
     */
   private def es05(s: SparkSession, dir: String): DataFrame =
     runToTable(s, "es05_sink") {
-      EventStream.intervalJoin(EventStream.readEventsWith(s, dir, maxFilesPerTrigger = None))
+      EventStream.intervalJoin(
+        EventStream.readEventsWith(s, dir, maxFilesPerTrigger = None), "inner")
     }
 
   private val es05Sql =
@@ -363,8 +384,8 @@ object StreamingGate extends QueryModule {
     */
   private def es14(s: SparkSession, dir: String): DataFrame =
     runToTable(s, "es14_sink") {
-      EventStream.intervalJoinLeftOuter(
-        EventStream.readEventsWith(s, dir, maxFilesPerTrigger = None))
+      EventStream.intervalJoin(
+        EventStream.readEventsWith(s, dir, maxFilesPerTrigger = None), "left_outer")
     }
 
   private val es14Sql =
@@ -740,29 +761,27 @@ object StreamingGate extends QueryModule {
     */
   private def es22(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory("graft-es22")
-    val (ckpt, out) = (s"$base/ckpt", s"$base/out")
-    // per-invocation cleanup, same contract as es24: pin the read-back
-    // into block storage, then delete only the directory this run created
-    try withStreamPartitions(s) {
-      // a DURABLE file sink (memory sinks can't recover a checkpoint):
-      // the parquet sink's _spark_metadata manifest is what makes the
-      // re-run exactly-once — readers see only committed batches
-      def runOnce(): Unit = {
-        val q = EventStream.tumblingAgg(
-          EventStream.readEventsWith(s, dir, maxFilesPerTrigger = None))
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
+    pinnedIngest("graft-es22") { (out, ckpt) =>
+      withStreamPartitions(s) {
+        // a DURABLE file sink (memory sinks can't recover a checkpoint):
+        // the parquet sink's _spark_metadata manifest is what makes the
+        // re-run exactly-once — readers see only committed batches
+        def runOnce(): Unit = {
+          val q = EventStream.tumblingAgg(
+            EventStream.readEventsWith(s, dir, maxFilesPerTrigger = None))
+            .writeStream.format("parquet")
+            .option("path", out).option("checkpointLocation", ckpt)
+            .outputMode("append").trigger(Trigger.AvailableNow()).start()
+          try q.awaitTermination() finally q.stop()
+        }
+        runOnce()
+        val afterFirst = s.read.parquet(out).count()
+        runOnce()
+        require(s.read.parquet(out).count() == afterFirst,
+          "AvailableNow re-run against the committed checkpoint must emit nothing")
+        s.read.parquet(out)
       }
-      runOnce()
-      val afterFirst = s.read.parquet(out).count()
-      runOnce()
-      require(s.read.parquet(out).count() == afterFirst,
-        "AvailableNow re-run against the committed checkpoint must emit nothing")
-      s.read.parquet(out).localCheckpoint()
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private val es22Sql = es02Sql
@@ -865,16 +884,9 @@ object StreamingGate extends QueryModule {
       graft.core.Tables.documents(s, dir).filter(!isDelta)).persist()
     val idx = graft.ops.Dedup.bandedOf(corpusSh).persist()
     idx.count() // materialize the index before the stream starts ingesting
-    val base = java.nio.file.Files.createTempDirectory("graft-es24")
-    // Cleanup is scoped to THIS invocation's directory: the result is
-    // pinned into block storage (localCheckpoint) so the scratch run
-    // dir can be deleted before returning — sweeping tmpdir by prefix
-    // would race a concurrent run of the same query and delete its live
-    // checkpoint mid-stream.
-    try runNearDupStream(s, readDocuments(s, dir).filter(isDelta),
-        corpusSh, idx, s"$base/out", s"$base/ckpt")
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    pinnedIngest("graft-es24") { (out, ckpt) =>
+      runNearDupStream(s, readDocuments(s, dir).filter(isDelta), corpusSh, idx, out, ckpt)
+    }
   }
 
   private val es24Sql = graft.ops.Dedup.d22Sql
@@ -902,15 +914,11 @@ object StreamingGate extends QueryModule {
     val isDelta = col("doc_id") % 10 === 0
     val merges = graft.ops.TextAnalysis.trainMergesOn(
       graft.core.Tables.documents(s, dir).filter(!isDelta))
-    val base = java.nio.file.Files.createTempDirectory("graft-es25")
-    // per-invocation cleanup, same contract as es24: materialize, then
-    // delete only the directory this run created
-    try runDocBatchStream(s, readDocuments(s, dir).filter(isDelta),
-        s"$base/out", s"$base/ckpt",
+    pinnedIngest("graft-es25") { (out, ckpt) =>
+      runDocBatchStream(s, readDocuments(s, dir).filter(isDelta), out, ckpt,
         Seq("doc_id", "n_raw", "n_enc", "n_merged", "ratio"))(
         batch => graft.ops.TextAnalysis.encodeReport(batch, merges))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es25Sql = graft.ops.TextAnalysis.t25Sql
@@ -940,13 +948,12 @@ object StreamingGate extends QueryModule {
     // from memory instead of re-scanning parquet (round-12 advice)
     val gArr = graft.ops.Similarity.sharedIndex(s, dir, split = true)._1
     gArr.persist().count()
-    val base = java.nio.file.Files.createTempDirectory("graft-es26")
-    try runDocBatchStream(s, readEmbeddings(s, dir).filter(isDelta),
-        s"$base/out", s"$base/ckpt", Seq("vec_id", "cell"))(
+    pinnedIngest("graft-es26") { (out, ckpt) =>
+      runDocBatchStream(s, readEmbeddings(s, dir).filter(isDelta), out, ckpt,
+        Seq("vec_id", "cell"))(
         batch => graft.ops.Similarity.frozenAssign(
           graft.ops.Similarity.vecsOf(batch), gArr))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es26Sql = graft.ops.Similarity.s24Sql
@@ -972,13 +979,11 @@ object StreamingGate extends QueryModule {
     * elementwise-min.
     */
   private def es27(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-es27")
-    try graft.ops.Dedup.sketchMatrix(graft.ops.Dedup.sketchArrays(
-        runDocBatchStream(s, readDocuments(s, dir),
-          s"$base/out", s"$base/ckpt", Seq("source", "i", "v"))(
+    pinnedIngest("graft-es27") { (out, ckpt) =>
+      graft.ops.Dedup.sketchMatrix(graft.ops.Dedup.sketchArrays(
+        runDocBatchStream(s, readDocuments(s, dir), out, ckpt, Seq("source", "i", "v"))(
           batch => graft.ops.Dedup.partialSketchRows(batch))))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es27Sql = graft.ops.Dedup.d24Sql
@@ -1026,15 +1031,14 @@ object StreamingGate extends QueryModule {
     val isDelta = col("doc_id") % 10 === 0
     val corpusGrams = corpusGramIndex(s, dir).persist()
     corpusGrams.count() // materialize the gram index before ingest starts
-    val base = java.nio.file.Files.createTempDirectory("graft-es28")
-    try runDocBatchStream(s, readDocuments(s, dir).filter(isDelta),
-        s"$base/out", s"$base/ckpt", Seq("doc_id", "n_spans", "max_span"))(
+    pinnedIngest("graft-es28") { (out, ckpt) =>
+      runDocBatchStream(s, readDocuments(s, dir).filter(isDelta), out, ckpt,
+        Seq("doc_id", "n_spans", "max_span"))(
         batch => graft.ops.Dedup.spanReport(batch.select(col("doc_id")),
           graft.ops.Dedup.islandSpans(
             graft.ops.Dedup.gramKeyed(batch, hashed = true)
               .join(corpusGrams, Seq("gk"), "left_semi"))))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es28Sql = graft.ops.Dedup.d26Sql
@@ -1073,13 +1077,12 @@ object StreamingGate extends QueryModule {
       graft.ops.Similarity.vecs(s, dir).filter(!isDelta),
       graft.ops.Similarity.membershipOf(ranked)).persist()
     index.count() // materialize the serving index before ingest starts
-    val base = java.nio.file.Files.createTempDirectory("graft-es29")
-    try runDocBatchStream(s, readEmbeddings(s, dir).filter(isDelta),
-        s"$base/out", s"$base/ckpt", Seq("qid", "nid", "sim", "rn"))(
+    pinnedIngest("graft-es29") { (out, ckpt) =>
+      runDocBatchStream(s, readEmbeddings(s, dir).filter(isDelta), out, ckpt,
+        Seq("qid", "nid", "sim", "rn"))(
         batch => graft.ops.Similarity.serveBatch(
           graft.ops.Similarity.vecsOf(batch), index, gArr))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es29Sql = graft.ops.Similarity.s30Sql
@@ -1104,14 +1107,12 @@ object StreamingGate extends QueryModule {
     * the oracle is m13's SQL verbatim.
     */
   private def es30(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-es30")
-    try graft.ops.Multimodal.gcWorklist(
-        runDocBatchStream(s, readDocuments(s, dir),
-          s"$base/out", s"$base/ckpt",
+    pinnedIngest("graft-es30") { (out, ckpt) =>
+      graft.ops.Multimodal.gcWorklist(
+        runDocBatchStream(s, readDocuments(s, dir), out, ckpt,
           Seq("bh", "n_refs", "live_refs", "block_chars"))(
           batch => graft.ops.Multimodal.partialBlockRefs(batch)))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es30Sql = graft.ops.Multimodal.m13Sql
@@ -1138,16 +1139,14 @@ object StreamingGate extends QueryModule {
     val isDelta = col("doc_id") % 10 === 0
     val corpusGrams = corpusGramIndex(s, dir).persist()
     corpusGrams.count() // materialize the gram index before ingest starts
-    val base = java.nio.file.Files.createTempDirectory("graft-es31")
-    try runDocBatchStream(s, readDocuments(s, dir).filter(isDelta),
-        s"$base/out", s"$base/ckpt",
+    pinnedIngest("graft-es31") { (out, ckpt) =>
+      runDocBatchStream(s, readDocuments(s, dir).filter(isDelta), out, ckpt,
         Seq("doc_id", "tok_total", "tok_scrubbed", "clean_text"))(
         batch => graft.ops.Dedup.applyCuts(batch,
           graft.ops.Dedup.gramKeyed(batch, hashed = true)
             .join(corpusGrams, Seq("gk"), "left_semi")
             .select(col("doc_id"), col("gpos"))))
-      .localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    }
   }
 
   private lazy val es31Sql = graft.ops.Dedup.d29Sql

@@ -111,15 +111,10 @@ class Round11Spec extends AnyFunSuite {
     // one batch pass, because the index is static and verdicts per-doc
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es24spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es24run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(docs.filter(isDelta && col("doc_id") % 20 === 0), "documents_a")
-    writeOne(docs.filter(isDelta && col("doc_id") % 20 =!= 0), "documents_b")
+    StreamFiles.writeOne(docs.filter(isDelta && col("doc_id") % 20 === 0),
+      streamDir.toString, "documents_a")
+    StreamFiles.writeOne(docs.filter(isDelta && col("doc_id") % 20 =!= 0),
+      streamDir.toString, "documents_b")
     try {
       val streamed = graft.streaming.StreamingGate.runNearDupStream(spark,
         graft.streaming.StreamingGate.readDocuments(spark, streamDir.getAbsolutePath, Some(1)),
@@ -146,15 +141,10 @@ class Round11Spec extends AnyFunSuite {
     val merges = graft.ops.TextAnalysis.trainMergesOn(docs.filter(!isDelta))
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es25spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es25run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(docs.filter(isDelta && col("doc_id") % 20 === 0), "documents_a")
-    writeOne(docs.filter(isDelta && col("doc_id") % 20 =!= 0), "documents_b")
+    StreamFiles.writeOne(docs.filter(isDelta && col("doc_id") % 20 === 0),
+      streamDir.toString, "documents_a")
+    StreamFiles.writeOne(docs.filter(isDelta && col("doc_id") % 20 =!= 0),
+      streamDir.toString, "documents_b")
     try {
       val streamed = graft.streaming.StreamingGate.runDocBatchStream(spark,
         graft.streaming.StreamingGate.readDocuments(spark, streamDir.getAbsolutePath, Some(1)),

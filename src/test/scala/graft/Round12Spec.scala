@@ -22,12 +22,7 @@ class Round12Spec extends AnyFunSuite {
     try {
       // a parquet file whose rows are ALL filtered out downstream —
       // the stream source sees a file, the transform sees zero rows
-      val stage = new java.io.File(streamDir, "stage")
-      docs.limit(1).coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(streamDir, "documents_a.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
+      StreamFiles.writeOne(docs.limit(1), streamDir.toString, "documents_a")
 
       // glob matches ZERO files: the stream plans no batch at all, so
       // foreachBatch never fires — the exact no-output-dir case (a
@@ -205,15 +200,10 @@ class Round12Spec extends AnyFunSuite {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es26spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es26run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(emb.filter(isDelta && col("vec_id") % 20 === 0), "embeddings_a")
-    writeOne(emb.filter(isDelta && col("vec_id") % 20 =!= 0), "embeddings_b")
+    StreamFiles.writeOne(emb.filter(isDelta && col("vec_id") % 20 === 0),
+      streamDir.toString, "embeddings_a")
+    StreamFiles.writeOne(emb.filter(isDelta && col("vec_id") % 20 =!= 0),
+      streamDir.toString, "embeddings_b")
     try {
       val streamed = graft.streaming.StreamingGate.runDocBatchStream(spark,
         graft.streaming.StreamingGate.readEmbeddings(spark, streamDir.getAbsolutePath, Some(1)),
@@ -242,15 +232,8 @@ class Round12Spec extends AnyFunSuite {
     val docs = graft.core.Tables.documents(spark, dir)
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es27spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es27run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(docs.filter(col("doc_id") % 2 === 0), "documents_a")
-    writeOne(docs.filter(col("doc_id") % 2 =!= 0), "documents_b")
+    StreamFiles.writeOne(docs.filter(col("doc_id") % 2 === 0), streamDir.toString, "documents_a")
+    StreamFiles.writeOne(docs.filter(col("doc_id") % 2 =!= 0), streamDir.toString, "documents_b")
     try {
       val streamed = Dedup.sketchMatrix(Dedup.sketchArrays(
         graft.streaming.StreamingGate.runDocBatchStream(spark,
@@ -281,8 +264,11 @@ class Round12Spec extends AnyFunSuite {
     def dirsWithPrefix(p: String): Set[String] =
       Option(tmpRoot.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith(p)).map(_.getName).toSet
-    for ((q, prefix) <- Seq(("es24_stream_neardup", "graft-es24"),
-                            ("es25_stream_encode", "graft-es25"))) {
+    for ((q, prefix) <- Seq(("es22_available_now", "graft-es22"),
+                            ("es24_stream_neardup", "graft-es24"),
+                            ("es25_stream_encode", "graft-es25"),
+                            ("es27_stream_sketch", "graft-es27"),
+                            ("es30_stream_blocks", "graft-es30"))) {
       val sibling = java.nio.file.Files.createTempDirectory(prefix).toFile
       val canary = new java.io.File(sibling, "ckpt-canary")
       assert(canary.mkdir())
@@ -298,5 +284,20 @@ class Round12Spec extends AnyFunSuite {
         org.apache.commons.io.FileUtils.deleteDirectory(sibling)
       }
     }
+  }
+
+  test("p15 scratch lives under the process store: a canary at the shared tmpdir path survives") {
+    // java.io.tmpdir/graft-ingest-<uuid of the input dir> is one path for
+    // every process on the machine: p15 deleting and rebuilding it would
+    // delete the live shards of another process running p15 on the same
+    // input. A canary planted there must survive.
+    val shared = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft-ingest-" + java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")))
+    val canary = new java.io.File(shared, "shards/canary")
+    assert(canary.mkdirs() || canary.isDirectory)
+    try {
+      assert(SparkEntry.queries("p15_stream_ingest")(spark, dir).count() > 0)
+      assert(canary.isDirectory, "p15 deleted a directory outside its process's scratch base")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(shared)
   }
 }

@@ -148,15 +148,10 @@ class Round13Spec extends AnyFunSuite {
     corpusGrams.count()
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es31spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es31run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(docs.filter(isDelta && col("doc_id") % 20 === 0), "documents_a")
-    writeOne(docs.filter(isDelta && col("doc_id") % 20 =!= 0), "documents_b")
+    StreamFiles.writeOne(docs.filter(isDelta && col("doc_id") % 20 === 0),
+      streamDir.toString, "documents_a")
+    StreamFiles.writeOne(docs.filter(isDelta && col("doc_id") % 20 =!= 0),
+      streamDir.toString, "documents_b")
     try {
       val streamed = graft.streaming.StreamingGate.runDocBatchStream(spark,
         graft.streaming.StreamingGate.readDocuments(spark, streamDir.getAbsolutePath, Some(1)),
@@ -273,15 +268,10 @@ class Round13Spec extends AnyFunSuite {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es29spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es29run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(emb.filter(isDelta && col("vec_id") % 20 === 0), "embeddings_a")
-    writeOne(emb.filter(isDelta && col("vec_id") % 20 =!= 0), "embeddings_b")
+    StreamFiles.writeOne(emb.filter(isDelta && col("vec_id") % 20 === 0),
+      streamDir.toString, "embeddings_a")
+    StreamFiles.writeOne(emb.filter(isDelta && col("vec_id") % 20 =!= 0),
+      streamDir.toString, "embeddings_b")
     try {
       val streamed = graft.streaming.StreamingGate.runDocBatchStream(spark,
         graft.streaming.StreamingGate.readEmbeddings(spark, streamDir.getAbsolutePath, Some(1)),
@@ -331,15 +321,8 @@ class Round13Spec extends AnyFunSuite {
     val docs = graft.core.Tables.documents(spark, dir)
     val streamDir = java.nio.file.Files.createTempDirectory("graft_es30spec").toFile
     val runBase = java.nio.file.Files.createTempDirectory("graft_es30run").toFile
-    def writeOne(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(streamDir, s"stage_$name")
-      part.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val f = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, new java.io.File(streamDir, s"$name.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    writeOne(docs.filter(col("doc_id") % 2 === 0), "documents_a")
-    writeOne(docs.filter(col("doc_id") % 2 =!= 0), "documents_b")
+    StreamFiles.writeOne(docs.filter(col("doc_id") % 2 === 0), streamDir.toString, "documents_a")
+    StreamFiles.writeOne(docs.filter(col("doc_id") % 2 =!= 0), streamDir.toString, "documents_b")
     try {
       val streamed = Multimodal.gcWorklist(
         graft.streaming.StreamingGate.runDocBatchStream(spark,

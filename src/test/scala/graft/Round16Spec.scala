@@ -297,4 +297,13 @@ class Round16Spec extends AnyFunSuite {
         s"$p must not rename — the commit log is the only commit primitive")
     }
   }
+
+  test("architecture pin: StreamingGate creates its scratch dirs in one place") {
+    // every gate's scratch directory comes from the one helper that also
+    // deletes it; a second createTempDirectory would be a second owner
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamingGate.scala"))
+    assert("createTempDirectory".r.findAllMatchIn(src).size === 1,
+      "StreamingGate must create scratch dirs only through its scratch-dir helper")
+  }
 }

@@ -1009,12 +1009,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
           .withColumn("user_id", col("user_id") + lit(i * 1000000000L))
           .withColumn("event_id", col("event_id") + lit(i * 1000000000L)))
         .reduce(_.union(_))
-      val stage = new java.io.File(out, "stage")
-      scaled.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(out, "events.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
+      StreamFiles.writeOne(scaled, out.toString, "events")
       out.getAbsolutePath
     }
     // (elapsed, peak total state rows across micro-batches)
@@ -1037,7 +1032,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       ("es03x", () => EventStream.sessionize(spark,
         EventStream.readEventsWith(spark, d, None)).toDF()),
       ("es05x", () => EventStream.intervalJoin(
-        EventStream.readEventsWith(spark, d, None))),
+        EventStream.readEventsWith(spark, d, None), "inner")),
       ("es17x", () => EventStream.dailyQuota(spark,
         EventStream.readEventsWith(spark, d, None)).toDF()))
     val dir1 = mkDir(1)
@@ -1071,20 +1066,15 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     val src = graft.core.Tables.documents(spark, "/root/testdata/sf0.1")
     def mkDocs(originals: Int): String = {
       val out = java.nio.file.Files.createTempDirectory(s"graft_r11docs_$originals").toString
-      // single-FILE layout (stage + move), not a part-file directory:
-      // es24's streaming reader glob-filters on the documents*.parquet
-      // FILE name, exactly like the real sf dirs
-      val stage = new java.io.File(out, "stage")
-      src.filter(col("doc_id") < originals)
+      // single-FILE layout, not a part-file directory: es24's streaming
+      // reader glob-filters on the documents*.parquet FILE name, exactly
+      // like the real sf dirs
+      StreamFiles.writeOne(src.filter(col("doc_id") < originals)
         .crossJoin(spark.range(5).select(col("id").as("clone")))
         .select((col("doc_id") * 10 + col("clone")).as("doc_id"),
           concat(col("text"), lit(" zqtail"), col("clone")).as("text"),
-          col("lang"), col("source"), (length(col("text")) + 8).as("n_chars"))
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(out, "documents.parquet").toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
+          col("lang"), col("source"), (length(col("text")) + 8).as("n_chars")),
+        out, "documents")
       out
     }
     def mkEmb(n: Int): String = {

@@ -125,14 +125,6 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val streamDir = Files.createTempDirectory("graft-asofstream").toString
     val checkpoint = Files.createTempDirectory("graft-asofckpt").toString
     val outDir = Files.createTempDirectory("graft-asofout").toString + "/asof"
-    def writeHalf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = Files.createTempDirectory(s"graft-asofstage_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(streamDir, s"events_$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
 
     def runOnce(): Unit = {
       val q = EventStream.asofSignup(spark, EventStream.readEvents(spark, streamDir))
@@ -145,10 +137,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
       try q.processAllAvailable() finally q.stop()
     }
 
-    writeHalf(raw.filter(org.apache.spark.sql.functions.col("ts") <= cut), "a")
+    StreamFiles.writeOne(raw.filter(org.apache.spark.sql.functions.col("ts") <= cut),
+      streamDir, "events_a")
     runOnce()
     Files.deleteIfExists(Paths.get(streamDir, "events_a.parquet"))
-    writeHalf(raw.filter(org.apache.spark.sql.functions.col("ts") > cut), "b")
+    StreamFiles.writeOne(raw.filter(org.apache.spark.sql.functions.col("ts") > cut),
+      streamDir, "events_b")
     // sentinel flush (user -1, 60 days out): the round-8 buffered as-of
     // twin finalizes events only once the watermark passes them, so the
     // tail — including phase-1 rows RESTORED FROM THE CHECKPOINT BUFFER —
@@ -157,8 +151,8 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val maxTs = raw.agg(org.apache.spark.sql.functions.max("ts")).collect()(0).getLong(0)
     locally {
       import spark.implicits._
-      writeHalf(Seq((-1L, maxTs + 60L * 86400 * 1000000000L, -1L, "flush", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), "z")
+      StreamFiles.writeOne(Seq((-1L, maxTs + 60L * 86400 * 1000000000L, -1L, "flush", 0.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), streamDir, "events_z")
     }
     raw.unpersist()
     runOnce()
@@ -205,16 +199,8 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val streamDir = Files.createTempDirectory("graft-joinstream").toString
     val checkpoint = Files.createTempDirectory("graft-joinckpt").toString
     val outDir = Files.createTempDirectory("graft-joinout").toString + "/pairs"
-    def writeHalf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = Files.createTempDirectory(s"graft-joinstage_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(streamDir, s"events_$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
     def runOnce(): Unit = {
-      val q = EventStream.intervalJoin(EventStream.readEvents(spark, streamDir))
+      val q = EventStream.intervalJoin(EventStream.readEvents(spark, streamDir), "inner")
         .writeStream
         .format("parquet")
         .option("path", outDir)
@@ -224,12 +210,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
       try q.processAllAvailable() finally q.stop()
     }
 
-    writeHalf(raw.filter(col("ts") <= cutNs), "a")
+    StreamFiles.writeOne(raw.filter(col("ts") <= cutNs), streamDir, "events_a")
     runOnce()
     Files.deleteIfExists(Paths.get(streamDir, "events_a.parquet"))
     // phase-2 rows all sit above the cut, and the phase-1 watermark is
     // 1 h below it, so no phase-2 row is dropped as late
-    writeHalf(raw.filter(col("ts") > cutNs), "b")
+    StreamFiles.writeOne(raw.filter(col("ts") > cutNs), streamDir, "events_b")
     raw.unpersist()
     runOnce()
 
@@ -275,16 +261,8 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val streamDir = Files.createTempDirectory("graft-louterstream").toString
     val checkpoint = Files.createTempDirectory("graft-louterckpt").toString
     val outDir = Files.createTempDirectory("graft-louterout").toString + "/rows"
-    def writeFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = Files.createTempDirectory(s"graft-louterstage_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(streamDir, s"events_$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
     def runOnce(): Unit = {
-      val q = EventStream.intervalJoinLeftOuter(EventStream.readEvents(spark, streamDir))
+      val q = EventStream.intervalJoin(EventStream.readEvents(spark, streamDir), "left_outer")
         .writeStream
         .format("parquet")
         .option("path", outDir)
@@ -293,13 +271,13 @@ class StreamingRecoverySpec extends AnyFunSuite {
         .start()
       try q.processAllAvailable() finally q.stop()
     }
-    writeFile(raw.filter(col("ts") <= cutNs), "a")
+    StreamFiles.writeOne(raw.filter(col("ts") <= cutNs), streamDir, "events_a")
     runOnce()
     Files.deleteIfExists(Paths.get(streamDir, "events_a.parquet"))
     import spark.implicits._
-    writeFile(raw.filter(col("ts") > cutNs), "b")
-    writeFile(Seq((-1L, maxNs + 60L * 86400 * 1000000000L, -1L, "flush", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), "z")
+    StreamFiles.writeOne(raw.filter(col("ts") > cutNs), streamDir, "events_b")
+    StreamFiles.writeOne(Seq((-1L, maxNs + 60L * 86400 * 1000000000L, -1L, "flush", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), streamDir, "events_z")
     raw.unpersist()
     runOnce()
 
@@ -331,15 +309,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft-ingestrec").toString
     val root = s"$base/shards"
     val ckpt = s"$base/ckpt"
-    def writeHalf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = Files.createTempDirectory(s"graft-ingeststage_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(streamDir, s"events_$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    writeHalf(raw.filter(col("ts") <= cut), "a")
+    StreamFiles.writeOne(raw.filter(col("ts") <= cut), streamDir, "events_a")
     graft.streaming.IngestPipeline.ingest(spark, streamDir, root, ckpt)
     val phase1 = spark.read.parquet(root).count()
     assert(phase1 > 0)
@@ -350,7 +320,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // the local FS keeps a CRC sidecar that would block the replayed
     // commit's rename (a real object store has no such artifact)
     new java.io.File(lastCommit.getParentFile, s".${lastCommit.getName}.crc").delete()
-    writeHalf(raw.filter(col("ts") > cut), "b")
+    StreamFiles.writeOne(raw.filter(col("ts") > cut), streamDir, "events_b")
     raw.unpersist()
     graft.streaming.IngestPipeline.ingest(spark, streamDir, root, ckpt)
     val got = graft.streaming.IngestPipeline.readShards(spark, root)
@@ -382,15 +352,6 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val streamDir = Files.createTempDirectory("graft-sessstream").toString
     val checkpoint = Files.createTempDirectory("graft-sessckpt").toString
     val outDir = Files.createTempDirectory("graft-sessout").toString + "/sessions"
-    def writeHalf(cond: org.apache.spark.sql.Column, name: String): Path = {
-      val stage = Files.createTempDirectory(s"graft-sess-$name")
-      ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      val target = Paths.get(streamDir, s"events_$name.parquet")
-      Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
-      target
-    }
     def runOnce(): Unit = {
       val q = EventStream.sessionWindowAgg(EventStream.readEvents(spark, streamDir))
         .writeStream.format("parquet")
@@ -400,10 +361,10 @@ class StreamingRecoverySpec extends AnyFunSuite {
         .start()
       try q.processAllAvailable() finally q.stop()
     }
-    val a = writeHalf(col("ts") <= cut, "a")
+    val a = StreamFiles.writeOne(ev.filter(col("ts") <= cut), streamDir, "events_a")
     runOnce()
-    Files.deleteIfExists(a) // restored state is now the only memory of half A
-    writeHalf(col("ts") > cut, "b")
+    Files.deleteIfExists(a.toPath) // restored state is now the only memory of half A
+    StreamFiles.writeOne(ev.filter(col("ts") > cut), streamDir, "events_b")
     runOnce()
     ev.unpersist()
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))

@@ -11,6 +11,16 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** One replay file of raw event tuples (ts in ns): `events_<name>.parquet`
+    * in `streamDir`, with modification time `mtime`, which orders the batches.
+    */
+  private def writeEvents(streamDir: java.io.File,
+      rows: Seq[(Long, Long, Long, String, Double, String)], name: String, mtime: Long): Unit = {
+    import spark.implicits._
+    StreamFiles.writeOne(rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      streamDir.toString, s"events_$name", Some(mtime))
+  }
+
   /** Split the raw events file into two halves under a temp dir so the
     * file source delivers two micro-batches — cross-batch state carry-over
     * is the thing the two-batch tests exercise, and a single batch would
@@ -50,13 +60,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
     def writeHalf(df0: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
       val df = if (shuffled) df0.orderBy(md5(col("event_id").cast("string"))) else df0
-      val stage = new java.io.File(tmp, s"stage_$name")
-      df.coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val target = new java.io.File(tmp, s"events_$name.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(mtime)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
+      StreamFiles.writeOne(df, tmp.toString, s"events_$name", Some(mtime))
     }
     val inA =
       if (across) md5(col("event_id").cast("string")) < "8" else col("ts") <= cut
@@ -139,24 +143,14 @@ class StreamingSpec extends AnyFunSuite {
     // this while emitting a wrong matrix; the watermark-buffered twin
     // must emit the BATCH matrix (view>click, click>purchase) and report
     // the buffered-and-repaired arrival through the accumulator.
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_ooo").toFile
-    def writeOne(rows: Seq[(Long, Long, Long, String, Double, String)], name: String, mtime: Long): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val target = new java.io.File(tmp, s"events_$name.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(mtime)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
-    writeOne(Seq((1L, 1 * S, 7L, "view", 0.0, "{}"), (3L, 3 * S, 7L, "purchase", 0.0, "{}")), "a", t0)
-    writeOne(Seq((2L, 2 * S, 7L, "click", 0.0, "{}")), "b", t0 + 30000)
+    writeEvents(tmp,
+      Seq((1L, 1 * S, 7L, "view", 0.0, "{}"), (3L, 3 * S, 7L, "purchase", 0.0, "{}")), "a", t0)
+    writeEvents(tmp, Seq((2L, 2 * S, 7L, "click", 0.0, "{}")), "b", t0 + 30000)
     // sentinel a full day out: watermark = ts - 2h must pass the real events
-    writeOne(Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 60000)
+    writeEvents(tmp, Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 60000)
 
     val acc = spark.sparkContext.longAccumulator("graft.transitions.outOfOrder")
     val stream = EventStream.transitions(
@@ -206,25 +200,14 @@ class StreamingSpec extends AnyFunSuite {
     // event_id order; the stage-ordered passes must too. The click here
     // has a SMALLER event_id than the view at the same ts — a
     // (ts, event_id)-ordered single pass would drop it.
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_ftie").toFile
     val S = 1000000000L // 1 s in ns (raw file ts unit)
-    def writeOne(rows: Seq[(Long, Long, Long, String, Double, String)], name: String, mtime: Long): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val target = new java.io.File(tmp, s"events_$name.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(mtime)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
     val t0 = System.currentTimeMillis() - 60000
-    writeOne(Seq((1L, 100 * S, 7L, "click", 0.0, "{}"),
+    writeEvents(tmp, Seq((1L, 100 * S, 7L, "click", 0.0, "{}"),
         (2L, 100 * S, 7L, "view", 0.0, "{}"),
         (3L, 100 * S, 7L, "purchase", 0.0, "{}")), "a", t0)
     // sentinel flush: the buffered twin only finalizes below the watermark
-    writeOne(Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 30000)
+    writeEvents(tmp, Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 30000)
 
     val stream = EventStream.funnel(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
@@ -248,8 +231,8 @@ class StreamingSpec extends AnyFunSuite {
     // state — its match window never closes — and must not appear).
     import org.apache.spark.sql.functions._
     val tmp = twoHalfReplay("graft_louter", shuffled = true)
-    val stream = EventStream.intervalJoinLeftOuter(
-      EventStream.readEvents(spark, tmp.getAbsolutePath))
+    val stream = EventStream.intervalJoin(
+      EventStream.readEvents(spark, tmp.getAbsolutePath), "left_outer")
     val q = stream.writeStream
       .format("memory").queryName("louter_out")
       .outputMode("append")
@@ -280,23 +263,12 @@ class StreamingSpec extends AnyFunSuite {
     // The buffered twin orders the late click BEFORE the view, so the
     // batch e08 answer (fv=5s, no qualifying click) comes out exactly —
     // and the repaired arrival is reported through the accumulator.
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_funnel_ooo").toFile
-    def writeOne(rows: Seq[(Long, Long, Long, String, Double, String)], name: String, mtime: Long): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val target = new java.io.File(tmp, s"events_$name.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(mtime)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
-    writeOne(Seq((20L, 5 * S, 7L, "view", 0.0, "{}")), "a", t0)
-    writeOne(Seq((10L, 3 * S, 7L, "click", 0.0, "{}")), "b", t0 + 30000)
-    writeOne(Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 60000)
+    writeEvents(tmp, Seq((20L, 5 * S, 7L, "view", 0.0, "{}")), "a", t0)
+    writeEvents(tmp, Seq((10L, 3 * S, 7L, "click", 0.0, "{}")), "b", t0 + 30000)
+    writeEvents(tmp, Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 60000)
 
     val acc = spark.sparkContext.longAccumulator("graft.funnel.outOfOrder")
     val stream = EventStream.funnel(
@@ -358,7 +330,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval self-join matches the batch interval join (e05 pairs)") {
-    val stream = EventStream.intervalJoin(EventStream.readEvents(spark, dir))
+    val stream = EventStream.intervalJoin(EventStream.readEvents(spark, dir), "inner")
     val q = stream.writeStream
       .format("memory").queryName("interval_out")
       .outputMode("append")
@@ -394,8 +366,7 @@ class StreamingSpec extends AnyFunSuite {
     // gold: every batch session except ones still legitimately open at
     // stream end — a user's last session whose gap timeout lies beyond the
     // final watermark (= max event time, delay 0s)
-    val batch = EventStream.sessionizeBatchEquivalent(
-      spark, graft.core.Tables.events(spark, dir))
+    val batch = graft.queries.EventsQueries.sessions(graft.core.Tables.events(spark, dir))
     val wmMs = graft.core.Tables.events(spark, dir)
       .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) / 1000
     val lastPerUser = batch.groupBy(col("user_id"))
@@ -706,23 +677,12 @@ class StreamingSpec extends AnyFunSuite {
     // emitted, so the only correct options are reorder (impossible) or
     // drop; the harness must drop it exactly as a built-in streaming
     // aggregation drops late rows, and id2 must not appear in the output.
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_wmdrop").toFile
-    def writeOne(rows: Seq[(Long, Long, Long, String, Double, String)], name: String, mtime: Long): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val target = new java.io.File(tmp, s"events_$name.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(mtime)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
-    writeOne(Seq((1L, 1000 * S, 7L, "view", 0.0, "{}")), "a", t0)
-    writeOne(Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "b", t0 + 20000)
-    writeOne(Seq((2L, 500 * S, 7L, "view", 0.0, "{}")), "c", t0 + 40000)
+    writeEvents(tmp, Seq((1L, 1000 * S, 7L, "view", 0.0, "{}")), "a", t0)
+    writeEvents(tmp, Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "b", t0 + 20000)
+    writeEvents(tmp, Seq((2L, 500 * S, 7L, "view", 0.0, "{}")), "c", t0 + 40000)
 
     val acc = spark.sparkContext.longAccumulator("graft.asof.outOfOrder")
     val stream = EventStream.asofSignup(
@@ -749,27 +709,16 @@ class StreamingSpec extends AnyFunSuite {
     // e40 — so the late signup matches only its own row and e40 still
     // sees s20: the exact batch as-of answer, with the repaired arrival
     // reported through the accumulator.
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_asof_late").toFile
-    def writeOne(rows: Seq[(Long, Long, Long, String, Double, String)], name: String, mtime: Long): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val target = new java.io.File(tmp, s"events_$name.parquet")
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      target.setLastModified(mtime)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
-    writeOne(Seq(
+    writeEvents(tmp, Seq(
       (20L, 5 * S, 7L, "signup", 0.0, "{}"),
       (30L, 6 * S, 7L, "view", 0.0, "{}")), "a", t0)
-    writeOne(Seq(
+    writeEvents(tmp, Seq(
       (10L, 2 * S, 7L, "signup", 0.0, "{}"),
       (40L, 7 * S, 7L, "view", 0.0, "{}")), "b", t0 + 30000)
-    writeOne(Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 60000)
+    writeEvents(tmp, Seq((99L, 86400 * S, -1L, "flush", 0.0, "{}")), "z", t0 + 60000)
 
     val acc = spark.sparkContext.longAccumulator("graft.asof.outOfOrder")
     val stream = EventStream.asofSignup(
@@ -866,7 +815,7 @@ class StreamingSpec extends AnyFunSuite {
 
       // es05: emitted pair multiset == batch interval self-join
       val gotPairs = runGate("layout_es05", EventStream.intervalJoin(
-        EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None)))
+        EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None), "inner"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
       val e = graft.core.Tables.events(spark, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))

@@ -30,38 +30,30 @@ class TsEncodingSpec extends AnyFunSuite {
       s"type_$i", i * 1.5, "{}")
   }
 
-  /** Write df as the single-file `<dir>/events.parquet` layout the
-    * testdata uses (and the streaming glob expects).
-    */
-  private def writeSingleFile(df: DataFrame, dir: File): Unit = {
-    val stage = new File(dir, "stage")
-    df.coalesce(1).write.parquet(stage.getAbsolutePath)
-    val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-    Files.move(part.toPath, new File(dir, "events.parquet").toPath)
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
-  }
-
   private def encodings(): Map[String, File] = {
     import spark.implicits._
     val tsUs = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val root = Files.createTempDirectory("graft_ts_matrix").toFile
     def sub(name: String): File = { val f = new File(root, name); f.mkdirs(); f }
+    // each encoding as the single-file `<dir>/events.parquet` layout the
+    // testdata uses (and the streaming glob expects)
+    def writeSingleFile(df: DataFrame, name: String): Unit =
+      StreamFiles.writeOne(df, sub(name).toString, "events")
 
     // plain INT64 nanoseconds (the nanos-era convention, and what the
     // replay harness's sentinel rows use)
-    writeSingleFile(tsUs.withColumn("ts", col("ts") * 1000L), sub("long_ns"))
+    writeSingleFile(tsUs.withColumn("ts", col("ts") * 1000L), "long_ns")
 
     // µs TIMESTAMP, isAdjustedToUTC — a producer writing instants
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try {
-      writeSingleFile(tsUs.withColumn("ts", timestamp_micros(col("ts"))), sub("ts_utc"))
+      writeSingleFile(tsUs.withColumn("ts", timestamp_micros(col("ts"))), "ts_utc")
       // µs TIMESTAMP_NTZ — the current driver testdata encoding; the
       // TZ→NTZ cast reinterprets in the UTC session zone, so the naive
       // wall-clock equals the instant's UTC reading
       writeSingleFile(
-        tsUs.withColumn("ts", timestamp_micros(col("ts")).cast(TimestampNTZType)),
-        sub("ts_ntz"))
+        tsUs.withColumn("ts", timestamp_micros(col("ts")).cast(TimestampNTZType)), "ts_ntz")
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
       case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
