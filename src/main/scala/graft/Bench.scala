@@ -3,7 +3,8 @@ package graft
 /** Per-round benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR — one cold run, then THREE steady-state runs whose
   * MEDIAN is the reported number — writes the full per-query JSON record
-  * (warm medians, cold, raw warm samples, a /proc/loadavg stamp and a
+  * (warm medians, cold, raw warm samples, a /proc/loadavg stamp, the
+  * warm runs' generated-class compile count and a
   * canonicalized-optimized-plan fingerprint per query) to bench_out.json,
   * prints it, and prints a compact summary JSON line LAST (the driver
   * captures a bounded stdout tail; the compact line is what survives
@@ -21,11 +22,22 @@ object Bench {
   /** One query's measured record: reported warm median, cold (first)
     * run, every warm sample (3, or 6 after a load escalation), the
     * worst /proc/loadavg stamp observed while measuring, the
-    * canonicalized-plan fingerprint, and the `suspect` verdict — true
-    * when the harness itself distrusts the stamps (see [[isSuspect]]).
+    * canonicalized-plan fingerprint, the `suspect` verdict — true
+    * when the harness itself distrusts the stamps (see [[isSuspect]]) —
+    * and `compiles`, the classes codegen compiled during the warm runs
+    * (see [[compiledClasses]]).
     */
   private[graft] case class QRec(warm: Double, cold: Double,
-      samples: Seq[Double], load: Double, fp: String, suspect: Boolean)
+      samples: Seq[Double], load: Double, fp: String, suspect: Boolean,
+      compiles: Long = 0L)
+
+  /** Generated classes compiled so far in this JVM: Spark records one
+    * compile-time sample per class it compiles and none for a class its
+    * codegen cache serves. A query whose warm runs move this counter
+    * regenerates code on every run.
+    */
+  private[graft] def compiledClasses(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The reported warm time: MEDIAN of the valid samples (midpoint of
     * the two middles on an even count — neither lone sample deserves
@@ -304,7 +316,7 @@ object Bench {
       // quarantine a possible code regression as machine noise; they
       // carry disp:"sustained" and are excluded only from the hard
       // regression tripwire.
-      val movers = results.flatMap { case (name, QRec(warm, _, _, _, fp, suspect)) =>
+      val movers = results.flatMap { case (name, QRec(warm, _, _, _, fp, suspect, _)) =>
         val r = Option(refQ).flatMap(q => Option(q.get(name))).map(_.asDouble(-1.0)).getOrElse(-1.0)
         if ((suspect && !disps.get(name).contains("sustained")) || warm <= 0 || r <= 0) None
         else {
@@ -371,6 +383,8 @@ object Bench {
       .mkString("{", ",", "}")
     val fpMap = results
       .map { case (k, v) => "\"" + k + "\":\"" + v.fp + "\"" }.mkString("{", ",", "}")
+    val compilesMap = results
+      .map { case (k, v) => "\"" + k + "\":" + v.compiles }.mkString("{", ",", "}")
     val total = results.map(_._2.warm).filter(_ >= 0).sum
     // the harness's own distrust list: escalated to 6 samples and STILL
     // spread-polluted, or measured at core-saturating loadavg — these
@@ -385,7 +399,7 @@ object Bench {
       // a suspect's warm median is untrusted by definition — its
       // warm>cold inversion is unattributable, so it lands in
       // load_suspect, never in the leak list
-      case (name, QRec(warm, cold, _, _, _, false)) if inverted(warm, cold) => name
+      case (name, QRec(warm, cold, _, _, _, false, _)) if inverted(warm, cold) => name
     }
     if (warmExceedsCold.nonEmpty)
       System.err.println(s"[bench] WARM>COLD LEAK SUSPECTS: ${warmExceedsCold.mkString(", ")}")
@@ -400,7 +414,7 @@ object Bench {
       System.err.println(
         s"[bench] ${regressions.size} PLAN REGRESSIONS (fp:diff ≥2x slower vs local ref): ${regressions.mkString(", ")}")
     val regList = regressions.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${map(_.warm)},"first_run":${map(_.cold)},"warm_samples":$samplesMap,"load":${map(_.load)},"plan_fp":$fpMap,"warm_exceeds_cold":$guard,"errors":$errList,"regressions":$regList,"load_suspect":$suspectList,"sustained_resample":$resampleJson,"delta_vs_local":$deltaJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${map(_.warm)},"first_run":${map(_.cold)},"warm_samples":$samplesMap,"load":${map(_.load)},"plan_fp":$fpMap,"warm_compiles":$compilesMap,"warm_exceeds_cold":$guard,"errors":$errList,"regressions":$regList,"load_suspect":$suspectList,"sustained_resample":$resampleJson,"delta_vs_local":$deltaJson,"sf":"$sfDir"}"""
     // The per-query maps (~5 KB at 97 queries) overflow the bounded
     // stdout tail the driver captures — all four rounds' BENCH files
     // show "parsed": null from the line being truncated mid-JSON. So the
@@ -529,6 +543,7 @@ object Bench {
       var lastDf: org.apache.spark.sql.DataFrame = null
       def once(): Double = runOnce(name, fn, df => lastDf = df)
       val cold = once()
+      val compiledBefore = compiledClasses()
       // ALWAYS three warm samples, report the median: a single sample on a
       // loaded machine is indistinguishable from a leak (rounds 6 and 7
       // both had phantom regressions that reproduced at 5-20x less in
@@ -550,6 +565,7 @@ object Bench {
       val cores = Runtime.getRuntime.availableProcessors()
       val escalate = first3.exists(_ >= 0) && isSuspect(first3, load3, cores)
       val warmSamples = if (escalate) first3 ++ Seq(once(), once(), once()) else first3
+      val compiles = compiledClasses() - compiledBefore
       val load = if (escalate) math.max(load3, loadAvg()) else load3
       val suspect = escalate && isSuspect(warmSamples, load, cores)
       if (suspect)
@@ -572,7 +588,7 @@ object Bench {
           }
         } catch { case _: Throwable => () }
       }
-      name -> QRec(warm, cold, warmSamples, load, fp, suspect)
+      name -> QRec(warm, cold, warmSamples, load, fp, suspect, compiles)
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val ref = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_local_ref.json")

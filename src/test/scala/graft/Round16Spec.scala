@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Round-16 regression pins: sustained-disposition bench records stay
   * visible in the delta table (round-15 ADVICE — the analyzed-plan fp
   * cannot rule out an optimizer-level regression, so "sustained" must
@@ -305,5 +307,26 @@ class Round16Spec extends AnyFunSuite {
       java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamingGate.scala"))
     assert("createTempDirectory".r.findAllMatchIn(src).size === 1,
       "StreamingGate must create scratch dirs only through its scratch-dir helper")
+  }
+
+  test("architecture pin: core.Sessions holds the only SparkSession builder") {
+    // the codegen cache bound is a static conf that the JVM's first
+    // session sets; a session built elsewhere without it would bring back
+    // Spark's 100-entry cache for every later session in the JVM
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val sources = Seq("src/main", "perfbench/src").flatMap { root =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.filter { p =>
+        val n = p.toString
+        n.endsWith(".scala") || n.endsWith(".java")
+      }.toList
+      finally walk.close()
+    }
+    assert(sources.exists(_.toString.endsWith("perfbench/Runner.scala")), "pin must see perfbench")
+    val holders = sources.filter { p =>
+      builder.findFirstIn(java.nio.file.Files.readString(p)).isDefined
+    }.map(_.toString)
+    assert(holders === Seq("src/main/scala/graft/core/Sessions.scala"),
+      "build every session through core.Sessions.builder")
   }
 }

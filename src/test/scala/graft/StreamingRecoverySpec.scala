@@ -22,9 +22,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  test("tumbling agg restarted from checkpoint resumes state, no reprocessing") {
+  /** A test whose stream, checkpoint and output directories live under
+    * one scratch root that is deleted when the test ends. */
+  private def scratchTest(name: String)(body: StreamFiles.Scratch => Unit): Unit =
+    test(name)(StreamFiles.withScratch("graft-recovery")(body))
+
+  scratchTest("tumbling agg restarted from checkpoint resumes state, no reprocessing") { tmp =>
     // split the events table into 4 parquet files (same rows, test plumbing)
-    val splitDir = Files.createTempDirectory("graft-evsplit").toString
+    val splitDir = tmp.dir("evsplit")
     graft.core.Tables.events(spark, dir)
       .withColumn("ts", org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000")) // back to raw ns longs
       .repartition(4)
@@ -33,8 +38,8 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .filter(_.getName.startsWith("part-")).map(_.toPath).sortBy(_.toString).toSeq
     assert(parts.length === 4)
 
-    val streamDir = Files.createTempDirectory("graft-evstream").toString
-    val checkpoint = Files.createTempDirectory("graft-evckpt").toString
+    val streamDir = tmp.dir("evstream")
+    val checkpoint = tmp.dir("evckpt")
     def feed(ps: Seq[Path]): Unit = ps.foreach { p =>
       Files.copy(p, Paths.get(streamDir, s"events-${p.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
     }
@@ -68,12 +73,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
     assert(got === want, "post-restart complete output must equal the full batch gold")
   }
 
-  test("ingestion dedup restarted from checkpoint: a replayed file emits nothing new") {
-    val streamDir = Files.createTempDirectory("graft-dupstream").toString
-    val checkpoint = Files.createTempDirectory("graft-dupckpt").toString
+  scratchTest("ingestion dedup restarted from checkpoint: a replayed file emits nothing new") { tmp =>
+    val streamDir = tmp.dir("dupstream")
+    val checkpoint = tmp.dir("dupckpt")
     // memory sink cannot recover an append query from a checkpoint — a
     // real (file) sink is the honest restart shape anyway
-    val outDir = Files.createTempDirectory("graft-dupout").toString + "/dedup"
+    val outDir = tmp.dir("dupout") + "/dedup"
     val src = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("events")).head.toPath
 
@@ -107,7 +112,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     assert(spark.read.parquet(outDir).distinct().count() === distinctIds)
   }
 
-  test("as-of twin restarted from checkpoint carries per-user flatMapGroupsWithState state") {
+  scratchTest("as-of twin restarted from checkpoint carries per-user flatMapGroupsWithState state") { tmp =>
     // the third recovery class: CUSTOM (flatMapGroupsWithState) state.
     // Phase 1 feeds the first half by event time; its file is then
     // DELETED, so a user whose last signup sits in phase 1 can only get
@@ -122,9 +127,9 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .cache()
     val cut = raw.selectExpr("percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS m")
       .collect()(0).getDouble(0).toLong
-    val streamDir = Files.createTempDirectory("graft-asofstream").toString
-    val checkpoint = Files.createTempDirectory("graft-asofckpt").toString
-    val outDir = Files.createTempDirectory("graft-asofout").toString + "/asof"
+    val streamDir = tmp.dir("asofstream")
+    val checkpoint = tmp.dir("asofckpt")
+    val outDir = tmp.dir("asofout") + "/asof"
 
     def runOnce(): Unit = {
       val q = EventStream.asofSignup(spark, EventStream.readEvents(spark, streamDir))
@@ -165,7 +170,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       "post-restart emitted rows must equal the batch as-of join over ALL input")
   }
 
-  test("stream-stream interval join restarted from checkpoint recovers JOIN state") {
+  scratchTest("stream-stream interval join restarted from checkpoint recovers JOIN state") { tmp =>
     // the fourth recovery class: symmetric-hash JOIN state. Phase 1 feeds
     // every event at-or-before a cut chosen ON a paired event, then its
     // file is DELETED; phase 2 feeds the rest. A cross-boundary pair
@@ -196,9 +201,9 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .withColumn("ts", org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
       .cache()
     val cutNs = cutUs * 1000
-    val streamDir = Files.createTempDirectory("graft-joinstream").toString
-    val checkpoint = Files.createTempDirectory("graft-joinckpt").toString
-    val outDir = Files.createTempDirectory("graft-joinout").toString + "/pairs"
+    val streamDir = tmp.dir("joinstream")
+    val checkpoint = tmp.dir("joinckpt")
+    val outDir = tmp.dir("joinout") + "/pairs"
     def runOnce(): Unit = {
       val q = EventStream.intervalJoin(EventStream.readEvents(spark, streamDir), "inner")
         .writeStream
@@ -229,7 +234,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       s"post-restart pair multiset must equal the batch join (incl. $nCross cross-boundary pairs)")
   }
 
-  test("left-outer join restarted from checkpoint still emits null rows from restored state") {
+  scratchTest("left-outer join restarted from checkpoint still emits null rows from restored state") { tmp =>
     // The fifth recovery class: OUTER-join eviction emission. A
     // partnerless event ingested in phase 1 has its null row pending in
     // join state when the query stops; after a restart (phase-1 file
@@ -258,9 +263,9 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val b = raw.selectExpr(
       "percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS m", "max(ts) AS hi").collect()(0)
     val (cutNs, maxNs) = (b.getDouble(0).toLong, b.getLong(1))
-    val streamDir = Files.createTempDirectory("graft-louterstream").toString
-    val checkpoint = Files.createTempDirectory("graft-louterckpt").toString
-    val outDir = Files.createTempDirectory("graft-louterout").toString + "/rows"
+    val streamDir = tmp.dir("louterstream")
+    val checkpoint = tmp.dir("louterckpt")
+    val outDir = tmp.dir("louterout") + "/rows"
     def runOnce(): Unit = {
       val q = EventStream.intervalJoin(EventStream.readEvents(spark, streamDir), "left_outer")
         .writeStream
@@ -292,7 +297,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       "post-restart multiset must hold every pair and EXACTLY one null row per partnerless event")
   }
 
-  test("ingest sink: a batch replayed after crash-before-commit does not duplicate output") {
+  scratchTest("ingest sink: a batch replayed after crash-before-commit does not duplicate output") { tmp =>
     // the exactly-once claim of p15's idempotent-by-batch-directory
     // sink, attacked directly: after phase 1 commits, the checkpoint's
     // COMMIT marker for the last batch is deleted — exactly the state a
@@ -305,8 +310,8 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .cache()
     val cut = raw.selectExpr("percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS m")
       .collect()(0).getDouble(0).toLong
-    val streamDir = Files.createTempDirectory("graft-ingeststream").toString
-    val base = Files.createTempDirectory("graft-ingestrec").toString
+    val streamDir = tmp.dir("ingeststream")
+    val base = tmp.dir("ingestrec")
     val root = s"$base/shards"
     val ckpt = s"$base/ckpt"
     StreamFiles.writeOne(raw.filter(col("ts") <= cut), streamDir, "events_a")
@@ -336,7 +341,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       "post-recovery shards must equal the projected events table")
   }
 
-  test("session_window agg restarted from checkpoint merges sessions across the restart") {
+  scratchTest("session_window agg restarted from checkpoint merges sessions across the restart") { tmp =>
     // The SIXTH recovered state class: the engine's session-merge state
     // (UpdatingSessionsExec), distinct from windowed-agg, dedup, custom
     // fMGWS, join, and outer-join state. Time-split feed: any session
@@ -349,9 +354,9 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .cache()
     val cut = ev.selectExpr("percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS m")
       .collect()(0).getDouble(0).toLong
-    val streamDir = Files.createTempDirectory("graft-sessstream").toString
-    val checkpoint = Files.createTempDirectory("graft-sessckpt").toString
-    val outDir = Files.createTempDirectory("graft-sessout").toString + "/sessions"
+    val streamDir = tmp.dir("sessstream")
+    val checkpoint = tmp.dir("sessckpt")
+    val outDir = tmp.dir("sessout") + "/sessions"
     def runOnce(): Unit = {
       val q = EventStream.sessionWindowAgg(EventStream.readEvents(spark, streamDir))
         .writeStream.format("parquet")
@@ -378,7 +383,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       "post-restart append output must equal the closed batch sessions — cross-restart merges included")
   }
 
-  test("tumbling agg on ROCKSDB restarts from checkpoint: snapshot+changelog state restores") {
+  scratchTest("tumbling agg on ROCKSDB restarts from checkpoint: snapshot+changelog state restores") { tmp =>
     // the es23 backend under the same deleted-input restart discipline as
     // the HDFS-backed test above: phase-1 files are gone before the
     // restart, so only RocksDB's recovered state can complete the answer
@@ -387,15 +392,15 @@ class StreamingRecoverySpec extends AnyFunSuite {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val splitDir = Files.createTempDirectory("graft-rocksplit").toString
+      val splitDir = tmp.dir("rocksplit")
       graft.core.Tables.events(spark, dir)
         .withColumn("ts", org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
         .repartition(4)
         .write.mode("overwrite").parquet(splitDir)
       val parts = new java.io.File(splitDir).listFiles()
         .filter(_.getName.startsWith("part-")).map(_.toPath).sortBy(_.toString).toSeq
-      val streamDir = Files.createTempDirectory("graft-rockstream").toString
-      val checkpoint = Files.createTempDirectory("graft-rockckpt").toString
+      val streamDir = tmp.dir("rockstream")
+      val checkpoint = tmp.dir("rockckpt")
       def feed(ps: Seq[Path]): Unit = ps.foreach { p =>
         Files.copy(p, Paths.get(streamDir, s"events-${p.getFileName}"), StandardCopyOption.REPLACE_EXISTING)
       }

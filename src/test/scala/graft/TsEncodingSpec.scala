@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.File
-import java.nio.file.Files
 
 /** Regression matrix for the round-8 breakage class: the driver has
   * shipped `events.ts` as parquet TIMESTAMP(NANOS) (a raw ns long under
@@ -30,39 +29,40 @@ class TsEncodingSpec extends AnyFunSuite {
       s"type_$i", i * 1.5, "{}")
   }
 
-  private def encodings(): Map[String, File] = {
-    import spark.implicits._
-    val tsUs = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = Files.createTempDirectory("graft_ts_matrix").toFile
-    def sub(name: String): File = { val f = new File(root, name); f.mkdirs(); f }
-    // each encoding as the single-file `<dir>/events.parquet` layout the
-    // testdata uses (and the streaming glob expects)
-    def writeSingleFile(df: DataFrame, name: String): Unit =
-      StreamFiles.writeOne(df, sub(name).toString, "events")
+  /** A test of the rows written under each encoding: `body` gets one
+    * directory per encoding, under a scratch root deleted when it ends. */
+  private def encodingTest(name: String)(body: Map[String, File] => Unit): Unit =
+    test(name)(StreamFiles.withScratch("graft_ts_matrix") { tmp =>
+      import spark.implicits._
+      val tsUs = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      def sub(name: String): File = new File(tmp.dir(name))
+      // each encoding as the single-file `<dir>/events.parquet` layout the
+      // testdata uses (and the streaming glob expects)
+      def writeSingleFile(df: DataFrame, name: String): Unit =
+        StreamFiles.writeOne(df, sub(name).toString, "events")
 
-    // plain INT64 nanoseconds (the nanos-era convention, and what the
-    // replay harness's sentinel rows use)
-    writeSingleFile(tsUs.withColumn("ts", col("ts") * 1000L), "long_ns")
+      // plain INT64 nanoseconds (the nanos-era convention, and what the
+      // replay harness's sentinel rows use)
+      writeSingleFile(tsUs.withColumn("ts", col("ts") * 1000L), "long_ns")
 
-    // µs TIMESTAMP, isAdjustedToUTC — a producer writing instants
-    val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try {
-      writeSingleFile(tsUs.withColumn("ts", timestamp_micros(col("ts"))), "ts_utc")
-      // µs TIMESTAMP_NTZ — the current driver testdata encoding; the
-      // TZ→NTZ cast reinterprets in the UTC session zone, so the naive
-      // wall-clock equals the instant's UTC reading
-      writeSingleFile(
-        tsUs.withColumn("ts", timestamp_micros(col("ts")).cast(TimestampNTZType)), "ts_ntz")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
-      case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
-    }
-    Map("long_ns" -> sub("long_ns"), "ts_utc" -> sub("ts_utc"), "ts_ntz" -> sub("ts_ntz"))
-  }
+      // µs TIMESTAMP, isAdjustedToUTC — a producer writing instants
+      val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      try {
+        writeSingleFile(tsUs.withColumn("ts", timestamp_micros(col("ts"))), "ts_utc")
+        // µs TIMESTAMP_NTZ — the current driver testdata encoding; the
+        // TZ→NTZ cast reinterprets in the UTC session zone, so the naive
+        // wall-clock equals the instant's UTC reading
+        writeSingleFile(
+          tsUs.withColumn("ts", timestamp_micros(col("ts")).cast(TimestampNTZType)), "ts_ntz")
+      } finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+        case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      }
+      body(Map("long_ns" -> sub("long_ns"), "ts_utc" -> sub("ts_utc"), "ts_ntz" -> sub("ts_ntz")))
+    })
 
-  test("batch loader normalizes all three physical ts encodings identically") {
-    val dirs = encodings()
+  encodingTest("batch loader normalizes all three physical ts encodings identically") { dirs =>
     // the three files really carry three distinct physical schemas
     val physical = dirs.map { case (k, d) =>
       k -> spark.read.parquet(s"$d/events.parquet").schema("ts").dataType.typeName
@@ -81,8 +81,7 @@ class TsEncodingSpec extends AnyFunSuite {
     for ((k, vals) <- got) assert(vals === want, s"encoding $k read wrong instants")
   }
 
-  test("streaming source normalizes all three physical ts encodings identically") {
-    val dirs = encodings()
+  encodingTest("streaming source normalizes all three physical ts encodings identically") { dirs =>
     val want = rows.map(r => (r._1, r._2)).toSet
     for ((k, d) <- dirs) {
       val stream = EventStream.readEvents(spark, d.getAbsolutePath)
@@ -96,8 +95,7 @@ class TsEncodingSpec extends AnyFunSuite {
     }
   }
 
-  test("eventTsLongUnit reads the footer annotation, ns fallback for plain int64") {
-    val dirs = encodings()
+  encodingTest("eventTsLongUnit reads the footer annotation, ns fallback for plain int64") { dirs =>
     assert(graft.core.Tables.eventTsLongUnit(spark,
       s"${dirs("long_ns")}/events.parquet") === "ns")
     assert(graft.core.Tables.eventTsLongUnit(spark,
