@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated parquet star schema (TESTDATA.md).
@@ -24,7 +24,7 @@ object Tables {
     * data, DuckDB promotes narrow ints in arithmetic, and the gate's
     * compare normalizes integer widths — so the oracles cannot tell.
     */
-  private def widenIntegralCols(df: DataFrame): DataFrame = {
+  private[graft] def widenIntegralCols(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
     val narrow = df.schema.fields.collect {
       case f if f.dataType == ByteType || f.dataType == ShortType ||
@@ -36,7 +36,91 @@ object Tables {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    widenIntegralCols(spark.read.parquet(s"$dir/$name.parquet"))
+    widenIntegralCols(readParquet(spark, s"$dir/$name.parquet"))
+
+  /** Parquet schemas this process has inferred. Reading parquet without a
+    * schema fires a one-task Spark job that reads a footer (sf0.1, warm:
+    * 80 ms for `orders` against 8 ms with the schema given), and an
+    * unchanged file infers the same schema every time.
+    *
+    * Key: the entry is the path (a file, a directory of part files, or
+    * `dir/glob` for a stream probe). The value's version string is the
+    * path's [[fileFingerprint]] (for a glob, every matching file's),
+    * taken BEFORE inferring, joined with the session's
+    * `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and
+    * `spark.sql.caseSensitive` settings, which change what inference
+    * returns ([[events]] turns `nanosAsLong` on at runtime). A file
+    * rewritten in place while it is inferred leaves the OLD fingerprint
+    * next to the new schema, so the next read misses and infers again.
+    *
+    * Bound: one entry per path; a new version replaces the old one (the
+    * [[rowGroupCache]] rule). Inference runs outside the map's lock; two
+    * threads that miss together both infer, and either result is right.
+    *
+    * Routed here: the input tables ([[table]], [[events]]), the
+    * process-store frames (`Graph.materializedOnce`,
+    * `Similarity.hybridLists`), each written once per process and read by
+    * every later query, and the stream schema probes ([[globSchema]]).
+    * Not routed: output read back within the query that wrote it
+    * (`Compaction.readLayout`, `StreamingGate`'s read-backs of per-run
+    * output roots) — a new fingerprint every run, so a cached schema is
+    * never read again.
+    *
+    * The first read of a path infers exactly as `spark.read.parquet`
+    * does, and a path whose fingerprint cannot be taken (missing, say) is
+    * read uncached, so errors are Spark's own.
+    */
+  private[graft] val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  private def schemaVersion(s: SparkSession, fingerprint: => String): Option[String] =
+    try {
+      val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }.sorted.mkString(",")
+      Some(s"$fingerprint|$confs")
+    } catch { case NonFatal(_) => None }
+
+  private def cachedSchema(path: String, version: Option[String]): Option[StructType] =
+    version.flatMap(v => Option(schemaCache.get(path)).collect { case (`v`, schema) => schema })
+
+  private def remember(path: String, version: Option[String], schema: StructType): Unit =
+    version.foreach(v => schemaCache.put(path, (v, schema)))
+
+  /** `spark.read.parquet(path)` that infers the schema once per version
+    * of the path ([[schemaCache]]).
+    */
+  def readParquet(s: SparkSession, path: String): DataFrame = {
+    val version = schemaVersion(s, fileFingerprint(s, path))
+    cachedSchema(path, version) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        remember(path, version, df.schema)
+        df
+    }
+  }
+
+  /** The schema of the parquet files in `dir` whose names match `glob`
+    * (the schema a stream over them is given), inferred once per version
+    * of the matching file set: a file added, removed or rewritten makes a
+    * new version.
+    */
+  def globSchema(s: SparkSession, dir: String, glob: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    val pattern = new Path(dir, glob)
+    val version = schemaVersion(s, {
+      val fs = pattern.getFileSystem(s.sessionState.newHadoopConf())
+      Option(fs.globStatus(pattern)).getOrElse(Array.empty).map(_.getPath.toString).sorted
+        .map(f => s"$f=${fileFingerprint(s, f)}").mkString(";")
+    })
+    cachedSchema(pattern.toString, version).getOrElse {
+      val schema = s.read.option("pathGlobFilter", glob).parquet(dir).schema
+      remember(pattern.toString, version, schema)
+      schema
+    }
+  }
 
   /** Scale-adaptive parallelism floor for kernel-heavy consumers —
     * guide §2.5's "input skew: one huge unsplittable file … otherwise

@@ -354,7 +354,7 @@ object Graph {
     * changes from the CC pipeline to a parquet relation.
     */
   def materializedOnce(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(graft.core.ProcessStore.once(s"frame|$key") { p =>
+    graft.core.Tables.readParquet(s, graft.core.ProcessStore.once(s"frame|$key") { p =>
       val frame = build
       frame.write.mode("overwrite").parquet(p.getAbsolutePath)
       release(frame)

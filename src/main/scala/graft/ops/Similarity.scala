@@ -3006,7 +3006,7 @@ object Similarity extends QueryModule {
       lex.write.mode("overwrite").parquet(s"$f/lex")
       sem.write.mode("overwrite").parquet(s"$f/sem")
     }
-    (s.read.parquet(s"$p/lex"), s.read.parquet(s"$p/sem"))
+    (Tables.readParquet(s, s"$p/lex"), Tables.readParquet(s, s"$p/sem"))
   }
 
   private[graft] def buildHybridLists(s: SparkSession, dir: String): (DataFrame, DataFrame) = {

@@ -23,10 +23,12 @@ object EventStream {
   /** File-source stream over the events table, ts normalized to
     * TimestampType via the same Tables.normalizeEventTs seam the batch
     * loader uses. The stream's fixed schema is taken from the files
-    * actually present (a batch-read schema probe) rather than hard-coded:
-    * round 8 proved a forced `ts LONG` schema silently reinterprets a
-    * µs-encoded file as nanos. For long-typed files the epoch unit comes
-    * from the parquet footer, also shared with the batch loader.
+    * actually present (a batch-read schema probe, inferred once per
+    * version of the matching files by Tables.globSchema) rather than
+    * hard-coded: round 8 proved a forced `ts LONG` schema silently
+    * reinterprets a µs-encoded file as nanos. For long-typed files the
+    * epoch unit comes from the parquet footer, also shared with the batch
+    * loader.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame =
     readEventsWith(spark, dir, maxFilesPerTrigger = Some(1))
@@ -49,7 +51,7 @@ object EventStream {
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case NonFatal(_) => () }
     val glob = "events*.parquet"
-    val probed = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
+    val probed = graft.core.Tables.globSchema(spark, dir, glob)
     val unit =
       if (probed("ts").dataType == LongType)
         graft.core.Tables.eventTsLongUnit(spark, dir, glob)

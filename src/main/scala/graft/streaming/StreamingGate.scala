@@ -803,8 +803,7 @@ object StreamingGate extends QueryModule {
 
   private def readGlobStream(s: SparkSession, dir: String, glob: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val schema = s.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = s.readStream.schema(schema)
+    val reader = s.readStream.schema(graft.core.Tables.globSchema(s, dir, glob))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
     reader.option("pathGlobFilter", glob).parquet(dir)
   }

@@ -18,8 +18,9 @@ object SparkTestSession {
   * count over unique integer tokens must equal the sorted distinct input
   * with count 1.
   */
-class CoreSpec extends AnyFunSuite {
+class CoreSpec extends AnyFunSuite with ScratchTests {
   private lazy val spark = SparkTestSession.spark
+  protected val scratchPrefix = "graft-core"
 
   private val n = 2000
 
@@ -74,10 +75,10 @@ class CoreSpec extends AnyFunSuite {
     assert(declarative === contract)
   }
 
-  test("writeSortedText emits `key: value` lines in total key order") {
+  scratchTest("writeSortedText emits `key: value` lines in total key order") { tmp =>
     import spark.implicits._
     val kvs = Seq(("b", "2"), ("a", "1"), ("c", "3")).toDS()
-    val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString + "/out"
+    val dir = tmp.dir("sorted") + "/out"
     MapReduceJob.writeSortedText(kvs, dir)
     val lines = spark.read.textFile(dir).collect().toSeq
     assert(lines === Seq("a: 1", "b: 2", "c: 3"))

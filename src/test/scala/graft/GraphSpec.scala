@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,36 +24,6 @@ class GraphSpec extends AnyFunSuite {
     val loop = labelMap(Graph.connectedComponentsWithHops(n, e)._1)
     assert(inMemory === loop, "in-memory finish and label-propagation loop disagree")
     inMemory
-  }
-
-  /** `body`'s result and the number of Spark jobs it fired, counted by job
-    * group. Listener events arrive in order, so once a sentinel job fired
-    * after `body` has been seen, every job of `body` has been counted.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graph-spec-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-sentinel" => sentinelSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup[R](g: String)(f: => R): R = {
-        sc.setJobGroup(g, g)
-        try f finally sc.clearJobGroup()
-      }
-      val result = inGroup(group)(body)
-      inGroup(s"$group-sentinel")(sc.parallelize(Seq(1), 1).count())
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("two components, a singleton, duplicate + self edges") {
@@ -119,8 +88,8 @@ class GraphSpec extends AnyFunSuite {
 
   test("a small pair graph finishes in driver memory: 4 jobs, not the loop's barriers") {
     val (nodes, edges) = ((0L until randomN.toLong).toDF("id"), randomEdges().toDF("a", "b"))
-    val (labels, jobs) = jobsOf(Graph.connectedComponents(nodes, edges))
-    val (loopLabels, loopJobs) = jobsOf(Graph.connectedComponentsWithHops(nodes, edges)._1)
+    val (labels, jobs) = Jobs.counted(spark)(Graph.connectedComponents(nodes, edges))
+    val (loopLabels, loopJobs) = Jobs.counted(spark)(Graph.connectedComponentsWithHops(nodes, edges)._1)
     try {
       info(s"in-memory $jobs jobs, loop $loopJobs jobs; partitions " +
         s"${labels.rdd.getNumPartitions} vs ${loopLabels.rdd.getNumPartitions}")
@@ -134,7 +103,7 @@ class GraphSpec extends AnyFunSuite {
     }
     // the cap is inclusive: exactly InMemoryEdges edges still finish in memory
     val (starNodes, starEdges) = star(Graph.InMemoryEdges)
-    val (starLabels, starJobs) = jobsOf(Graph.connectedComponents(starNodes, starEdges))
+    val (starLabels, starJobs) = Jobs.counted(spark)(Graph.connectedComponents(starNodes, starEdges))
     try {
       assert(starJobs === 4, s"a star of InMemoryEdges edges fired $starJobs jobs")
       assert(starLabels.count() === Graph.InMemoryEdges + 1L)
@@ -145,7 +114,7 @@ class GraphSpec extends AnyFunSuite {
   test("one edge past InMemoryEdges takes the label-propagation loop, same all-root labels") {
     val (nodes, edges) = star(Graph.InMemoryEdges + 1)
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val (labels, jobs) = jobsOf(Graph.connectedComponents(nodes, edges))
+    val (labels, jobs) = Jobs.counted(spark)(Graph.connectedComponents(nodes, edges))
     try {
       assert(jobs > 4, s"a star of InMemoryEdges + 1 edges must run the loop, fired $jobs jobs")
       assert(labels.count() === Graph.InMemoryEdges + 2L)

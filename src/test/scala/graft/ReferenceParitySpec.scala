@@ -10,11 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * sorted, verified line-by-line against the self-computed oracle —
   * sorted distinct input with count 1 — plus the exact line-count check.
   */
-class ReferenceParitySpec extends AnyFunSuite {
+class ReferenceParitySpec extends AnyFunSuite with ScratchTests {
   private lazy val spark = SparkTestSession.spark
+  protected val scratchPrefix = "graft-parity"
   private val nNumber = 100000 // test_test.go:14
 
-  test("TestBasic analogue: 100k unique tokens through the contract, sorted key:value output") {
+  scratchTest("TestBasic analogue: 100k unique tokens through the contract, sorted key:value output") { tmp =>
     import spark.implicits._
     // makeInput (test_test.go:21-34): integers 0..99999, one per line
     val lines = (0 until nNumber).map(_.toString).toDS().repartition(50) // nMap=50
@@ -25,7 +26,7 @@ class ReferenceParitySpec extends AnyFunSuite {
       (_, vs) => vs.map(_.toInt).sum.toString, // ReduceFunc
       nReduce = 5)
 
-    val outDir = java.nio.file.Files.createTempDirectory("graft-parity").toString + "/out"
+    val outDir = tmp.dir("parity") + "/out"
     MapReduceJob.writeSortedText(result, outDir)
 
     // check (test_test.go:81-119): output == sorted input, each count 1
@@ -37,11 +38,11 @@ class ReferenceParitySpec extends AnyFunSuite {
     }
   }
 
-  test("per-partition sorted output (O4/mrtmp-res contract): each file sorted, keys disjoint") {
+  scratchTest("per-partition sorted output (O4/mrtmp-res contract): each file sorted, keys disjoint") { tmp =>
     import spark.implicits._
     val kvs = (0 until 5000).map(i => (s"k${i % 997}", "1")).toDS()
       .groupByKey(_._1).mapGroups((k, vs) => (k, vs.size.toString))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-psorted").toString + "/out"
+    val outDir = tmp.dir("psorted") + "/out"
     MapReduceJob.writePartitionedSorted(kvs, outDir, nReduce = 5)
 
     val files = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("part-"))

@@ -47,3 +47,15 @@ object StreamFiles {
       target
     }
 }
+
+/** Tests that each get their own scratch root: `scratchTest(name) { tmp =>
+  * ... }` runs the body inside [[StreamFiles.withScratch]], so the root
+  * and everything under it is deleted when the test ends, passed or not.
+  */
+trait ScratchTests extends org.scalatest.funsuite.AnyFunSuiteLike {
+  /** Prefix of this suite's scratch roots in `java.io.tmpdir`. */
+  protected def scratchPrefix: String
+
+  protected def scratchTest(name: String)(body: StreamFiles.Scratch => Unit): Unit =
+    test(name)(StreamFiles.withScratch(scratchPrefix)(body))
+}

@@ -18,14 +18,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * (Complete mode keeps the watermark inert — watermark restoration
   * itself is not what this covers.)
   */
-class StreamingRecoverySpec extends AnyFunSuite {
+class StreamingRecoverySpec extends AnyFunSuite with ScratchTests {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
-
-  /** A test whose stream, checkpoint and output directories live under
-    * one scratch root that is deleted when the test ends. */
-  private def scratchTest(name: String)(body: StreamFiles.Scratch => Unit): Unit =
-    test(name)(StreamFiles.withScratch("graft-recovery")(body))
+  protected val scratchPrefix = "graft-recovery"
 
   scratchTest("tumbling agg restarted from checkpoint resumes state, no reprocessing") { tmp =>
     // split the events table into 4 parquet files (same rows, test plumbing)

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming results must converge to their batch twins (the oracle-checked
   * e02/e03 queries) once all input is processed.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with ScratchTests {
   private lazy val spark = SparkTestSession.spark
+  protected val scratchPrefix = "graft-streaming"
   private val dir = "/root/testdata/sf0.001"
 
   /** One replay file of raw event tuples (ts in ns): `events_<name>.parquet`
@@ -44,7 +45,7 @@ class StreamingSpec extends AnyFunSuite {
     * streaming analogue of end-of-day watermark advance; the sentinel
     * itself stays buffered forever and never appears in any output.
     */
-  private def twoHalfReplay(prefix: String, shuffled: Boolean = false,
+  private def twoHalfReplay(scratch: StreamFiles.Scratch, shuffled: Boolean = false,
                             across: Boolean = false): java.io.File = {
     import spark.implicits._
     // Load via the one normalization seam (robust to whatever physical ts
@@ -57,7 +58,7 @@ class StreamingSpec extends AnyFunSuite {
     val b = raw.selectExpr("percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS m", "max(ts) AS hi")
       .collect()(0)
     val (cut, maxTs) = (b.getDouble(0).toLong, b.getLong(1))
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    val tmp = new java.io.File(scratch.dir("replay"))
     def writeHalf(df0: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
       val df = if (shuffled) df0.orderBy(md5(col("event_id").cast("string"))) else df0
       StreamFiles.writeOne(df, tmp.toString, s"events_$name", Some(mtime))
@@ -75,13 +76,13 @@ class StreamingSpec extends AnyFunSuite {
     tmp
   }
 
-  test("CDC compact snapshot converges under arrival shuffled ACROSS batches (es12)") {
+  scratchTest("CDC compact snapshot converges under arrival shuffled ACROSS batches (es12)") { scratch =>
     // latest-per-user compaction: max_by folds incrementally, so the
     // complete-mode snapshot must equal the batch window query under
     // the worst arrival order the harness can produce (md5 split across
     // batches + shuffled rows inside each). The sentinel flush row
     // (user -1) is an artifact of the replay harness, not the data.
-    val tmp = twoHalfReplay("graft_cdc", shuffled = true, across = true)
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
     val stream = EventStream.compactSnapshot(EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("cdc_out")
@@ -97,7 +98,6 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(key).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("streaming tumbling window converges to the batch gold result (e02)") {
@@ -116,10 +116,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("streaming transitions converge to the batch transition matrix (e09) across TWO batches") {
+  scratchTest("streaming transitions converge to the batch transition matrix (e09) across TWO batches") { scratch =>
     // cross-batch state carry-over (boundary bigram emitted exactly
     // once) is the thing under test — hence the two-half replay
-    val tmp = twoHalfReplay("graft_trans")
+    val tmp = twoHalfReplay(scratch)
     val stream = EventStream.transitions(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("trans_out")
@@ -134,16 +134,15 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("transitions REPAIR cross-batch disorder (buffered), and the accumulator reports it") {
+  scratchTest("transitions REPAIR cross-batch disorder (buffered), and the accumulator reports it") { scratch =>
     // Batch A delivers ts=1s and ts=3s; batch B delivers ts=2s — an event
     // sorting BEFORE one already seen. The round-7 twin could only count
     // this while emitting a wrong matrix; the watermark-buffered twin
     // must emit the BATCH matrix (view>click, click>purchase) and report
     // the buffered-and-repaired arrival through the accumulator.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ooo").toFile
+    val tmp = new java.io.File(scratch.dir("ooo"))
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
     writeEvents(tmp,
@@ -165,16 +164,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Seq(("click", "purchase"), ("view", "click")),
       s"the late click must be ordered INTO the matrix, got $got")
     assert(acc.value === 1L)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("streaming funnel converges to the batch funnel (e08) across TWO batches") {
+  scratchTest("streaming funnel converges to the batch funnel (e08) across TWO batches") { scratch =>
     // the carried three-min state (a view in batch A qualifying a click
     // in batch B) is the thing under test. Halves split on ts, so
     // arrival is in-order and the funnel must converge EXACTLY; the
     // final value per user is the per-column min over the monotonically
     // tightening emitted rows.
-    val tmp = twoHalfReplay("graft_funnel")
+    val tmp = twoHalfReplay(scratch)
     val stream = EventStream.funnel(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("funnel_out")
@@ -192,15 +190,14 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(key).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("funnel counts a click/purchase TIED with its qualifying stage (value-based >=)") {
+  scratchTest("funnel counts a click/purchase TIED with its qualifying stage (value-based >=)") { scratch =>
     // batch e08's `ts >= fv` admits equal timestamps regardless of
     // event_id order; the stage-ordered passes must too. The click here
     // has a SMALLER event_id than the view at the same ts — a
     // (ts, event_id)-ordered single pass would drop it.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ftie").toFile
+    val tmp = new java.io.File(scratch.dir("ftie"))
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
     writeEvents(tmp, Seq((1L, 100 * S, 7L, "click", 0.0, "{}"),
@@ -220,17 +217,16 @@ class StreamingSpec extends AnyFunSuite {
     val r = rows.head
     assert((r.getLong(0), r.get(1), r.get(2), r.get(3)) ===
       ((7L, 100000000L, 100000000L, 100000000L))) // all three stages at ts_us = 100s
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("left-outer interval join emits every provable null row across batches (es14)") {
+  scratchTest("left-outer interval join emits every provable null row across batches (es14)") { scratch =>
     // Two time-split batches + the far-future sentinel: cross-boundary
     // pairs must match through retained join state, and once the sentinel
     // pushes the watermark past every real event, EVERY partnerless real
     // event owes exactly one null row (the sentinel itself stays in
     // state — its match window never closes — and must not appear).
     import org.apache.spark.sql.functions._
-    val tmp = twoHalfReplay("graft_louter", shuffled = true)
+    val tmp = twoHalfReplay(scratch, shuffled = true)
     val stream = EventStream.intervalJoin(
       EventStream.readEvents(spark, tmp.getAbsolutePath), "left_outer")
     val q = stream.writeStream
@@ -255,15 +251,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(want.exists(_._3.isEmpty), "fixture must contain partnerless events")
     assert(want.exists(_._3.nonEmpty), "fixture must contain matched pairs")
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("funnel REPAIRS a cross-batch late event (buffered) and the accumulator reports it") {
+  scratchTest("funnel REPAIRS a cross-batch late event (buffered) and the accumulator reports it") { scratch =>
     // batch A fixes the user's marker at ts=5s; batch B delivers ts=3s.
     // The buffered twin orders the late click BEFORE the view, so the
     // batch e08 answer (fv=5s, no qualifying click) comes out exactly —
     // and the repaired arrival is reported through the accumulator.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_funnel_ooo").toFile
+    val tmp = new java.io.File(scratch.dir("funnel_ooo"))
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
     writeEvents(tmp, Seq((20L, 5 * S, 7L, "view", 0.0, "{}")), "a", t0)
@@ -284,7 +279,6 @@ class StreamingSpec extends AnyFunSuite {
     assert((r.getLong(0), r.get(1), r.get(2), r.get(3)) === ((7L, 5000000L, null, null)),
       "the click ordered before the view must NOT qualify (batch e08 answer)")
     assert(acc.value === 1L, s"late click must be reported as repaired disorder, got ${acc.value}")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("streaming sliding window converges to the batch gold result (e06)") {
@@ -303,10 +297,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("streaming ingestion dedup drops replayed duplicates (exactly-once by event_id)") {
+  scratchTest("streaming ingestion dedup drops replayed duplicates (exactly-once by event_id)") { scratch =>
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // a replayed source: the same events file delivered twice
-    val tmp = Files.createTempDirectory("graft_dup_stream")
+    val tmp = Paths.get(scratch.dir("dup_stream"))
     val src = Files.list(Paths.get(dir)).filter(_.getFileName.toString.startsWith("events"))
       .findFirst().get()
     Files.copy(src, tmp.resolve("events_a.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -426,10 +420,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("streaming as-of signup lookup converges to the batch as-of join (e04) across TWO batches") {
+  scratchTest("streaming as-of signup lookup converges to the batch as-of join (e04) across TWO batches") { scratch =>
     // the carried latest-signup state (a signup in batch A answering an
     // event in batch B) is the thing under test
-    val tmp = twoHalfReplay("graft_asof")
+    val tmp = twoHalfReplay(scratch)
     val stream = EventStream.asofSignup(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("asof_out")
@@ -444,12 +438,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("streaming retention pairs converge to the batch cohort counts (e07) across TWO batches") {
+  scratchTest("streaming retention pairs converge to the batch cohort counts (e07) across TWO batches") { scratch =>
     // the carried cohort + emitted-offset set (a user signing up in
     // batch A and returning in batch B) is the thing under test; each
     // (user, offset) pair emits exactly once, so the downstream count
     // over emitted rows IS e07's countDistinct(user_id)
-    val tmp = twoHalfReplay("graft_ret")
+    val tmp = twoHalfReplay(scratch)
     val stream = EventStream.retention(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("ret_out")
@@ -466,11 +460,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("as-of twin converges under SHUFFLED intra-batch arrival (e04)") {
+  scratchTest("as-of twin converges under SHUFFLED intra-batch arrival (e04)") { scratch =>
     // real micro-batches arrive in arbitrary row order; the twin's
     // in-batch (ts, event_id) sort-merge must make that invisible —
     // converging to the same batch as-of join as the ordered replay
-    val tmp = twoHalfReplay("graft_asof_shuf", shuffled = true)
+    val tmp = twoHalfReplay(scratch, shuffled = true)
     val stream = EventStream.asofSignup(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("asof_shuf_out")
@@ -483,15 +477,14 @@ class StreamingSpec extends AnyFunSuite {
     val want = SparkEntry.queries("e04_asof_last_signup")(spark, dir).collect().map(key).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("funnel twin converges under SHUFFLED intra-batch arrival (e08)") {
+  scratchTest("funnel twin converges under SHUFFLED intra-batch arrival (e08)") { scratch =>
     // the funnel's three stage-ordered passes (all views, then clicks,
     // then purchases, each a min-fold) are what make in-batch row order
     // irrelevant — the shuffled replay is the test that stays red if a
     // future edit sneaks in a single order-dependent pass
-    val tmp = twoHalfReplay("graft_funnel_shuf", shuffled = true)
+    val tmp = twoHalfReplay(scratch, shuffled = true)
     val stream = EventStream.funnel(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("funnel_shuf_out")
@@ -509,14 +502,13 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(key).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("transitions twin converges under SHUFFLED intra-batch arrival (e09)") {
+  scratchTest("transitions twin converges under SHUFFLED intra-batch arrival (e09)") { scratch =>
     // the twin's in-batch (ts, event_id) sort-merge is what makes row
     // order inside a micro-batch irrelevant; only CROSS-batch disorder
     // (counted by the accumulator) can diverge
-    val tmp = twoHalfReplay("graft_trans_shuf", shuffled = true)
+    val tmp = twoHalfReplay(scratch, shuffled = true)
     val stream = EventStream.transitions(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("trans_shuf_out")
@@ -531,13 +523,12 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("retention twin converges under SHUFFLED intra-batch arrival (e07)") {
+  scratchTest("retention twin converges under SHUFFLED intra-batch arrival (e07)") { scratch =>
     // the cohort is fixed at the (ts, event_id)-minimum of the user's
     // first batch — the in-batch sort makes that order-independent
-    val tmp = twoHalfReplay("graft_ret_shuf", shuffled = true)
+    val tmp = twoHalfReplay(scratch, shuffled = true)
     val stream = EventStream.retention(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("ret_shuf_out")
@@ -552,7 +543,6 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   // ---- shuffled ACROSS batches: the judge-grade disorder tests --------
@@ -562,8 +552,8 @@ class StreamingSpec extends AnyFunSuite {
   // buffered twins must converge EXACTLY to their batch queries — the
   // round-7 design, which processed arrival order directly, could not.
 
-  test("as-of twin converges under arrival shuffled ACROSS batches (e04)") {
-    val tmp = twoHalfReplay("graft_asof_across", shuffled = true, across = true)
+  scratchTest("as-of twin converges under arrival shuffled ACROSS batches (e04)") { scratch =>
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
     val stream = EventStream.asofSignup(
       spark, EventStream.readEvents(spark, tmp.getAbsolutePath), None, "35 days")
     val q = stream.writeStream
@@ -577,11 +567,10 @@ class StreamingSpec extends AnyFunSuite {
     val want = SparkEntry.queries("e04_asof_last_signup")(spark, dir).collect().map(key).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("funnel twin converges under arrival shuffled ACROSS batches (e08)") {
-    val tmp = twoHalfReplay("graft_funnel_across", shuffled = true, across = true)
+  scratchTest("funnel twin converges under arrival shuffled ACROSS batches (e08)") { scratch =>
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
     val stream = EventStream.funnel(
       spark, EventStream.readEvents(spark, tmp.getAbsolutePath), None, "35 days")
     val q = stream.writeStream
@@ -600,11 +589,10 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(key).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("transitions twin converges under arrival shuffled ACROSS batches (e09)") {
-    val tmp = twoHalfReplay("graft_trans_across", shuffled = true, across = true)
+  scratchTest("transitions twin converges under arrival shuffled ACROSS batches (e09)") { scratch =>
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
     val stream = EventStream.transitions(
       spark, EventStream.readEvents(spark, tmp.getAbsolutePath), None, "35 days")
     val q = stream.writeStream
@@ -620,11 +608,10 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("retention twin converges under arrival shuffled ACROSS batches (e07)") {
-    val tmp = twoHalfReplay("graft_ret_across", shuffled = true, across = true)
+  scratchTest("retention twin converges under arrival shuffled ACROSS batches (e07)") { scratch =>
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
     val stream = EventStream.retention(
       spark, EventStream.readEvents(spark, tmp.getAbsolutePath), None, "35 days")
     val q = stream.writeStream
@@ -640,16 +627,15 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(want.nonEmpty)
     assert(got === want)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("buffered twin state drains to ONE row per user — never event-proportional") {
+  scratchTest("buffered twin state drains to ONE row per user — never event-proportional") { scratch =>
     // the harness's state = core + pending buffer; once the sentinel
     // advances the watermark past every real event, every buffer must
     // have drained and the state store must hold exactly one row per
     // user key (plus the sentinel user's own) — a leak that retained
     // buffered events would scale state with the STREAM, not the users
-    val tmp = twoHalfReplay("graft_state_bound")
+    val tmp = twoHalfReplay(scratch)
     val stream = EventStream.asofSignup(spark, EventStream.readEvents(spark, tmp.getAbsolutePath))
     val q = stream.writeStream
       .format("memory").queryName("state_bound_out")
@@ -667,17 +653,16 @@ class StreamingSpec extends AnyFunSuite {
       assert(stateRows.exists(_ < nEvents),
         "state must not scale with the event count")
     } finally q.stop()
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("an arrival BEYOND the watermark is dropped, never reordered into the finalized prefix") {
+  scratchTest("an arrival BEYOND the watermark is dropped, never reordered into the finalized prefix") { scratch =>
     // Batch A: view id1 at ts=1000s. Batch B: a far-future event pushes
     // the watermark past 1000s (everything finalizes). Batch C: view id2
     // at ts=500s — BELOW the watermark. The finalized prefix is already
     // emitted, so the only correct options are reorder (impossible) or
     // drop; the harness must drop it exactly as a built-in streaming
     // aggregation drops late rows, and id2 must not appear in the output.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wmdrop").toFile
+    val tmp = new java.io.File(scratch.dir("wmdrop"))
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
     writeEvents(tmp, Seq((1L, 1000 * S, 7L, "view", 0.0, "{}")), "a", t0)
@@ -699,17 +684,16 @@ class StreamingSpec extends AnyFunSuite {
     // — the row reaches the harness), so the harness's own drop path
     // counts it into the disorder accumulator
     assert(acc.value === 1L, s"the dropped event must be counted, got ${acc.value}")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("late cross-batch signup is ordered into place, never regresses the carried as-of state") {
+  scratchTest("late cross-batch signup is ordered into place, never regresses the carried as-of state") { scratch =>
     // Batch A: signup s20 at ts=5s, event e30 at ts=6s (matches s20).
     // Batch B: LATE signup s10 at ts=2s, then event e40 at ts=7s.
     // The buffered twin finalizes in event-time order — s10, s20, e30,
     // e40 — so the late signup matches only its own row and e40 still
     // sees s20: the exact batch as-of answer, with the repaired arrival
     // reported through the accumulator.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof_late").toFile
+    val tmp = new java.io.File(scratch.dir("asof_late"))
     val S = 1000000000L // 1 s in ns (raw file ts unit)
     val t0 = System.currentTimeMillis() - 60000
     writeEvents(tmp, Seq(
@@ -736,16 +720,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(got(40L) === Some(20L),
       s"event after the late signup must STILL match s20 (state regressed): $got")
     assert(acc.value === 1L, s"the late signup must be counted as disorder, got ${acc.value}")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   /** A 4-way md5-interleaved rewrite of the events table — each file
     * spans the full time range, so any per-file batching would make
     * most rows late. Written as raw ns longs (the plain-int64 leg of
-    * the ts seam). Caller deletes the returned dir.
+    * the ts seam).
     */
-  private def interleavedSplit(): String = {
-    val splitDir = java.nio.file.Files.createTempDirectory("graft-gatesplit").toString
+  private def interleavedSplit(scratch: StreamFiles.Scratch): String = {
+    val splitDir = scratch.dir("gatesplit")
     graft.core.Tables.events(spark, dir)
       .withColumn("ts", expr("unix_micros(ts) * 1000")) // raw ns longs
       .repartition(4, md5(col("event_id").cast("string"))) // interleaved by hash, not time
@@ -756,7 +739,7 @@ class StreamingSpec extends AnyFunSuite {
     splitDir
   }
 
-  test("streaming-gate reader: finalized output is layout-independent (4 interleaved files)") {
+  scratchTest("streaming-gate reader: finalized output is layout-independent (4 interleaved files)") { scratch =>
     // The es* gate oracles predict the finalized set from the DATA alone.
     // With per-file micro-batches that would be wrong: a time-interleaved
     // multi-file layout makes rows in later batches late against the
@@ -765,32 +748,30 @@ class StreamingSpec extends AnyFunSuite {
     // this pins that a 4-way md5-interleaved split — each file spanning
     // the full time range — still finalizes exactly the closed-window
     // set a single-file layout produces.
-    val splitDir = interleavedSplit()
-    try {
-      val stream = EventStream.tumblingAgg(
-        EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None))
-      val q = stream.writeStream
-        .format("memory").queryName("gate_layout_out")
-        .outputMode("append")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val got = spark.table("gate_layout_out")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      // gold: the batch tumbling agg restricted to windows the final
-      // watermark (max ts ms - 2h) closed — the es02 oracle's predicate
-      val ev = graft.core.Tables.events(spark, dir)
-      val wmUs = (ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) / 1000
-        - 7200000L) * 1000L
-      val want = SparkEntry.queries("e02_tumbling_window")(spark, dir)
-        .filter(col("bucket_us") + 3600000000L <= wmUs)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(want.nonEmpty)
-      assert(got === want,
-        "multi-file interleaved layout must finalize the same closed-window set")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(splitDir))
+    val splitDir = interleavedSplit(scratch)
+    val stream = EventStream.tumblingAgg(
+      EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None))
+    val q = stream.writeStream
+      .format("memory").queryName("gate_layout_out")
+      .outputMode("append")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("gate_layout_out")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+    // gold: the batch tumbling agg restricted to windows the final
+    // watermark (max ts ms - 2h) closed — the es02 oracle's predicate
+    val ev = graft.core.Tables.events(spark, dir)
+    val wmUs = (ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) / 1000
+      - 7200000L) * 1000L
+    val want = SparkEntry.queries("e02_tumbling_window")(spark, dir)
+      .filter(col("bucket_us") + 3600000000L <= wmUs)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(want.nonEmpty)
+    assert(got === want,
+      "multi-file interleaved layout must finalize the same closed-window set")
   }
 
-  test("gate multiset outputs are layout-independent (es05 pairs; es08 one row per user)") {
+  scratchTest("gate multiset outputs are layout-independent (es05 pairs; es08 one row per user)") { scratch =>
     // The two riskiest new gate assumptions, pinned under the 4-file
     // interleaved layout:
     //  - es05 claims the stream-stream join's emitted pair MULTISET is
@@ -804,99 +785,95 @@ class StreamingSpec extends AnyFunSuite {
     //    second chunk would emit duplicate per-user rows — the gate's
     //    multiset hash would break.
     import org.apache.spark.sql.expressions.Window
-    val splitDir = interleavedSplit()
-    try {
-      def runGate(name: String, out: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        try spark.catalog.dropTempView(name) catch { case _: Throwable => () }
-        val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
-      }
+    val splitDir = interleavedSplit(scratch)
+    def runGate(name: String, out: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      try spark.catalog.dropTempView(name) catch { case _: Throwable => () }
+      val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name)
+    }
 
-      // es05: emitted pair multiset == batch interval self-join
-      val gotPairs = runGate("layout_es05", EventStream.intervalJoin(
-        EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None), "inner"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      val e = graft.core.Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
-      val winUs = 5L * 60 * 1000 * 1000
-      val wantPairs = e.as("a").join(e.select(col("user_id").as("ub"),
-          col("event_id").as("oid"), col("ts_us").as("tb")),
-          col("user_id") === col("ub") && col("event_id") =!= col("oid") &&
-            col("tb") >= col("ts_us") - winUs && col("tb") <= col("ts_us") + winUs)
-        .select(col("user_id"), col("event_id"), col("oid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      assert(wantPairs.nonEmpty)
-      assert(gotPairs === wantPairs,
-        "stream-stream join must emit exactly the batch pair multiset under a multi-file layout")
+    // es05: emitted pair multiset == batch interval self-join
+    val gotPairs = runGate("layout_es05", EventStream.intervalJoin(
+      EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None), "inner"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val e = graft.core.Tables.events(spark, dir)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
+    val winUs = 5L * 60 * 1000 * 1000
+    val wantPairs = e.as("a").join(e.select(col("user_id").as("ub"),
+        col("event_id").as("oid"), col("ts_us").as("tb")),
+        col("user_id") === col("ub") && col("event_id") =!= col("oid") &&
+          col("tb") >= col("ts_us") - winUs && col("tb") <= col("ts_us") + winUs)
+      .select(col("user_id"), col("event_id"), col("oid"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(wantPairs.nonEmpty)
+    assert(gotPairs === wantPairs,
+      "stream-stream join must emit exactly the batch pair multiset under a multi-file layout")
 
-      // es08: one row per user, equal to the batch funnel over the
-      // finalized (ts_us < wm) prefix
-      def tup(r: org.apache.spark.sql.Row): (Long, Long, Long, Long) = {
-        def at(i: Int) = if (r.isNullAt(i)) Long.MinValue else r.getLong(i)
-        (r.getLong(0), at(1), at(2), at(3))
-      }
-      val got = runGate("layout_es08", EventStream.funnel(spark,
-        EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None)).toDF())
-        .collect().map(tup).sorted.toSeq
-      assert(got.map(_._1).distinct.size === got.size,
-        "single-batch ingest must finalize each user in one chunk — one row per user")
-      val ev = graft.core.Tables.events(spark, dir)
-      val wmUs = (ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) / 1000
-        - 7200000L) * 1000L
-      val w = Window.partitionBy(col("user_id"))
-      val want = ev.select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-        .filter(col("ts_us") < wmUs)
-        .withColumn("fv", min(when(col("event_type") === "view", col("ts_us"))).over(w))
-        .withColumn("fc", min(when(col("event_type") === "click" && col("ts_us") >= col("fv"),
-          col("ts_us"))).over(w))
-        .withColumn("fp", min(when(col("event_type") === "purchase" && col("ts_us") >= col("fc"),
-          col("ts_us"))).over(w))
-        .groupBy(col("user_id"))
-        .agg(min(col("fv")).as("fv"), min(col("fc")).as("fc"), min(col("fp")).as("fp"))
-        .collect().map(tup).sorted.toSeq
-      assert(want.nonEmpty)
-      assert(got === want,
-        "finalized funnel rows must equal the batch funnel over the finalized prefix")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(splitDir))
+    // es08: one row per user, equal to the batch funnel over the
+    // finalized (ts_us < wm) prefix
+    def tup(r: org.apache.spark.sql.Row): (Long, Long, Long, Long) = {
+      def at(i: Int) = if (r.isNullAt(i)) Long.MinValue else r.getLong(i)
+      (r.getLong(0), at(1), at(2), at(3))
+    }
+    val got = runGate("layout_es08", EventStream.funnel(spark,
+      EventStream.readEventsWith(spark, splitDir, maxFilesPerTrigger = None)).toDF())
+      .collect().map(tup).sorted.toSeq
+    assert(got.map(_._1).distinct.size === got.size,
+      "single-batch ingest must finalize each user in one chunk — one row per user")
+    val ev = graft.core.Tables.events(spark, dir)
+    val wmUs = (ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) / 1000
+      - 7200000L) * 1000L
+    val w = Window.partitionBy(col("user_id"))
+    val want = ev.select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
+      .filter(col("ts_us") < wmUs)
+      .withColumn("fv", min(when(col("event_type") === "view", col("ts_us"))).over(w))
+      .withColumn("fc", min(when(col("event_type") === "click" && col("ts_us") >= col("fv"),
+        col("ts_us"))).over(w))
+      .withColumn("fp", min(when(col("event_type") === "purchase" && col("ts_us") >= col("fc"),
+        col("ts_us"))).over(w))
+      .groupBy(col("user_id"))
+      .agg(min(col("fv")).as("fv"), min(col("fc")).as("fc"), min(col("fp")).as("fp"))
+      .collect().map(tup).sorted.toSeq
+    assert(want.nonEmpty)
+    assert(got === want,
+      "finalized funnel rows must equal the batch funnel over the finalized prefix")
   }
 
-  test("daily quota (es17 twin) converges across shuffled batches; counts conserve") {
+  scratchTest("daily quota (es17 twin) converges across shuffled batches; counts conserve") { scratch =>
     // Cross-batch accumulation is the thing under test: the same
     // (user, day)'s events split across batches must land in ONE
     // counter and emit ONE row. The 45-day delay keeps every real row
     // inside the watermark under the md5-across split (the gate runs
     // delay 0 with single-batch ingest instead), while the sentinel
     // still closes every real day.
-    val tmp = twoHalfReplay("graft_quota", shuffled = true, across = true)
-    try {
-      val stream = EventStream.dailyQuota(spark,
-        EventStream.readEvents(spark, tmp.getAbsolutePath), delay = "45 days")
-      val q = stream.toDF().writeStream
-        .format("memory").queryName("quota_out").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val got = spark.table("quota_out")
-        .filter(col("user_id") =!= -1L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      assert(got.nonEmpty)
-      // exactly one row per (user, day); conservation and the cap hold
-      assert(got.map(t => (t._1, t._2)).distinct.length === got.length)
-      for ((u, d, seen, kept, sup) <- got) {
-        assert(kept + sup === seen, s"($u,$d): kept+suppressed must equal seen")
-        assert(kept <= EventStream.QuotaPerDay && kept >= math.min(seen, EventStream.QuotaPerDay))
-      }
-      // the emitted multiset equals the batch per-(user, day) counts
-      val want = graft.core.Tables.events(spark, dir)
-        .groupBy(col("user_id"),
-          graft.queries.EventsQueries.epochDay(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got.map(t => (t._1, t._2, t._3)).toSet === want,
-        "every real (user, day) must emit with its full cross-batch count")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
+    val stream = EventStream.dailyQuota(spark,
+      EventStream.readEvents(spark, tmp.getAbsolutePath), delay = "45 days")
+    val q = stream.toDF().writeStream
+      .format("memory").queryName("quota_out").outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("quota_out")
+      .filter(col("user_id") =!= -1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    assert(got.nonEmpty)
+    // exactly one row per (user, day); conservation and the cap hold
+    assert(got.map(t => (t._1, t._2)).distinct.length === got.length)
+    for ((u, d, seen, kept, sup) <- got) {
+      assert(kept + sup === seen, s"($u,$d): kept+suppressed must equal seen")
+      assert(kept <= EventStream.QuotaPerDay && kept >= math.min(seen, EventStream.QuotaPerDay))
+    }
+    // the emitted multiset equals the batch per-(user, day) counts
+    val want = graft.core.Tables.events(spark, dir)
+      .groupBy(col("user_id"),
+        graft.queries.EventsQueries.epochDay(col("ts")).as("day"))
+      .agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got.map(t => (t._1, t._2, t._3)).toSet === want,
+      "every real (user, day) must emit with its full cross-batch count")
   }
 
-  test("RocksDB state-store matrix: sessions/retention/quota twins are backend-independent") {
+  scratchTest("RocksDB state-store matrix: sessions/retention/quota twins are backend-independent") { scratch =>
     // The state backend a beyond-heap deployment runs: RocksDB keeps
     // state on local disk with only the working set in memory, where
     // the default (HDFS-backed) provider holds every state row in
@@ -924,91 +901,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(sessDefault.nonEmpty)
     assert(sessRocks === sessDefault, "sessionizer output changed under RocksDB")
 
-    val tmp = twoHalfReplay("graft_rocksdb_matrix", shuffled = true, across = true)
-    try {
-      // es07 retention: shuffled-across replay, gold = batch cohorts
-      // RetOut rows are (user_id, cohort_day, day_offset), one per
-      // (user, offset) — e07's final aggregate is a count over them
-      def retKey(rows: Set[Seq[Any]]): Set[(Long, Long, Long)] = rows
-        .groupBy(r => (r(1).asInstanceOf[Long], r(2).asInstanceOf[Long]))
-        .map { case ((c, o), g) => (c, o, g.size.toLong) }.toSet
-      val retRocks = run(rocks, "rx_ret_r", EventStream.retention(
-        rocks, EventStream.readEvents(rocks, tmp.getAbsolutePath), None, "35 days").toDF())
-      val retWant = SparkEntry.queries("e07_retention_cohorts")(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(retWant.nonEmpty)
-      assert(retKey(retRocks) === retWant, "retention diverged from batch gold under RocksDB")
+    val tmp = twoHalfReplay(scratch, shuffled = true, across = true)
+    // es07 retention: shuffled-across replay, gold = batch cohorts
+    // RetOut rows are (user_id, cohort_day, day_offset), one per
+    // (user, offset) — e07's final aggregate is a count over them
+    def retKey(rows: Set[Seq[Any]]): Set[(Long, Long, Long)] = rows
+      .groupBy(r => (r(1).asInstanceOf[Long], r(2).asInstanceOf[Long]))
+      .map { case ((c, o), g) => (c, o, g.size.toLong) }.toSet
+    val retRocks = run(rocks, "rx_ret_r", EventStream.retention(
+      rocks, EventStream.readEvents(rocks, tmp.getAbsolutePath), None, "35 days").toDF())
+    val retWant = SparkEntry.queries("e07_retention_cohorts")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(retWant.nonEmpty)
+    assert(retKey(retRocks) === retWant, "retention diverged from batch gold under RocksDB")
 
-      // es17 quota: shuffled-across replay, gold = batch (user, day) counts
-      val quotaRocks = run(rocks, "rx_quota_r", EventStream.dailyQuota(rocks,
-        EventStream.readEvents(rocks, tmp.getAbsolutePath), delay = "45 days").toDF())
-      val quotaGot = quotaRocks.filter(_(0).asInstanceOf[Long] != -1L)
-        .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long], r(2).asInstanceOf[Long]))
-      val quotaWant = graft.core.Tables.events(spark, dir)
-        .groupBy(col("user_id"),
-          graft.queries.EventsQueries.epochDay(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(quotaGot.size === quotaGot.toSet.size, "duplicate (user, day) rows under RocksDB")
-      assert(quotaGot.toSet === quotaWant, "quota counts diverged from batch gold under RocksDB")
+    // es17 quota: shuffled-across replay, gold = batch (user, day) counts
+    val quotaRocks = run(rocks, "rx_quota_r", EventStream.dailyQuota(rocks,
+      EventStream.readEvents(rocks, tmp.getAbsolutePath), delay = "45 days").toDF())
+    val quotaGot = quotaRocks.filter(_(0).asInstanceOf[Long] != -1L)
+      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long], r(2).asInstanceOf[Long]))
+    val quotaWant = graft.core.Tables.events(spark, dir)
+      .groupBy(col("user_id"),
+        graft.queries.EventsQueries.epochDay(col("ts")).as("day"))
+      .agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(quotaGot.size === quotaGot.toSet.size, "duplicate (user, day) rows under RocksDB")
+    assert(quotaGot.toSet === quotaWant, "quota counts diverged from batch gold under RocksDB")
 
-      // es04/es08: the WATERMARK-BUFFERED twins — the heaviest per-key
-      // state in the library (each key holds a pending-event buffer
-      // until the watermark passes, not just a scalar), so they are the
-      // twins a beyond-heap RocksDB deployment actually needs; both
-      // must converge to their batch golds with state on disk
-      // (round-12 verdict #6). Same shuffled-across replay input.
-      val asofRocks = run(rocks, "rx_asof_r", EventStream.asofSignup(
-        rocks, EventStream.readEvents(rocks, tmp.getAbsolutePath), None, "35 days").toDF())
-      def asofKey(r: Seq[Any]) = (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long], Option(r(2)))
-      val asofWant = SparkEntry.queries("e04_asof_last_signup")(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSet
-      assert(asofWant.nonEmpty)
-      assert(asofRocks.map(r => asofKey(r.toSeq)) === asofWant,
-        "as-of join diverged from batch gold under RocksDB")
+    // es04/es08: the WATERMARK-BUFFERED twins — the heaviest per-key
+    // state in the library (each key holds a pending-event buffer
+    // until the watermark passes, not just a scalar), so they are the
+    // twins a beyond-heap RocksDB deployment actually needs; both
+    // must converge to their batch golds with state on disk
+    // (round-12 verdict #6). Same shuffled-across replay input.
+    val asofRocks = run(rocks, "rx_asof_r", EventStream.asofSignup(
+      rocks, EventStream.readEvents(rocks, tmp.getAbsolutePath), None, "35 days").toDF())
+    def asofKey(r: Seq[Any]) = (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long], Option(r(2)))
+    val asofWant = SparkEntry.queries("e04_asof_last_signup")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSet
+    assert(asofWant.nonEmpty)
+    assert(asofRocks.map(r => asofKey(r.toSeq)) === asofWant,
+      "as-of join diverged from batch gold under RocksDB")
 
-      val funnelRocks = run(rocks, "rx_funnel_r", EventStream.funnel(
-        rocks, EventStream.readEvents(rocks, tmp.getAbsolutePath), None, "35 days").toDF())
-      val funnelGot = funnelRocks.toSeq
-        .groupBy(_(0).asInstanceOf[Long])
-        .map { case (u, rs) =>
-          def m(i: Int) = rs.flatMap(r => Option(r(i)).map(_.asInstanceOf[Long])) match {
-            case Nil => None; case xs => Some(xs.min)
-          }
-          (u, m(1), m(2), m(3))
-        }.toSet
-      val funnelWant = SparkEntry.queries("e08_funnel")(spark, dir)
-        .collect().map(r => (r.getLong(0),
-          Option(r.get(1)).map(_.asInstanceOf[Long]),
-          Option(r.get(2)).map(_.asInstanceOf[Long]),
-          Option(r.get(3)).map(_.asInstanceOf[Long]))).toSet
-      assert(funnelWant.nonEmpty)
-      assert(funnelGot === funnelWant, "funnel diverged from batch gold under RocksDB")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    val funnelRocks = run(rocks, "rx_funnel_r", EventStream.funnel(
+      rocks, EventStream.readEvents(rocks, tmp.getAbsolutePath), None, "35 days").toDF())
+    val funnelGot = funnelRocks.toSeq
+      .groupBy(_(0).asInstanceOf[Long])
+      .map { case (u, rs) =>
+        def m(i: Int) = rs.flatMap(r => Option(r(i)).map(_.asInstanceOf[Long])) match {
+          case Nil => None; case xs => Some(xs.min)
+        }
+        (u, m(1), m(2), m(3))
+      }.toSet
+    val funnelWant = SparkEntry.queries("e08_funnel")(spark, dir)
+      .collect().map(r => (r.getLong(0),
+        Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Long]),
+        Option(r.get(3)).map(_.asInstanceOf[Long]))).toSet
+    assert(funnelWant.nonEmpty)
+    assert(funnelGot === funnelWant, "funnel diverged from batch gold under RocksDB")
   }
 
-  test("stream gates restore the session's shuffle partitions after a failing and a normal run") {
+  scratchTest("stream gates restore the session's shuffle partitions after a failing and a normal run") { scratch =>
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
     assert(prior !== "8", "the restore check needs a session value other than the stream's 8")
-    val base = java.nio.file.Files.createTempDirectory("graft_partsrestore").toFile
-    try {
-      var seen: Option[String] = None
-      intercept[Exception] {
-        graft.streaming.StreamingGate.runDocBatchStream(spark,
-          graft.streaming.StreamingGate.readDocuments(spark, dir),
-          new java.io.File(base, "out").getAbsolutePath,
-          new java.io.File(base, "ckpt").getAbsolutePath,
-          Seq("doc_id")) { b =>
-          seen = Some(b.sparkSession.conf.get(key))
-          throw new IllegalStateException("perBatch failure")
-        }
+    val base = new java.io.File(scratch.dir("partsrestore"))
+    var seen: Option[String] = None
+    intercept[Exception] {
+      graft.streaming.StreamingGate.runDocBatchStream(spark,
+        graft.streaming.StreamingGate.readDocuments(spark, dir),
+        new java.io.File(base, "out").getAbsolutePath,
+        new java.io.File(base, "ckpt").getAbsolutePath,
+        Seq("doc_id")) { b =>
+        seen = Some(b.sparkSession.conf.get(key))
+        throw new IllegalStateException("perBatch failure")
       }
-      assert(seen === Some("8"), "the stream must run under the stream partition count")
-      assert(spark.conf.get(key) === prior, "partitions not restored after a failing batch")
-      assert(SparkEntry.queries("es02_tumbling_closed")(spark, dir).count() > 0)
-      assert(spark.conf.get(key) === prior, "partitions not restored after a gate query")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+    }
+    assert(seen === Some("8"), "the stream must run under the stream partition count")
+    assert(spark.conf.get(key) === prior, "partitions not restored after a failing batch")
+    assert(SparkEntry.queries("es02_tumbling_closed")(spark, dir).count() > 0)
+    assert(spark.conf.get(key) === prior, "partitions not restored after a gate query")
   }
 
   test("es22 run twice in one session: the second run leaves the first's frame readable") {
@@ -1029,7 +1002,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally graft.core.Sessions.sweepPersistedState(spark)
   }
 
-  test("local-file writes, checkpoint commits and renames fork no process (jdk.ProcessStart)") {
+  scratchTest("local-file writes, checkpoint commits and renames fork no process (jdk.ProcessStart)") { scratch =>
     import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
     import org.apache.hadoop.fs.{FileContext, Options, Path}
     import scala.jdk.CollectionConverters._
@@ -1042,7 +1015,7 @@ class StreamingSpec extends AnyFunSuite {
     val spawns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val flushes = new java.util.concurrent.atomic.AtomicInteger()
     val rs = new RecordingStream()
-    val base = java.nio.file.Files.createTempDirectory("graft-nospawn")
+    val base = java.nio.file.Paths.get(scratch.dir("nospawn"))
     try {
       rs.enable("jdk.ProcessStart").withStackTrace()
       rs.onEvent("jdk.ProcessStart", e => if (viaShell(e)) spawns.add(e.getString("command")))
@@ -1063,10 +1036,7 @@ class StreamingSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (flushes.get < seen + 2 && System.nanoTime() < deadline) Thread.sleep(50)
       assert(flushes.get >= seen + 2, "the JFR stream never flushed")
-    } finally {
-      rs.close()
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
+    } finally rs.close()
     assert(spawns.isEmpty, s"${spawns.size} forked, e.g. ${spawns.asScala.take(4).mkString("; ")}")
   }
 }

@@ -14,14 +14,15 @@ import java.nio.file.{Files, Paths}
   *    asserted here for the FULL SparkEntry registry at sf0.001, so a
   *    key can never silently vanish from the gate again.
   */
-class VerifyGateSpec extends AnyFunSuite {
+class VerifyGateSpec extends AnyFunSuite with ScratchTests {
   private lazy val spark = SparkTestSession.spark
+  protected val scratchPrefix = "graft-gate"
 
   private def dumpDirs(out: String): Set[String] =
     new File(out).listFiles().filter(_.isDirectory).map(_.getName).toSet
 
-  test("planted failure lands in _ERRORS.json; healthy query still dumps") {
-    val out = Files.createTempDirectory("graft_gate_planted").toString
+  scratchTest("planted failure lands in _ERRORS.json; healthy query still dumps") { tmp =>
+    val out = tmp.dir("planted")
     val ok: (SparkSession, String) => DataFrame =
       (s, _) => { import s.implicits._; Seq((1, "a"), (2, "b")).toDF("k", "v") }
     val boom: (SparkSession, String) => DataFrame =
@@ -38,8 +39,8 @@ class VerifyGateSpec extends AnyFunSuite {
     assert(dumpDirs(out) ++ errors.keySet === Set("gate_ok", "gate_boom"))
   }
 
-  test("full registry Verify run at sf0.001: every queries key dumps, zero errors") {
-    val out = Files.createTempDirectory("graft_gate_full").toString
+  scratchTest("full registry Verify run at sf0.001: every queries key dumps, zero errors") { tmp =>
+    val out = tmp.dir("full")
     val errors = Verify.run("/root/testdata/sf0.001", out,
       SparkEntry.queries.toSeq.sortBy(_._1), cpus = "4")
     assert(errors === Map.empty[String, String],
