@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Per-round benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR — one cold run, then THREE steady-state runs whose
   * MEDIAN is the reported number — writes the full per-query JSON record
@@ -164,7 +166,14 @@ object Bench {
     *    many expressions/plans existed before this query, not what this
     *    plan does). plan_ids are stripped; exprIds are RENUMBERED by
     *    first appearance, which normalizes the counter offset while
-    *    keeping distinct columns distinct.
+    *    keeping distinct columns distinct;
+    *  - two more JVM-global counters reach the canonicalized plan: the
+    *    id of a typed `lambdavariable(...)` (the MapObjects loop variable
+    *    an `as[T]` encoder builds; s01/s12/s18/s19/s21/s31/q36) and the
+    *    id of a CTE (`CTERelationDef`/`CTERelationRef`/`UnionLoop`/
+    *    `UnionLoopRef`; q40 counts its own earlier runs). Both are
+    *    renumbered by first appearance the same way, each in its own
+    *    numbering.
     * The fingerprint must track plan STRUCTURE only.
     */
   private[graft] def normalize(plan: String): String = {
@@ -174,10 +183,15 @@ object Bench {
       .replaceAll("keys: \\[[^\\]]*\\], values: \\[[^\\]]*\\]",
         "keys: [...], values: [...]")
       .replaceAll(", \\[plan_id=\\d+\\]", "")
-    val idRe = "#(\\d+)".r
-    val renumber = scala.collection.mutable.HashMap[String, Int]()
-    idRe.replaceAllIn(s,
-      m => "#" + renumber.getOrElseUpdate(m.group(1), renumber.size))
+    // (prefix)(id)(suffix) patterns, each renumbered by first appearance
+    Seq("(#)(\\d+)()",
+        "(lambdavariable\\((?:[^()]|\\([^()]*\\))*?, (?:true|false), )(-?\\d+)(\\))",
+        "(\\b(?:CTERelationDef|CTERelationRef|UnionLoopRef|UnionLoop) )(\\d+)(\\b)")
+      .foldLeft(s) { (acc, re) =>
+        val renumber = scala.collection.mutable.HashMap[String, Int]()
+        re.r.replaceAllIn(acc, m => scala.util.matching.Regex.quoteReplacement(
+          m.group(1) + renumber.getOrElseUpdate(m.group(2), renumber.size) + m.group(3)))
+      }
   }
 
   private[graft] def fpOf(plan: String): String =
@@ -206,7 +220,7 @@ object Bench {
           b.result()
         }.getOrElse(Map.empty[String, A])
       (toMap("queries", _.asDouble(-1.0)), toMap("plan_fp", _.asText))
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
+    } catch { case NonFatal(_) => (Map.empty, Map.empty) }
 
   /** A mover is a >2× AND >1 s delta vs the local pin — the one rule
     * the delta table, the regression tripwire, and the sustained-
@@ -349,7 +363,7 @@ object Bench {
       // only SLOWDOWNS regress; an fp:diff speedup is a plan improvement
       // awaiting a reference refresh, not a failure
       (json, movers.collect { case (n, w, r, _, "diff") if w > r => n })
-    } catch { case _: Throwable => ("[]", Nil) }
+    } catch { case NonFatal(_) => ("[]", Nil) }
   }
 
   /** Render the (full, compact) summary JSON lines from the per-query
@@ -503,7 +517,7 @@ object Bench {
     def loadAvg(): Double =
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     // Fingerprint rule lives on the object (planFp) so its normalization
     // is unit-testable; computed from the LAST measured run's DataFrame —
     // rebuilding via fn() would EXECUTE the iterative CC queries a fifth
@@ -574,7 +588,7 @@ object Bench {
       val warm = combineWarm(warmSamples)
       val fp =
         try { if (lastDf != null) planFp(lastDf) else "" }
-        catch { case _: Throwable => "" }
+        catch { case NonFatal(_) => "" }
       // diagnostic: SPARK_GRAFT_FP_DUMP_DIR=<dir> writes each query's
       // NORMALIZED plan text (the exact string planFp hashes) so two
       // runs' flapping fingerprints can be text-diffed (round 15)
@@ -586,7 +600,7 @@ object Bench {
               java.nio.file.Paths.get(d, s"$name.txt"),
               normalize(fpPlan(lastDf).toString))
           }
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
       }
       name -> QRec(warm, cold, warmSamples, load, fp, suspect, compiles)
     }
@@ -634,7 +648,7 @@ object Bench {
     // JSON lines.
     spark.stop()
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] could not write $out: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] could not write $out: $e") }
     println(full)
     println(compact)
     Console.out.flush()

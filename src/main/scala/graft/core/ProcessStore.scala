@@ -32,7 +32,7 @@ import scala.util.control.NonFatal
   */
 object ProcessStore {
 
-  private lazy val base: java.io.File = {
+  private[graft] lazy val base: java.io.File = {
     val f = java.nio.file.Files.createTempDirectory("graft_store").toFile
     // deleteOnExit is a no-op on non-empty directories — a recursive
     // shutdown hook is what actually reclaims the store

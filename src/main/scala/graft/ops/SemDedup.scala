@@ -356,7 +356,7 @@ object SemDedup extends QueryModule {
 
   private def sqlSim(av: String, bv: String, an: String, bn: String) =
     s"""CASE WHEN $an * $bn > 0
-       |  THEN list_sum(list_transform(range(1, ${Similarity.Dim + 1}), i -> $av[i] * $bv[i])) / ($an * $bn)
+       |  THEN ${Similarity.sqlDot(av, bv)} / ($an * $bn)
        |  ELSE -1e308 END""".stripMargin
 
   /** Full structural mirror: same corpus-scaled K and ceil(sqrt(K))

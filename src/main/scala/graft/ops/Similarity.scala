@@ -7,35 +7,34 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Similarity search over the `embeddings` table (64-dim float vectors).
+/** Similarity search over the `embeddings` table (64-dim float vectors):
+  * exact and approximate top-k (s01/s03/s06/s08/s09), near-dup pairs
+  * (s02/s05/s15), k-means training and index audits (s10–s17), filtered,
+  * tombstone-aware and trained-index search (s18–s22, s28/s29), the
+  * serving and index-artifact lifecycle (s23, s24, s30–s36) and hybrid
+  * retrieval (s25–s27).
   *
-  *   s01: brute-force cosine top-k — the exact baseline. O(n²) dot
-  *        products via crossJoin; correct at any scale where one side
-  *        broadcasts (a query batch against a corpus). For corpus x corpus
-  *        at 100 TB, use the s03/s05 LSH paths.
-  *   s02: cosine near-duplicate pairs above a threshold (embedding-space
-  *        dedup) — the exact O(n²) baseline for s05.
-  *   s03: random-hyperplane LSH (sign-bit sketch) bucketed candidate
-  *        generation + exact re-scoring, top-k — the approximate scale
-  *        path for knn.
-  *   s05: the same bucketed machinery with threshold verification — the
-  *        scale path for s02's near-dup use-case (the one op the round-1
-  *        verdict flagged as missing its 100 TB variant).
+  * The searches are composed from five kernels, one implementation each
+  * (the "search kernels" section): [[queryBatch]], [[cellCandidates]],
+  * [[scoreTopK]], [[exactTopK]] and [[recall]]. docs/QUERIES.md lists
+  * which kernels each query composes.
   *
   * Determinism: vectors are cast float→double up front; dot/norm are
   * sequential left-fold aggregates mirrored exactly in the DuckDB oracle,
   * so similarity values are bit-identical (docs/DETERMINISM.md). The
-  * hyperplanes are md5-derived so BOTH engines can rebuild them exactly —
-  * that upgrade gives s03 a full pipeline-mirror oracle (round 1: no_oracle).
+  * hyperplanes are md5-derived so BOTH engines can rebuild them exactly,
+  * which lets s03's oracle mirror the whole pipeline.
   */
 object Similarity extends QueryModule {
 
   private[graft] val Dim = 64
 
-  /** embeddings with double-cast vector and precomputed L2 norm.
-    * vec_dot is the native codegen expression (graft.functions.DotProduct)
-    * — same sequential fold, bit-identical to the composed form, ~100x
-    * less per-row overhead.
+  /** embeddings with double-cast vector `v`, precomputed L2 norm `nrm`
+    * and `label` — the one normalization contract (double cast, nrm,
+    * nrm > 0 filter), defined once so label-aware consumers (s18, s28)
+    * cannot drift from [[vecs]]. vec_dot is the native codegen
+    * expression (graft.functions.DotProduct) — same sequential fold,
+    * bit-identical to the composed form, ~100x less per-row overhead.
     *
     * Zero-norm (direction-less) vectors are EXCLUDED at this source:
     * cosine similarity is undefined for them, and the unguarded
@@ -47,18 +46,14 @@ object Similarity extends QueryModule {
     * embeddings id set, so an excluded vector surfaces as its own kept
     * singleton rather than being dropped from the corpus.
     */
-  /** [[vecs]] with the `label` column kept — the one normalization
-    * contract (double cast, nrm, nrm>0 filter) defined once so
-    * label-aware consumers (s18) cannot drift from the rest.
-    */
-  // NOT spread at this seam (round-17 measurement): ~25 consumers read
+  // NOT spread at this seam (measured at sf0.1): ~25 consumers read
   // vecs, most through several small broadcast-side legs per query —
   // a blanket parallelism floor here paid one round-robin exchange PER
   // LEG of a 2000-row frame and measured s03/s04/s11/s18/s21 each
-  // +0.2 s at sf0.1, while only the heavy corpus-side kernels gained.
-  // The spread is applied at those heavy seams instead (s01/s02's
-  // streamed cartesian side, bucketedNearDup, oneStepAssigned, s31's
-  // live corpus, SemDedup.clustersOf).
+  // +0.2 s, while only the heavy corpus-side kernels gained. The spread
+  // is applied at those heavy seams instead (s01/s02's streamed
+  // cartesian side, bucketedNearDup, oneStepAssigned, s31's live
+  // corpus, SemDedup.clustersOf).
   private[graft] def vecsWithLabel(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
@@ -81,37 +76,208 @@ object Similarity extends QueryModule {
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.vec_dot(a, b)
 
+  // ---- the search kernels ---------------------------------------------
+  //
+  // Every s-query composes the same five steps (REPOSE's candidate
+  // generation, local score-and-rank, global merge): a query batch, cell
+  // candidates, score-and-rank, exact top-k and recall. Each has one
+  // implementation below; the oracle SQL mirrors them with the stanzas
+  // that follow (sqlDot/sqlCos, scoreSql, topSql, and the recall CTEs).
+
+  /** The md5-order query batch: the `n` rows of `frame` first in md5
+    * order of the `salt`-prefixed `id` (of the bare id when `salt` is
+    * empty). Deterministic, rebuilt by the oracle's `ORDER BY md5(...)
+    * LIMIT n`, and FIXED-SIZE: the side it broadcasts stays O(n) however
+    * large the corpus grows, where a corpus fraction (`vec_id % m`)
+    * would broadcast a corpus-sized share at 100 TB. Each consumer has
+    * its own salt, so no batch is another's sample (PQ queries are not
+    * the PQ codebook, s11's queries are not its centroids).
+    */
+  private def queryBatch(frame: DataFrame, salt: String, n: Int,
+      id: String = "vec_id"): DataFrame = {
+    val key = col(id).cast("string")
+    frame.orderBy(md5(if (salt.isEmpty) key else concat(lit(salt), key))).limit(n)
+  }
+
+  /** A (vec_id, v, nrm) frame as the query leg (qid, va, na) or the
+    * neighbor leg (nid, vb, nb) of a scored pair.
+    */
+  private def qLeg(base: DataFrame): DataFrame =
+    base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
+
+  private def nLeg(base: DataFrame): DataFrame =
+    base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb"))
+
+  /** Exact cosine of a pair's legs: the shared left-to-right vec_dot
+    * fold over double-cast vectors divided by norms (> 0 by the vecs()
+    * filter) — bit-identical to the oracle's [[sqlCos]].
+    */
+  private def pairCos: Column =
+    (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim")
+
+  /** Cell candidates, the probe stage of every IVF search over a cell
+    * ranking `ranked` (vec_id, crn, cid; crn 1 is the row's own cell,
+    * 1..probes its probe list): the probe leg (every rank of the
+    * `queries` batch — vec_id plus any extra key columns — or of every
+    * ranked row), the member leg (rank 1, through `members`), and their
+    * equi-join on the cell and the extra keys, self pairs dropped. A
+    * filter such as s28's label therefore rides IN the join, never after
+    * scoring. Each member lives in one cell and a query probes distinct
+    * cells, so every (qid, nid) pair appears at most once: no dedup
+    * shuffle (unlike multi-table LSH).
+    */
+  private def cellCandidates(ranked: DataFrame, queries: Option[DataFrame],
+      members: DataFrame => DataFrame = identity): DataFrame = {
+    val keys = queries.fold(Seq.empty[String])(_.columns.toSeq.filter(_ != "vec_id"))
+    val probes = queries.fold(ranked)(q => ranked.join(broadcast(q), "vec_id"))
+      .select(Seq(col("vec_id").as("qid"), col("cid").as("cell")) ++ keys.map(col): _*)
+    val assign = members(membershipOf(ranked).select(col("vec_id").as("nid"), col("cell")))
+    probes.join(assign, "cell" +: keys)
+      .filter(col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"))
+  }
+
+  /** Score and rank: both legs of `base` joined onto the (qid, nid)
+    * candidates by id, then [[topK]].
+    */
+  private def scoreTopK(cand: DataFrame, base: DataFrame, k: Int): DataFrame =
+    topK(cand.join(qLeg(base), "qid").join(nLeg(base), "nid"), k)
+
+  /** The per-query top-`k` of pairs carrying both legs: exact cosine,
+    * ranked by (sim DESC, nid) — the oracle's [[topSql]] tiebreak.
+    */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
+    pairs.select(col("qid"), col("nid"), pairCos)
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= k)
+  }
+
+  /** Exact top-`k` (qid, nid, sim, rn): every pair of the query leg `qs`
+    * (qid, va, na) and the neighbor leg `ns` (nid, vb, nb) — a cross
+    * join, or an equi-join on the columns they share (s18's label) —
+    * self pairs dropped, ranked through the bounded-memory TopKNeighbors
+    * Aggregator: partial + final aggregation, ≤ k rows per query cross
+    * the shuffle, never a window sort over the scored pairs. With a
+    * fixed-size query batch the work is batch × corpus, linear.
+    */
+  private def exactTopK(qs: DataFrame, ns: DataFrame, k: Int): DataFrame = {
+    val spark = qs.sparkSession
+    import spark.implicits._
+    val on = qs.columns.toSeq.filter(ns.columns.contains)
+    (if (on.isEmpty) qs.crossJoin(ns) else qs.join(ns, on))
+      .filter(col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"), pairCos)
+      .as[graft.functions.KnnRow]
+      .groupByKey(_.qid)
+      .agg(new graft.functions.TopKNeighbors(k).toColumn.name("top"))
+      .flatMap { case (qid, top) =>
+        top.items.iterator.zipWithIndex.map { case (r, i) => (qid, r.nid, r.sim, (i + 1).toLong) }
+      }
+      .toDF("qid", "nid", "sim", "rn")
+  }
+
+  /** Per-query recall of an index's answer `ann` (qid, nid) against the
+    * `exact` one: k (exact neighbors available), n_hits (how many of
+    * them the index returned), recall = n_hits / k; a query the index
+    * missed entirely keeps its row with n_hits 0. Per-query rows keep
+    * the worst queries attributable — a report that only says "0.93
+    * average" cannot name the queries the index lost.
+    */
+  private def recall(exact: DataFrame, ann: DataFrame): DataFrame = {
+    val hits = exact.join(ann, Seq("qid", "nid"))
+      .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
+    exact.groupBy(col("qid")).agg(count(lit(1)).as("k"))
+      .join(hits, Seq("qid"), "left_outer")
+      .select(col("qid"), col("k"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+        (coalesce(col("n_hits"), lit(0L)) / col("k")).as("recall"))
+  }
+
+  // ---- the oracle's stanzas -------------------------------------------
+
   private[ops] val oracleVecs =
     """v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
       |n AS (SELECT * FROM (
       |  SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM v)
       |  WHERE nrm > 0)""".stripMargin
 
-  /** s01: exact cosine top-5 neighbors for every vector. The per-query
-    * top-k runs through the bounded-memory TopKNeighbors Aggregator
-    * (partial+final agg; ≤k rows per group cross the shuffle) instead of a
-    * window sort over all n² scored pairs.
+  /** DuckDB's mirror of vec_dot: the same left-to-right sum of the Dim
+    * element products.
     */
-  private def s01(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // the STREAMED cartesian side carries the O(n²) dot-product work —
-    // spread floors its parallelism (the broadcast side b stays as-is);
-    // measured 1.9 s → 0.7 s at sf0.1
-    val a = Tables.spread(vecs(s, dir))
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    val b = vecs(s, dir).select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb"))
-    val scored = a.crossJoin(b)
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .as[graft.functions.KnnRow]
-    scored
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(5).toColumn.name("top"))
-      .flatMap { case (qid, top) =>
-        top.items.iterator.zipWithIndex.map { case (r, i) => (qid, r.nid, r.sim, (i + 1).toLong) }
-      }
-      .toDF("qid", "nid", "sim", "rn")
-  }
+  private[ops] def sqlDot(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))"
+
+  /** Cosine of two (v, nrm) row aliases — [[pairCos]]'s mirror. */
+  private def sqlCos(x: String, y: String): String =
+    s"${sqlDot(s"$x.v", s"$y.v")} / ($x.nrm * $y.nrm)"
+
+  /** [[scoreTopK]]'s join-and-score half: CTE `name` scores the (qid,
+    * nid) pairs of `cand` against the `qp` and `np` populations.
+    */
+  private def scoreSql(name: String, cand: String, qp: String, np: String): String =
+    s"""$name AS (
+       |  SELECT c.qid, c.nid,
+       |    ${sqlCos("x", "y")} AS sim
+       |  FROM $cand c JOIN $qp x ON c.qid = x.vec_id JOIN $np y ON c.nid = y.vec_id)""".stripMargin
+
+  /** [[topK]]'s mirror: the top-5 of the scored pairs in `src`. */
+  private def topSql(src: String): String =
+    s"""SELECT qid, nid, sim, rn FROM (
+       |  SELECT qid, nid, sim,
+       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
+       |  FROM $src)
+       |WHERE rn <= 5""".stripMargin
+
+  /** The recall audits' batch `smp`: [[queryBatch]] over `pop`. */
+  private def smpSql(pop: String, salt: String): String =
+    s"""smp AS (
+       |  SELECT vec_id FROM $pop
+       |  ORDER BY md5('$salt' || CAST(vec_id AS VARCHAR)) LIMIT $RecallQueries)""".stripMargin
+
+  /** [[exactTopK]]'s mirror `ex`: the exact top-5 of each `smp` query
+    * of `qp` against the `np` rows that satisfy `on`.
+    */
+  private def exSql(qp: String, np: String, on: String): String =
+    s"""ex AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT a.vec_id AS qid, b.vec_id AS nid,
+       |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
+       |        ${sqlCos("a", "b")} DESC,
+       |        b.vec_id) AS rn
+       |    FROM $qp a JOIN smp USING (vec_id) JOIN $np b ON $on)
+       |  WHERE rn <= 5)""".stripMargin
+
+  /** The index's answer `ann`: the top-5 of the scored pairs `sc`, cut
+    * to the `smp` queries.
+    */
+  private val annSql =
+    """ann AS (
+      |  SELECT qid, nid FROM (
+      |    SELECT qid, nid,
+      |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn
+      |    FROM sc)
+      |  WHERE rn <= 5 AND qid IN (SELECT vec_id FROM smp))""".stripMargin
+
+  /** [[recall]]'s mirror: `ex` against the index's answer `ann`. */
+  private def recallSql(ann: String): String =
+    s"""h AS (
+       |  SELECT ex.qid, count(*) AS n_hits
+       |  FROM ex JOIN $ann ON ex.qid = $ann.qid AND ex.nid = $ann.nid
+       |  GROUP BY 1)
+       |SELECT ex.qid, count(*) AS k,
+       |  coalesce(any_value(h.n_hits), 0) AS n_hits,
+       |  coalesce(any_value(h.n_hits), 0) / count(*) AS recall
+       |FROM ex LEFT JOIN h ON ex.qid = h.qid
+       |GROUP BY 1""".stripMargin
+
+  /** s01: exact cosine top-5 neighbors for every vector ([[exactTopK]]
+    * over the whole corpus). The STREAMED cartesian side carries the
+    * O(n²) dot-product work, so spread floors its parallelism (the
+    * broadcast side stays as-is); measured 1.9 s → 0.7 s at sf0.1.
+    */
+  private def s01(s: SparkSession, dir: String): DataFrame =
+    exactTopK(qLeg(Tables.spread(vecs(s, dir))), nLeg(vecs(s, dir)), 5)
 
   private val s01Sql =
     s"""WITH $oracleVecs,
@@ -119,25 +285,19 @@ object Similarity extends QueryModule {
        |  SELECT a.vec_id AS qid, b.vec_id AS nid,
        |    list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) AS sim
        |  FROM n a JOIN n b ON a.vec_id <> b.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM p)
-       |WHERE rn <= 5""".stripMargin
+       |${topSql("p")}""".stripMargin
 
   /** s02: embedding-space near-duplicate pairs (cosine >= 0.4; this corpus
     * is random vectors, max pairwise cosine ~0.6). The exact quadratic
     * baseline — s05 is the bucketed variant.
     */
-  private def s02(s: SparkSession, dir: String): DataFrame = {
-    val a = Tables.spread(vecs(s, dir))
+  private def s02(s: SparkSession, dir: String): DataFrame =
+    Tables.spread(vecs(s, dir))
       .select(col("vec_id").as("ida"), col("v").as("va"), col("nrm").as("na"))
-    val b = vecs(s, dir).select(col("vec_id").as("idb"), col("v").as("vb"), col("nrm").as("nb"))
-    a.crossJoin(b)
+      .crossJoin(vecs(s, dir).select(col("vec_id").as("idb"), col("v").as("vb"), col("nrm").as("nb")))
       .filter(col("ida") < col("idb"))
-      .select(col("ida"), col("idb"), (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
+      .select(col("ida"), col("idb"), pairCos)
       .filter(col("sim") >= 0.4)
-  }
 
   private val s02Sql =
     s"""WITH $oracleVecs
@@ -249,7 +409,7 @@ object Similarity extends QueryModule {
     pairs
       .join(base.select(col("vec_id").as("ida"), col("v").as("va"), col("nrm").as("na")), "ida")
       .join(base.select(col("vec_id").as("idb"), col("v").as("vb"), col("nrm").as("nb")), "idb")
-      .select(col("ida"), col("idb"), (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
+      .select(col("ida"), col("idb"), pairCos)
       .filter(col("sim") >= threshold)
   }
 
@@ -274,13 +434,7 @@ object Similarity extends QueryModule {
           col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
       .dropDuplicates("qid", "nid")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    cand
-      .join(base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")), "nid")
-      .select(col("qid"), col("nid"), (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    scoreTopK(cand, base, 5)
   }
 
   /** Oracle: the same LSH pipeline rebuilt in DuckDB from the base
@@ -290,7 +444,14 @@ object Similarity extends QueryModule {
     */
   private val s03Sql =
     s"""WITH $oracleVecs,
-       |pl AS (
+       |$lshCtes
+       |${topSql("sc")}""".stripMargin
+
+  /** s03's planes, sign buckets, bucket-collision candidates `cand` and
+    * re-scored pairs `sc` — shared verbatim by s12's ANN leg.
+    */
+  private lazy val lshCtes =
+    s"""pl AS (
        |  SELECT t AS tbl, p AS plane, list_transform(range(0, $Dim), j ->
        |    CAST(list_reduce(list_transform(list_transform(range(1, 16),
        |        i -> substr(md5(t || '_' || p || '_' || j), i, 1)),
@@ -300,7 +461,7 @@ object Similarity extends QueryModule {
        |  CROSS JOIN (SELECT unnest(range(0, $NumPlanes)) AS p)),
        |proj AS (
        |  SELECT n.vec_id, pl.tbl, pl.plane,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * pl.pvec[i])) AS dot
+       |    ${sqlDot("n.v", "pl.pvec")} AS dot
        |  FROM n CROSS JOIN pl),
        |bk AS (
        |  SELECT vec_id, tbl,
@@ -309,15 +470,7 @@ object Similarity extends QueryModule {
        |cand AS (
        |  SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
        |  FROM bk a JOIN bk b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-       |sc AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM cand c JOIN n x ON c.qid = x.vec_id JOIN n y ON c.nid = y.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM sc)
-       |WHERE rn <= 5""".stripMargin
+       |${scoreSql("sc", "cand", "n", "n")}""".stripMargin
 
   // ---- s05: bucketed threshold near-dup -------------------------------
 
@@ -349,13 +502,11 @@ object Similarity extends QueryModule {
   private def s05(s: SparkSession, dir: String): DataFrame =
     bucketedNearDup(s, vecs(s, dir), NearDupPlanes, NearDupTables, NearDupThreshold)
 
-  /** Structural mirror of [[bucketedNearDup]] at the s05 profile —
-    * s03Sql's plane/bucket/candidate CTEs with a threshold filter in
-    * place of the per-query top-k.
-    */
-  /** The s05 pipeline's CTE block (planes, sign buckets, candidates,
-    * threshold verify), factored so s15's leakage audit composes the
-    * LITERAL same stages (the p13 shared-CTE rule).
+  /** Structural mirror of [[bucketedNearDup]] at the s05 profile: the
+    * planes, sign buckets and candidates of s03's oracle with a
+    * threshold verify in place of the per-query top-k — factored so
+    * s15's leakage audit composes the LITERAL same stages (the p13
+    * shared-CTE rule).
     */
   private val s05Ctes =
     s"""pl AS (
@@ -366,7 +517,7 @@ object Similarity extends QueryModule {
        |  CROSS JOIN (SELECT unnest(range(0, $NearDupPlanes)) AS p)),
        |proj AS (
        |  SELECT n.vec_id, pl.tbl, pl.plane,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * pl.pvec[i])) AS dot
+       |    ${sqlDot("n.v", "pl.pvec")} AS dot
        |  FROM n CROSS JOIN pl),
        |bk AS (
        |  SELECT vec_id, tbl,
@@ -378,7 +529,7 @@ object Similarity extends QueryModule {
        |verified AS (
        |  SELECT ida, idb, sim FROM (
        |    SELECT c.ida, c.idb,
-       |      list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
+       |      ${sqlCos("x", "y")} AS sim
        |    FROM cand c JOIN n x ON c.ida = x.vec_id JOIN n y ON c.idb = y.vec_id)
        |  WHERE sim >= $NearDupThreshold)""".stripMargin
 
@@ -394,8 +545,7 @@ object Similarity extends QueryModule {
     * assignment in this module happens as a row-local fold/sort over
     * this array — never as a corpus×K row explosion ranked through a
     * `Window.partitionBy(vec_id)` exchange (that shape shuffles K× the
-    * corpus just to pick per-row winners; the round-10 verdict's top
-    * finding). Struct fields must lead with `cid` so the array sort is
+    * corpus just to pick per-row winners). Struct fields must lead with `cid` so the array sort is
     * cid-ordered.
     */
   private def centArray(cents: DataFrame, fields: Column*): DataFrame =
@@ -479,27 +629,18 @@ object Similarity extends QueryModule {
     */
   private def s06(s: SparkSession, dir: String): DataFrame = {
     val base = vecs(s, dir).persist()
-    val cents = base.orderBy(md5(col("vec_id").cast("string"))).limit(IvfCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val centArr = centArray(cents, col("cid"), col("cv"), col("cnrm"))
+    val centArr = centArray(cosCents(base, IvfCells), col("cid"), col("cv"), col("cnrm"))
     val ranked = rankCells(base, centArr, cosKey, IvfProbes)
-    val assign = ranked.filter(col("crn") === 1).select(col("vec_id"), col("cid").as("cell"))
-    val probes = ranked.filter(col("crn") <= IvfProbes)
-      .select(col("vec_id").as("qid"), col("cid").as("cell"))
-    // each nid lives in exactly one cell and a query probes distinct
-    // cells, so every (qid, nid) candidate appears at most once — no
-    // dedup shuffle needed (unlike multi-table LSH)
-    val cand = probes.join(assign.select(col("vec_id").as("nid"), col("cell")), "cell")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    cand
-      .join(base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")), "nid")
-      .select(col("qid"), col("nid"), (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    scoreTopK(cellCandidates(ranked, None), base, 5)
   }
+
+  /** The s06 coarse quantizer: an unsalted md5-order sample of `cells`
+    * corpus rows as (cid, cv, cnrm) centroids — shared by s06, s11 and
+    * s14 (oracle: [[ivfAssignCtes]]).
+    */
+  private def cosCents(base: DataFrame, cells: Int): DataFrame =
+    queryBatch(base, "", cells)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
 
   /** Oracle: full DuckDB mirror of the IVF pipeline (centroid sample,
     * assignment argmax with the same tiebreak, probe list, in-cell
@@ -507,32 +648,33 @@ object Similarity extends QueryModule {
     */
   private val s06Sql =
     s"""WITH $oracleVecs,
-       |c AS (
-       |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT $IvfCells),
-       |sims AS (
-       |  SELECT n.vec_id, c.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * c.cv[i])) / (n.nrm * c.cnrm) AS csim
-       |  FROM n CROSS JOIN c),
-       |rk AS (
-       |  SELECT vec_id, cid,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crn
-       |  FROM sims),
-       |assign AS (SELECT vec_id, cid AS cell FROM rk WHERE crn = 1),
+       |${ivfAssignCtes(IvfCells)},
        |probes AS (SELECT vec_id AS qid, cid AS cell FROM rk WHERE crn <= $IvfProbes),
        |cand AS (
        |  SELECT p.qid, a.vec_id AS nid
        |  FROM probes p JOIN assign a USING (cell)
        |  WHERE p.qid <> a.vec_id),
-       |sc AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM cand c JOIN n x ON c.qid = x.vec_id JOIN n y ON c.nid = y.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM sc)
-       |WHERE rn <= 5""".stripMargin
+       |${scoreSql("sc", "cand", "n", "n")}
+       |${topSql("sc")}""".stripMargin
+
+  /** The s06 quantizer's oracle: centroid sample `c`, every (row,
+    * centroid) cosine `sims`, the per-row cell ranking `rk` (csim DESC,
+    * cid — the Spark side's array sort) and rank-1 membership `assign`;
+    * shared by s06, s11 and s14.
+    */
+  private def ivfAssignCtes(cells: Int): String =
+    s"""c AS (
+       |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n
+       |  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT $cells),
+       |sims AS (
+       |  SELECT n.vec_id, c.cid,
+       |    ${sqlDot("n.v", "c.cv")} / (n.nrm * c.cnrm) AS csim
+       |  FROM n CROSS JOIN c),
+       |rk AS (
+       |  SELECT vec_id, cid,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crn
+       |  FROM sims),
+       |assign AS (SELECT vec_id, cid AS cell FROM rk WHERE crn = 1)""".stripMargin
 
   /** s04: per-label centroid components — embedding analytics (cluster
     * means, per-class prototypes). Emitted as exact decimal sums + counts
@@ -581,12 +723,9 @@ object Similarity extends QueryModule {
     *
     * Scale shape: the stats pass is one 64-row aggregate; quantization is
     * a map-side projection under a broadcast 1-row stats frame (no
-    * shuffle); the query batch is a FIXED-SIZE deterministic md5-order
-    * sample (`QuantQueries` rows — the stand-in for the external query
-    * set a real deployment supplies), so the broadcast side is O(k)
-    * however large the corpus grows — a corpus-proportional batch here
-    * (e.g. `vec_id % m`) would broadcast a corpus-sized fraction at
-    * 100 TB. Scoring under the broadcast is embarrassingly parallel;
+    * shuffle); the query batch is a [[queryBatch]] of `QuantQueries`
+    * rows (the stand-in for the external query set a real deployment
+    * supplies). Scoring under the broadcast is embarrassingly parallel;
     * only the final per-query top-k ranks — swap row_number for the
     * TopKNeighbors Aggregator if the batch is huge.
     */
@@ -617,8 +756,7 @@ object Similarity extends QueryModule {
         }).as("q"))
     // O(k) query batch: GlobalLimit caps the broadcast side by
     // construction (PlanSpec asserts the limit sits under the broadcast)
-    val qids = base.select(col("vec_id"))
-      .orderBy(md5(col("vec_id").cast("string"))).limit(QuantQueries)
+    val qids = queryBatch(base.select(col("vec_id")), "", QuantQueries)
     val queries = quant.join(broadcast(qids), "vec_id")
       .select(col("vec_id").as("query_id"), col("q").as("qa"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("qdot").desc, col("vec_id"))
@@ -672,42 +810,12 @@ object Similarity extends QueryModule {
   private val PqQueries = 16         // fixed query batch (md5-order sample)
   private val PqTopK    = 5
 
-  /** s08: product quantization + asymmetric-distance (ADC) search — the
-    * FAISS-style memory-compression ANN path: each vector becomes PqM
-    * 4-bit codes (8 bytes vs 256 for Dim floats, 32×), and a query scores
-    * a candidate by summing PqM precomputed table lookups instead of a
-    * Dim-wide dot. At 100 TB this is what makes the index FIT — the
-    * coded corpus rides in executor memory while the floats stay in cold
-    * storage for re-scoring.
-    *
-    * Codebooks are the per-subspace slices of a deterministic md5-order
-    * sample (the s06 stand-in for k-means — everything downstream is
-    * training-free); dense code indexes come from a join-count rank over
-    * the 16-row sample, not a window, so no unpartitioned window exists.
-    * Determinism: every float reduction (encode distances, table
-    * entries, the ADC score) is the SAME left-to-right sum in both
-    * engines (vec_dot / aggregate-fold vs list_sum), each term a single
-    * exact product or lookup, and every argmin/top-k tie breaks on the
-    * id — so the oracle hash-matches bit-exactly.
-    *
-    * Scale shape: encoding is a map-side projection under a broadcast
-    * 128-row codebook (one groupBy(vec_id) to assemble codes); the query
-    * batch and its 2048-entry tables are LIMIT-capped broadcasts (the
-    * s07 contract); scoring is corpus × 16 broadcast rows, linear in the
-    * corpus; only the final per-query top-k ranks.
-    */
-  /** The PQ pipeline through ADC ranking, shared by s08 (shortlist IS the
-    * answer) and s09 (shortlist feeds an exact re-rank): returns the
-    * persisted normalized corpus and the full ADC-ranked candidate frame
-    * (query_id, vec_id, adc, rk) BEFORE any top-k cut.
-    */
   /** PQ encode, factored for reuse by the flat path (s08/s09) and the
     * IVF-PQ composition (s22): returns (centSub, codes) — the per-
     * subspace codebook slices and the corpus's 8-code rows.
     */
   private def pqParts(base: DataFrame): (DataFrame, DataFrame) = {
-    val cents = base.orderBy(md5(col("vec_id").cast("string"))).limit(PqK)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cents = queryBatch(base, "", PqK).select(col("vec_id").as("cid"), col("v").as("cv"))
       .persist() // tiny; feeds the rank join and the subspace explode
     // dense 0..PqK-1 code index by id rank (join-count, not a window)
     val cidx = cents.select(col("cid"))
@@ -741,8 +849,7 @@ object Similarity extends QueryModule {
     * queries.
     */
   private def pqQids(base: DataFrame): DataFrame =
-    base.select(col("vec_id"))
-      .orderBy(md5(concat(lit("pqq_"), col("vec_id").cast("string")))).limit(PqQueries)
+    queryBatch(base.select(col("vec_id")), "pqq_", PqQueries)
 
   /** Per-query ADC tables: contrib[j][c] = <query subvector, centroid>,
     * flattened to a 128-slot array in (j, cidx) order — one capped-
@@ -765,6 +872,11 @@ object Similarity extends QueryModule {
     aggregate(sequence(lit(0), lit(PqM - 1)), lit(0.0),
       (acc, j) => acc + element_at(col("tbl"), j * PqK + element_at(col("codes"), j + 1) + 1))
 
+  /** The PQ pipeline through ADC ranking, shared by s08 (shortlist IS the
+    * answer) and s09 (shortlist feeds an exact re-rank): returns the
+    * persisted normalized corpus and the full ADC-ranked candidate frame
+    * (query_id, vec_id, adc, rk) BEFORE any top-k cut.
+    */
   private def pqAdcRanked(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val base = vecs(s, dir).persist()
     val (centSub, codes) = pqParts(base)
@@ -777,6 +889,30 @@ object Similarity extends QueryModule {
     (base, ranked)
   }
 
+  /** s08: product quantization + asymmetric-distance (ADC) search — the
+    * FAISS-style memory-compression ANN path: each vector becomes PqM
+    * 4-bit codes (8 bytes vs 256 for Dim floats, 32×), and a query scores
+    * a candidate by summing PqM precomputed table lookups instead of a
+    * Dim-wide dot. At 100 TB this is what makes the index FIT — the
+    * coded corpus rides in executor memory while the floats stay in cold
+    * storage for re-scoring.
+    *
+    * Codebooks are the per-subspace slices of a deterministic md5-order
+    * sample (the s06 stand-in for k-means — everything downstream is
+    * training-free); dense code indexes come from a join-count rank over
+    * the 16-row sample, not a window, so no unpartitioned window exists.
+    * Determinism: every float reduction (encode distances, table
+    * entries, the ADC score) is the SAME left-to-right sum in both
+    * engines (vec_dot / aggregate-fold vs list_sum), each term a single
+    * exact product or lookup, and every argmin/top-k tie breaks on the
+    * id — so the oracle hash-matches bit-exactly.
+    *
+    * Scale shape: encoding is a map-side projection under a broadcast
+    * 128-row codebook (one groupBy(vec_id) to assemble codes); the query
+    * batch and its 2048-entry tables are LIMIT-capped broadcasts (the
+    * s07 contract); scoring is corpus × 16 broadcast rows, linear in the
+    * corpus; only the final per-query top-k ranks.
+    */
   private def s08(s: SparkSession, dir: String): DataFrame = {
     val (_, ranked) = pqAdcRanked(s, dir)
     ranked.filter(col("rk") <= PqTopK)
@@ -824,12 +960,6 @@ object Similarity extends QueryModule {
       .select(col("query_id"), col("rk"), col("vec_id"), col("sim"))
   }
 
-  /** Oracle: full stage-by-stage mirror — same md5 sample, same
-    * join-count code indexes, the same three-sum expanded distances,
-    * table entries, fixed-order ADC fold, and tiebreaks. The CTE block
-    * through the ADC ranking is shared by the s08 and s09 oracles,
-    * mirroring the Spark-side pqAdcRanked split.
-    */
   /** The PQ encode + per-query ADC-table CTEs WITHOUT the `n` prefix or
     * the full-corpus ranking tail — composable after any CTE chain that
     * already defines `n` (s22 splices this after the s20 trained-IVF
@@ -871,6 +1001,12 @@ object Similarity extends QueryModule {
        |  FROM n q JOIN qids USING (vec_id) CROSS JOIN cs),
        |tbl AS (SELECT query_id, array_agg(contrib ORDER BY j, cidx) AS tbl FROM tb GROUP BY 1)""".stripMargin
 
+  /** Oracle: full stage-by-stage mirror — same md5 sample, same
+    * join-count code indexes, the same three-sum expanded distances,
+    * table entries, fixed-order ADC fold, and tiebreaks. The CTE block
+    * through the ADC ranking is shared by the s08 and s09 oracles,
+    * mirroring the Spark-side pqAdcRanked split.
+    */
   private val pqCte =
     s"""$oracleVecs,
        |$pqCodeCtes,
@@ -897,7 +1033,7 @@ object Similarity extends QueryModule {
        |short AS (SELECT query_id, vec_id FROM pqranked WHERE rk <= $PqShort),
        |rr AS (
        |  SELECT s.query_id, s.vec_id,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm) AS sim
+       |    ${sqlCos("q", "c")} AS sim
        |  FROM short s JOIN n q ON q.vec_id = s.query_id JOIN n c ON c.vec_id = s.vec_id)
        |SELECT query_id, rk, vec_id, sim FROM (
        |  SELECT query_id, vec_id, sim,
@@ -941,15 +1077,19 @@ object Similarity extends QueryModule {
   private def s10(s: SparkSession, dir: String): DataFrame =
     kmeansMeans(vecs(s, dir).persist()) // persist feeds seed sample + assignment
 
+  /** The [[KmK]] k-means seed centroids (cid, cv): the "km_" md5-order
+    * sample shared by s10, s16/s26 and s17 (oracle: [[kmSeedCtes]]).
+    */
+  private def kmSeeds(base: DataFrame): DataFrame =
+    queryBatch(base, "km_", KmK).select(col("vec_id").as("cid"), col("v").as("cv"))
+
   /** The s10 Lloyd step over an arbitrary (vec_id, v, nrm) frame,
     * factored so s20 can feed its trained means into the s06-style IVF
     * search — the "centroids swappable, everything downstream
     * unchanged" composition the s06 doc promises.
     */
   private def kmeansMeans(base: DataFrame): DataFrame = {
-    val cents = base
-      .orderBy(md5(concat(lit("km_"), col("vec_id").cast("string")))).limit(KmK)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cents = kmSeeds(base)
     // the K centroids as ONE broadcast row holding a cid-sorted array, so
     // the argmin is a row-local sort over the array ([[assignCell]]) — NOT
     // a per-(vec,cent) row explosion followed by a corpus-wide window on
@@ -966,20 +1106,32 @@ object Similarity extends QueryModule {
         (col("sx") / col("n")).as("mean_x"))
   }
 
+  /** [[kmSeeds]]' mirror `cent` plus every (row, seed) squared L2
+    * distance as CTE `dist`.
+    */
+  private def kmSeedCtes(dist: String): String =
+    s"""cent AS (
+       |  SELECT vec_id AS cid, v AS cv FROM n
+       |  ORDER BY md5('km_' || CAST(vec_id AS VARCHAR)) LIMIT $KmK),
+       |${l2DistSql(dist, "cent")}""".stripMargin
+
+  /** CTE `name`: the s10 three-sum squared L2 distance `d` from every
+    * `n` row to every centroid of `cents` (cid, cv).
+    */
+  private def l2DistSql(name: String, cents: String): String =
+    s"""$name AS (
+       |  SELECT n.vec_id, $cents.cid,
+       |    ${sqlDot("n.v", "n.v")}
+       |      - 2.0 * ${sqlDot("n.v", s"$cents.cv")}
+       |      + ${sqlDot(s"$cents.cv", s"$cents.cv")} AS d
+       |  FROM n CROSS JOIN $cents)""".stripMargin
+
   /** The s10 CTE chain (seed sample → L2 distances → argmin assignment
     * → exploded components) — shared by s10's mean report and s20's
     * trained-centroid search.
     */
   private val kmMeansCtes =
-    s"""cent AS (
-       |  SELECT vec_id AS cid, v AS cv FROM n
-       |  ORDER BY md5('km_' || CAST(vec_id AS VARCHAR)) LIMIT $KmK),
-       |d AS (
-       |  SELECT n.vec_id, cent.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * n.v[i]))
-       |      - 2.0 * list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * cent.cv[i]))
-       |      + list_sum(list_transform(range(1, ${Dim + 1}), i -> cent.cv[i] * cent.cv[i])) AS d
-       |  FROM n CROSS JOIN cent),
+    s"""${kmSeedCtes("d")},
        |asg AS (SELECT vec_id, cid FROM (
        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
        |  FROM d) WHERE rn = 1),
@@ -1057,7 +1209,7 @@ object Similarity extends QueryModule {
     * still ZERO exchanges: assignment and probing never shuffle the
     * corpus ([[rankCells]]'s contract at the next scale tier).
     *
-    * Since round 11 the per-row selection runs in the NATIVE
+    * The per-row selection runs in the NATIVE
     * [[graft.functions.TwoLevelRankCells]] kernel: the HOF composition
     * (array_sort over transform-built structs, twice) paid an
     * interpreted lambda dispatch + struct allocation per centroid per
@@ -1090,34 +1242,6 @@ object Similarity extends QueryModule {
       .filter(col(outCol).isNotNull)
       .drop("groups")
 
-  /** s20: IVF search over a TRAINED, CORPUS-SCALED quantizer — the full
-    * composition of the module's training machinery: the codebook is
-    * seeded by d08's corpus-scaled rule (K = max(16, ceil(n/64)) from
-    * ONE count(), membership by salted hash60 threshold — a map-side
-    * filter, no top-K heaps — [[SemDedup.cellCount]]/[[SemDedup.hashThreshold]],
-    * one definition), trained for [[KmSteps]] Lloyd iterations (each:
-    * two-level assignment → s10's exact-decimal means), then searched
-    * s06-style: ONE two-level ranking pass — [[KmSearchGroups]] nearest
-    * coarse groups, then the [[IvfProbes]] nearest fine cells inside
-    * them — serves both faces of the index (rank 1 is the membership
-    * cell, ranks 1..IvfProbes the probe list), and candidates re-score
-    * exact-cosine top-5.
-    *
-    * Scale shape: every assignment — training, indexing, probing — is a
-    * row-local fold under ONE nested broadcast (coarse groups → member
-    * cells), so per-row work is O(√K) and the corpus NEVER shuffles
-    * for assignment (no corpus×K rows exist anywhere — the round-10
-    * verdict's top finding, structurally excluded at corpus-scaled K
-    * too). Each training step costs the corpus one (cid, pos) map-side-
-    * combined aggregate; the search tail shuffles only the occupancy-
-    * bounded candidate set (~IvfProbes·TargetCellRows rows per query
-    * independent of corpus size, BECAUSE K scales with n).
-    *
-    * Determinism: seed/coarse membership are hash60-threshold integer
-    * compares; distances are the s10 three-sum L2 over the shared fold;
-    * every rank ties on the struct's cid/gid field == the oracle's
-    * ORDER BY; means are exact-decimal sums divided once by counts.
-    */
   /** The trained-index front half shared by s20 (search) and s21
     * (recall audit): the persisted corpus and the persisted two-level
     * ranking (vec_id, crn, cid) — crn 1 is membership, 1..IvfProbes
@@ -1136,12 +1260,11 @@ object Similarity extends QueryModule {
     */
   private[graft] def isDeltaVec: Column = col("vec_id") % 10 === 0
 
-
-  /** Train once, serve many (round-13 verdict #2): the trained chain —
+  /** Train once, serve many: the trained chain —
     * codebook + the corpus's (vec_id, crn, cid) two-level ranking — is
     * built ONCE per (process, dir, population) and persisted through
     * the real [[IndexArtifact]] write path; every consumer loads the
-    * stored artifact (Graph.materializedOnce's discipline — round 13
+    * stored artifact (Graph.materializedOnce's discipline — one bench
     * measured the identical deterministic chain retraining at 10 call
     * sites, ~35 s of the 268 s bench). Two populations, keyed apart:
     * the full corpus (s20/s21/s22/s23/s28/s29) and the d22-convention
@@ -1229,27 +1352,40 @@ object Similarity extends QueryModule {
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("cid").as("cell"))
 
+  /** s20: IVF search over a TRAINED, CORPUS-SCALED quantizer — the full
+    * composition of the module's training machinery: the codebook is
+    * seeded by d08's corpus-scaled rule (K = max(16, ceil(n/64)) from
+    * ONE count(), membership by salted hash60 threshold — a map-side
+    * filter, no top-K heaps — [[SemDedup.cellCount]]/[[SemDedup.hashThreshold]],
+    * one definition), trained for [[KmSteps]] Lloyd iterations (each:
+    * two-level assignment → s10's exact-decimal means), then searched
+    * s06-style: ONE two-level ranking pass — [[KmSearchGroups]] nearest
+    * coarse groups, then the [[IvfProbes]] nearest fine cells inside
+    * them — serves both faces of the index (rank 1 is the membership
+    * cell, ranks 1..IvfProbes the probe list), and candidates re-score
+    * exact-cosine top-5.
+    *
+    * Scale shape: every assignment — training, indexing, probing — is a
+    * row-local fold under ONE nested broadcast (coarse groups → member
+    * cells), so per-row work is O(√K) and the corpus NEVER shuffles
+    * for assignment (no corpus×K rows exist anywhere, at corpus-scaled
+    * K too). Each training step costs the corpus one (cid, pos) map-side-
+    * combined aggregate; the search tail shuffles only the occupancy-
+    * bounded candidate set (~IvfProbes·TargetCellRows rows per query
+    * independent of corpus size, BECAUSE K scales with n).
+    *
+    * Determinism: seed/coarse membership are hash60-threshold integer
+    * compares; distances are the s10 three-sum L2 over the shared fold;
+    * every rank ties on the struct's cid/gid field == the oracle's
+    * ORDER BY; means are exact-decimal sums divided once by counts.
+    */
   private def s20(s: SparkSession, dir: String): DataFrame = {
     val (base, ranked) = trainedRanked(s, dir)
-    val assign = ranked.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = ranked.select(col("vec_id").as("qid"), col("cid").as("cell"))
-    val cand = probes.join(assign.select(col("vec_id").as("nid"), col("cell")), "cell")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    cand
-      .join(base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")), "nid")
-      .select(col("qid"), col("nid"), (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    scoreTopK(cellCandidates(ranked, None), base, 5)
   }
 
   private def sqlL2(av: String, bv: String): String =
-    s"""(list_sum(list_transform(range(1, ${Dim + 1}), i -> $av[i] * $av[i]))
-       |      - 2.0 * list_sum(list_transform(range(1, ${Dim + 1}), i -> $av[i] * $bv[i]))
-       |      + list_sum(list_transform(range(1, ${Dim + 1}), i -> $bv[i] * $bv[i])))""".stripMargin
+    s"(${sqlDot(av, av)} - 2.0 * ${sqlDot(av, bv)} + ${sqlDot(bv, bv)})"
 
   private def coarsePredSql(cidExpr: String, nn: String = "n"): String =
     s"${OracleSql.hex60(s"'km_' || CAST($cidExpr AS VARCHAR)")} < ${SemDedup.threshSql(SemDedup.kcSqlExprOn(nn), nn)}"
@@ -1284,15 +1420,6 @@ object Similarity extends QueryModule {
        |  SELECT cell, pos, CAST(sum(CAST(xs AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS mx
        |  FROM px$t$x GROUP BY 1, 2) GROUP BY 1)""".stripMargin
 
-  /** Full structural mirror of the trained pipeline: seed threshold cut,
-    * [[KmSteps]] Lloyd step CTE blocks, then index membership (aidx),
-    * the [[KmSearchGroups]]×[[IvfProbes]] two-level probe list (pg/pr),
-    * candidates, exact re-score, top-5.
-    */
-  /** The full trained-pipeline CTE chain (seed cut → Lloyd steps → index
-    * membership aidx / probe list pr → candidate scores sc) — shared by
-    * s20's top-5 tail and s21's recall tail.
-    */
   /** The codebook chain alone (seed cut c0 → Lloyd steps → final
     * codebook's coarse groups g / fine→group map fa) — the trained
     * index an arbitrary population can rank against.
@@ -1333,6 +1460,10 @@ object Similarity extends QueryModule {
        |    JOIN $fin f ON f.cid = fm.cid) WHERE rn <= $IvfProbes)""".stripMargin
   }
 
+  /** The full trained-pipeline CTE chain (seed cut → Lloyd steps → index
+    * membership aidx / probe list pr → candidate scores sc) — shared by
+    * s20's top-5 tail and s21's recall tail.
+    */
   private def s20CtesOn(nn: String, x: String, assignPop: String = null): String = {
     // `nn` trains the codebook; `ap` (defaults to nn) is the population
     // the pg/prall/aidx/sc stanzas rank against it — s24/es26 train on
@@ -1346,21 +1477,19 @@ object Similarity extends QueryModule {
        |  SELECT p.qid, a.vec_id AS nid
        |  FROM pr$x p JOIN aidx$x a USING (cell)
        |  WHERE p.qid <> a.vec_id),
-       |sc$x AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM cnd$x c JOIN $ap x ON c.qid = x.vec_id JOIN $ap y ON c.nid = y.vec_id)""".stripMargin
+       |${scoreSql(s"sc$x", s"cnd$x", ap, ap)}""".stripMargin
   }
 
   private lazy val s20Ctes = s"$oracleVecs,\n" + s20CtesOn("n", "")
 
+  /** Full structural mirror of the trained pipeline: seed threshold cut,
+    * [[KmSteps]] Lloyd step CTE blocks, then index membership (aidx),
+    * the [[KmSearchGroups]]×[[IvfProbes]] two-level probe list (pg/pr),
+    * candidates, exact re-score, top-5.
+    */
   private lazy val s20Sql =
     s"""WITH $s20Ctes
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM sc)
-       |WHERE rn <= 5""".stripMargin
+       |${topSql("sc")}""".stripMargin
 
   /** s21: recall@5 audit of the TRAINED corpus-scaled index — s12's
     * contract (fixed [[RecallQueries]]-query batch, per-query k /
@@ -1371,56 +1500,26 @@ object Similarity extends QueryModule {
     * quality is — rebuild/retrain decisions trade its recall against
     * s14-style cell balance.
     *
-    * Scale shape: the exact leg is batch × corpus through the
-    * bounded-memory TopK aggregator (64·n, linear — the s12 lesson);
-    * the ANN leg probes ONLY the batch queries against the shared
-    * persisted ranking (the s20 front half, computed once), so the
+    * Scale shape: the exact leg is [[exactTopK]] over batch × corpus
+    * (linear — the s12 lesson); the ANN leg probes ONLY the batch
+    * queries against the shared persisted ranking (the s20 front half,
+    * computed once) through [[cellCandidates]] and [[scoreTopK]], so the
     * audit adds a batch-bounded candidate join, never a second corpus
-    * pass. Batch salt "trc_" is independent of every other sample salt.
+    * pass. Batch salt "trc_".
     */
   private def s21(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val (base, ranked) = trainedRanked(s, dir)
-    val sampled = base
-      .orderBy(md5(concat(lit("trc_"), col("vec_id").cast("string")))).limit(RecallQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
+    val sampled = queryBatch(base, "trc_", RecallQueries)
     // persisted: the recall tail reads the exact leg TWICE (hit join +
     // per-query k), and unlike s12's cheap LSH sibling the recompute
     // here is the batch × corpus object-aggregation pass — the 320-row
     // top-5 result caches instead (bench: the double evaluation was
     // the query's whole variance budget)
-    val exact = sampled.crossJoin(
-        base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .as[graft.functions.KnnRow]
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(5).toColumn.name("top"))
-      .flatMap { case (qid, top) => top.items.iterator.map(r => (qid, r.nid)) }
-      .toDF("qid", "nid")
-      .persist()
+    val exact = exactTopK(qLeg(sampled), nLeg(base), 5).persist()
     // the trained index's own answer, probing only the batch queries
-    val assign = ranked.filter(col("crn") === 1)
-      .select(col("vec_id").as("nid"), col("cid").as("cell"))
-    val probes = ranked.join(broadcast(sampled.select(col("qid").as("vec_id"))), "vec_id")
-      .select(col("vec_id").as("qid"), col("cid").as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    val ann = probes.join(assign, "cell")
-      .filter(col("qid") =!= col("nid"))
-      .join(base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")), "nid")
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+    val ann = scoreTopK(cellCandidates(ranked, Some(sampled.select(col("vec_id")))), base, 5)
       .select(col("qid"), col("nid"))
-    val hits = exact.join(ann, Seq("qid", "nid"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
-    exact.groupBy(col("qid")).agg(count(lit(1)).as("k"))
-      .join(hits, Seq("qid"), "left_outer")
-      .select(col("qid"), col("k"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) / col("k")).as("recall"))
+    recall(exact, ann)
   }
 
   /** Oracle: the LITERAL s20 CTE chain (so a hash match re-certifies
@@ -1429,32 +1528,10 @@ object Similarity extends QueryModule {
     */
   private lazy val s21Sql =
     s"""WITH $s20Ctes,
-       |smp AS (
-       |  SELECT vec_id FROM n
-       |  ORDER BY md5('trc_' || CAST(vec_id AS VARCHAR)) LIMIT $RecallQueries),
-       |ex AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT a.vec_id AS qid, b.vec_id AS nid,
-       |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |        list_sum(list_transform(range(1, ${Dim + 1}), i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) DESC,
-       |        b.vec_id) AS rn
-       |    FROM n a JOIN smp USING (vec_id) JOIN n b ON a.vec_id <> b.vec_id)
-       |  WHERE rn <= 5),
-       |ann AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid,
-       |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn
-       |    FROM sc)
-       |  WHERE rn <= 5 AND qid IN (SELECT vec_id FROM smp)),
-       |h AS (
-       |  SELECT ex.qid, count(*) AS n_hits
-       |  FROM ex JOIN ann ON ex.qid = ann.qid AND ex.nid = ann.nid
-       |  GROUP BY 1)
-       |SELECT ex.qid, count(*) AS k,
-       |  coalesce(any_value(h.n_hits), 0) AS n_hits,
-       |  coalesce(any_value(h.n_hits), 0) / count(*) AS recall
-       |FROM ex LEFT JOIN h ON ex.qid = h.qid
-       |GROUP BY 1""".stripMargin
+       |${smpSql("n", "trc_")},
+       |${exSql("n", "n", "a.vec_id <> b.vec_id")},
+       |$annSql,
+       |${recallSql("ann")}""".stripMargin
 
   // ---- s28: filtered search through the TRAINED index ------------------
 
@@ -1483,30 +1560,11 @@ object Similarity extends QueryModule {
     */
   private def s28(s: SparkSession, dir: String): DataFrame = {
     val (base, ranked) = trainedRanked(s, dir)
-    val labels = vecsWithLabel(s, dir).select(col("vec_id"), col("label"))
-    val q = vecsWithLabel(s, dir)
-      .orderBy(md5(concat(lit("fts_"), col("vec_id").cast("string")))).limit(FqQueries)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"))
-    val probes = ranked
-      .join(broadcast(q.withColumnRenamed("qid", "vec_id")), "vec_id")
-      .select(col("vec_id").as("qid"), col("cid").as("cell"), col("qlabel"))
-    val assign = ranked.filter(col("crn") === 1)
-      .select(col("vec_id").as("nid"), col("cid").as("cell"))
-      .join(labels.withColumnRenamed("vec_id", "nid"), "nid")
+    val labels = vecsWithLabel(s, dir).select(col("vec_id").as("nid"), col("label"))
+    val q = queryBatch(vecsWithLabel(s, dir), "fts_", FqQueries).select(col("vec_id"), col("label"))
     // the filter IS a join key: (cell, label) equi-join, so non-matching
     // corpus rows never pay a dot product
-    val cand = probes.join(assign,
-        probes("cell") === assign("cell") && col("qlabel") === col("label"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    cand
-      .join(base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")), "nid")
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    scoreTopK(cellCandidates(ranked, Some(q), _.join(labels, "nid")), base, 5)
   }
 
   /** Oracle: the literal s20 CTE chain + the label leg and batch cut —
@@ -1527,15 +1585,8 @@ object Similarity extends QueryModule {
        |  JOIN aidx a ON a.cell = p.cell
        |  JOIN lb bl ON bl.vec_id = a.vec_id AND bl.label = q.qlabel
        |  WHERE q.qid <> a.vec_id),
-       |scf AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM cf c JOIN n x ON c.qid = x.vec_id JOIN n y ON c.nid = y.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM scf)
-       |WHERE rn <= 5""".stripMargin
+       |${scoreSql("scf", "cf", "n", "n")}
+       |${topSql("scf")}""".stripMargin
 
   // ---- s29: tombstone-aware search through the TRAINED index -----------
 
@@ -1569,26 +1620,9 @@ object Similarity extends QueryModule {
   private def s29(s: SparkSession, dir: String): DataFrame = {
     val (base, ranked) = trainedRanked(s, dir)
     def isLive(c: Column): Column = Sampling.uhash("del_", c) >= DelFrac
-    val q = base.filter(isLive(col("vec_id")))
-      .orderBy(md5(concat(lit("ttq_"), col("vec_id").cast("string")))).limit(FqQueries)
-      .select(col("vec_id").as("qid"))
-    val probes = ranked
-      .join(broadcast(q.withColumnRenamed("qid", "vec_id")), "vec_id")
-      .select(col("vec_id").as("qid"), col("cid").as("cell"))
+    val q = queryBatch(base.filter(isLive(col("vec_id"))), "ttq_", FqQueries).select(col("vec_id"))
     // the tombstone check rides the index leg, BEFORE candidates exist
-    val assign = ranked.filter(col("crn") === 1 && isLive(col("vec_id")))
-      .select(col("vec_id").as("nid"), col("cid").as("cell"))
-    val cand = probes.join(assign, "cell")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    cand
-      .join(base.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")), "nid")
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    scoreTopK(cellCandidates(ranked, Some(q), _.filter(isLive(col("nid")))), base, 5)
   }
 
   /** Oracle: the literal s20 CTE chain + the live predicate on BOTH the
@@ -1608,15 +1642,8 @@ object Similarity extends QueryModule {
        |  JOIN aidx a ON a.cell = p.cell
        |  WHERE ${Sampling.uhashSql("del_", "a.vec_id")} >= $DelFrac
        |    AND q.qid <> a.vec_id),
-       |sct AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM ct c JOIN n x ON c.qid = x.vec_id JOIN n y ON c.nid = y.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM sct)
-       |WHERE rn <= 5""".stripMargin
+       |${scoreSql("sct", "ct", "n", "n")}
+       |${topSql("sct")}""".stripMargin
 
   // ---- s11: IVF range (radius) search ---------------------------------
 
@@ -1652,8 +1679,7 @@ object Similarity extends QueryModule {
     */
   private def s11(s: SparkSession, dir: String): DataFrame = {
     val base = vecs(s, dir).persist() // feeds centroid sample, query batch, corpus stream
-    val cents = base.orderBy(md5(col("vec_id").cast("string"))).limit(RsCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
+    val cents = cosCents(base, RsCells)
     val centArr = centArray(cents, col("cid"), col("cv"), col("cnrm"))
     // row-local nearest-cell assignment, carrying the vector for the
     // exact re-score so candidates never have to re-join the corpus
@@ -1661,10 +1687,8 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb"), col("cell"))
     // SALTED query sample: independent of the centroid sample's md5
     // order, so the batch is not just the centroids themselves
-    val qids = base.select(col("vec_id"))
-      .orderBy(md5(concat(lit("rsq_"), col("vec_id").cast("string")))).limit(RsQueries)
-    val qv = base.join(broadcast(qids), "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
+    val qids = queryBatch(base.select(col("vec_id")), "rsq_", RsQueries)
+    val qv = qLeg(base.join(broadcast(qids), "vec_id"))
     val wProbe = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cid"))
     val probes = qv.crossJoin(broadcast(cents)) // RsQueries x RsCells rows
       .select(col("qid"), col("cid"),
@@ -1675,8 +1699,7 @@ object Similarity extends QueryModule {
     assign.join(broadcast(probes), "cell")
       .filter(col("qid") =!= col("nid"))
       .join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
+      .select(col("qid"), col("nid"), pairCos)
       .filter(col("sim") >= RsTau)
   }
 
@@ -1687,18 +1710,7 @@ object Similarity extends QueryModule {
     */
   private val s11Sql =
     s"""WITH $oracleVecs,
-       |c AS (
-       |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT $RsCells),
-       |sims AS (
-       |  SELECT n.vec_id, c.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * c.cv[i])) / (n.nrm * c.cnrm) AS csim
-       |  FROM n CROSS JOIN c),
-       |rk AS (
-       |  SELECT vec_id, cid,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crn
-       |  FROM sims),
-       |assign AS (SELECT vec_id, cid AS cell FROM rk WHERE crn = 1),
+       |${ivfAssignCtes(RsCells)},
        |q AS (
        |  SELECT vec_id FROM n
        |  ORDER BY md5('rsq_' || CAST(vec_id AS VARCHAR)) LIMIT $RsQueries),
@@ -1711,7 +1723,7 @@ object Similarity extends QueryModule {
        |  WHERE p.qid <> a.vec_id)
        |SELECT * FROM (
        |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
+       |    ${sqlCos("x", "y")} AS sim
        |  FROM cand c JOIN n x ON c.qid = x.vec_id JOIN n y ON c.nid = y.vec_id)
        |WHERE sim >= $RsTau""".stripMargin
 
@@ -1727,46 +1739,17 @@ object Similarity extends QueryModule {
     * linear — a FRACTIONAL sample would make the audit (n/c)·n, i.e.
     * quadratic again, which the first cut of this operator got wrong and
     * the 10× tripwire caught), and the ANN side is the index's own
-    * candidate pipeline cut to the batch queries. Per audited query:
-    * k (exact neighbors available), n_hits (of them, how many the index
-    * returned in its top-5), recall = n_hits / k. The corpus-wide mean
-    * is one trivial aggregation the consumer runs; emitting per-query
-    * rows keeps the worst queries attributable (a recall report that
-    * only says "0.93 average" cannot name the queries the index lost).
-    *
-    * Batch rule: md5 order of the salted vec_id, LIMIT-capped — the s07/
-    * s11 query-batch contract; reproducible in both engines and
-    * independent of the s03 plane salt and the s11 query salt.
+    * candidate pipeline cut to the batch queries. Composes
+    * [[queryBatch]] (salt "rec_"), [[exactTopK]] and [[recall]]; the
+    * corpus-wide mean is one trivial aggregation the consumer runs.
     */
   private def s12(s: SparkSession, dir: String): DataFrame = {
     val base = vecs(s, dir).persist()
-    val sampled = base
-      .orderBy(md5(concat(lit("rec_"), col("vec_id").cast("string"))))
-      .limit(RecallQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    // exact top-5 for the sample only: sample × corpus through the
-    // bounded-memory TopK aggregator (s01's kernel, sample-sized)
-    import s.implicits._
-    val exact = sampled.crossJoin(
-        base.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .as[graft.functions.KnnRow]
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(5).toColumn.name("top"))
-      .flatMap { case (qid, top) => top.items.iterator.map(r => (qid, r.nid)) }
-      .toDF("qid", "nid")
+    val sampled = qLeg(queryBatch(base, "rec_", RecallQueries))
     // the index's answer, cut to the sampled queries
     val ann = s03(s, dir).select(col("qid"), col("nid"))
       .join(sampled.select(col("qid")), Seq("qid"))
-    val hits = exact.join(ann, Seq("qid", "nid"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
-    exact.groupBy(col("qid")).agg(count(lit(1)).as("k"))
-      .join(hits, Seq("qid"), "left_outer")
-      .select(col("qid"), col("k"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) / col("k")).as("recall"))
+    recall(exactTopK(sampled, nLeg(base), 5), ann)
   }
 
   /** Oracle: exact side is the sample × corpus top-5 (s01's formula with
@@ -1776,55 +1759,11 @@ object Similarity extends QueryModule {
     */
   private val s12Sql =
     s"""WITH $oracleVecs,
-       |smp AS (
-       |  SELECT vec_id FROM n
-       |  ORDER BY md5('rec_' || CAST(vec_id AS VARCHAR)) LIMIT $RecallQueries),
-       |ex AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT a.vec_id AS qid, b.vec_id AS nid,
-       |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |        list_sum(list_transform(range(1, ${Dim + 1}), i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) DESC,
-       |        b.vec_id) AS rn
-       |    FROM n a JOIN smp USING (vec_id) JOIN n b ON a.vec_id <> b.vec_id)
-       |  WHERE rn <= 5),
-       |pl AS (
-       |  SELECT t AS tbl, p AS plane, list_transform(range(0, $Dim), j ->
-       |    CAST(list_reduce(list_transform(list_transform(range(1, 16),
-       |        i -> substr(md5(t || '_' || p || '_' || j), i, 1)),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS DOUBLE)
-       |      / 576460752303423488.0 - 1) AS pvec
-       |  FROM (SELECT unnest(range(0, $NumTables)) AS t)
-       |  CROSS JOIN (SELECT unnest(range(0, $NumPlanes)) AS p)),
-       |proj AS (
-       |  SELECT n.vec_id, pl.tbl, pl.plane,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * pl.pvec[i])) AS dot
-       |  FROM n CROSS JOIN pl),
-       |bk AS (
-       |  SELECT vec_id, tbl,
-       |    sum(CASE WHEN dot > 0 THEN (1::BIGINT << CAST(plane AS INT)) ELSE 0 END) AS bucket
-       |  FROM proj GROUP BY 1, 2),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-       |  FROM bk a JOIN bk b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-       |sc AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM cand c JOIN n x ON c.qid = x.vec_id JOIN n y ON c.nid = y.vec_id),
-       |ann AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid,
-       |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn
-       |    FROM sc)
-       |  WHERE rn <= 5 AND qid IN (SELECT vec_id FROM smp)),
-       |h AS (
-       |  SELECT ex.qid, count(*) AS n_hits
-       |  FROM ex JOIN ann ON ex.qid = ann.qid AND ex.nid = ann.nid
-       |  GROUP BY 1)
-       |SELECT ex.qid, count(*) AS k,
-       |  coalesce(any_value(h.n_hits), 0) AS n_hits,
-       |  coalesce(any_value(h.n_hits), 0) / count(*) AS recall
-       |FROM ex LEFT JOIN h ON ex.qid = h.qid
-       |GROUP BY 1""".stripMargin
+       |${smpSql("n", "rec_")},
+       |${exSql("n", "n", "a.vec_id <> b.vec_id")},
+       |$lshCtes,
+       |$annSql,
+       |${recallSql("ann")}""".stripMargin
 
   // ---- s13: embedding ingest audit ------------------------------------
 
@@ -1904,8 +1843,7 @@ object Similarity extends QueryModule {
     */
   private def s14(s: SparkSession, dir: String): DataFrame = {
     val base = vecs(s, dir).persist()
-    val cents = base.orderBy(md5(col("vec_id").cast("string"))).limit(IvfCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
+    val cents = cosCents(base, IvfCells)
     val centArr = centArray(cents, col("cid"), col("cv"), col("cnrm"))
     val assign = assignCell(base, centArr, cosKey, "cell").select(col("cell"))
     val byCell = assign.groupBy(col("cell")).agg(count(lit(1)).as("nv"))
@@ -1924,18 +1862,7 @@ object Similarity extends QueryModule {
 
   private val s14Sql =
     s"""WITH $oracleVecs,
-       |c AS (
-       |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT $IvfCells),
-       |sims AS (
-       |  SELECT n.vec_id, c.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * c.cv[i])) / (n.nrm * c.cnrm) AS csim
-       |  FROM n CROSS JOIN c),
-       |rk AS (
-       |  SELECT vec_id, cid,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crn
-       |  FROM sims),
-       |assign AS (SELECT vec_id, cid AS cell FROM rk WHERE crn = 1),
+       |${ivfAssignCtes(IvfCells)},
        |bc AS (SELECT cell, count(*) AS nv FROM assign GROUP BY 1),
        |fc AS (
        |  SELECT c.cid AS cell, CAST(coalesce(bc.nv, 0) AS BIGINT) AS n_vecs
@@ -2012,23 +1939,8 @@ object Similarity extends QueryModule {
     * per query crossing the shuffle.
     */
   private def s19(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val live = vecs(s, dir).filter(Sampling.uhash("del_", col("vec_id")) >= DelFrac)
-    val q = live
-      .orderBy(md5(concat(lit("tq_"), col("vec_id").cast("string")))).limit(TsQueries)
-      .select(col("vec_id").as("qid"), col("v").as("vq"), col("nrm").as("nq"))
-    val scored = broadcast(q).crossJoin(live)
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (dot(col("vq"), col("v")) / (col("nq") * col("nrm"))).as("sim"))
-      .as[graft.functions.KnnRow]
-    scored
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(5).toColumn.name("top"))
-      .flatMap { case (qid, top) =>
-        top.items.iterator.zipWithIndex.map { case (r, i) => (qid, r.nid, r.sim, (i + 1).toLong) }
-      }
-      .toDF("qid", "nid", "sim", "rn")
+    exactTopK(broadcast(qLeg(queryBatch(live, "tq_", TsQueries))), nLeg(live), 5)
   }
 
   private val s19Sql =
@@ -2040,13 +1952,9 @@ object Similarity extends QueryModule {
        |  ORDER BY md5('tq_' || CAST(vec_id AS VARCHAR)) LIMIT $TsQueries),
        |p AS (
        |  SELECT q.qid, c.vec_id AS nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> q.vq[i] * c.v[i])) / (q.nq * c.nrm) AS sim
+       |    ${sqlDot("q.vq", "c.v")} / (q.nq * c.nrm) AS sim
        |  FROM q CROSS JOIN live c WHERE q.qid <> c.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM p)
-       |WHERE rn <= 5""".stripMargin
+       |${topSql("p")}""".stripMargin
 
   /** s22: IVF-PQ — the full production ANN index, composed from parts
     * the gate already certifies one by one: the TRAINED corpus-scaled
@@ -2081,14 +1989,8 @@ object Similarity extends QueryModule {
     val (centSub, codes) = pqParts(base)
     val qids = pqQids(base)
     val tbl = adcTables(base, centSub, qids)
-    val assign = ranked.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = ranked.select(col("vec_id").as("query_id"), col("cid").as("cell"))
-      .join(broadcast(qids.select(col("vec_id").as("query_id"))), "query_id")
-    val cand = probes
-      .join(assign.select(col("vec_id").as("cand_id"), col("cell")), "cell")
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"))
+    val cand = cellCandidates(ranked, Some(qids))
+      .select(col("qid").as("query_id"), col("nid").as("cand_id"))
     val wAdc = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("cand_id"))
     val short = cand
       .join(codes.select(col("vec_id").as("cand_id"), col("codes")), "cand_id")
@@ -2134,7 +2036,7 @@ object Similarity extends QueryModule {
        |    FROM adcs) WHERE rn <= $PqShort),
        |rr AS (
        |  SELECT s.query_id, s.cand_id,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
+       |    ${sqlCos("x", "y")} AS sim
        |  FROM short s JOIN n x ON x.vec_id = s.query_id JOIN n y ON y.vec_id = s.cand_id)
        |SELECT query_id, rk, vec_id, sim FROM (
        |  SELECT query_id, cand_id AS vec_id, sim,
@@ -2233,21 +2135,16 @@ object Similarity extends QueryModule {
 
   /** One serving pass: each query row takes the two-level probe fold
     * (row-local, O(√K) under the frozen broadcast), candidates come
-    * from the cell-keyed [[liveIndex]] equi-join (occupancy-bounded),
-    * exact cosine re-scores, top-5 ties on nid. Shared verbatim by the
+    * from the cell-keyed [[liveIndex]] equi-join (occupancy-bounded)
+    * already carrying the member vectors, and [[topK]] re-scores and
+    * ranks them (top-5, ties on nid). Shared verbatim by the
     * s30 batch entry and es29's per-micro-batch transform, so the live
     * twin cannot drift from the gated semantics.
     */
   private[graft] def serveBatch(qs: DataFrame, index: DataFrame, gArr: DataFrame): DataFrame = {
     val probes = rankCellsTwoLevel(qs, gArr, "l2", KmSearchGroups, IvfProbes)
       .select(col("vec_id").as("qid"), col("cid").as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    probes.join(index, "cell")
-      .join(qs.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")), "qid")
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    topK(probes.join(index, "cell").join(qLeg(qs), "qid"), 5)
   }
 
   /** s30: SERVE the arrivals — the query side of the ingest loop s24
@@ -2292,15 +2189,8 @@ object Similarity extends QueryModule {
        |  SELECT p.qid, a.vec_id AS nid
        |  FROM prq p JOIN aidx a USING (cell)
        |  WHERE ${Sampling.uhashSql("del_", "a.vec_id")} >= $DelFrac),
-       |sc AS (
-       |  SELECT c.qid, c.nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS sim
-       |  FROM cnd c JOIN nd x ON c.qid = x.vec_id JOIN nc y ON c.nid = y.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM sc)
-       |WHERE rn <= 5""".stripMargin
+       |${scoreSql("sc", "cnd", "nd", "nc")}
+       |${topSql("sc")}""".stripMargin
 
   // ---- s31: recall audit of the SERVING path ---------------------------
 
@@ -2315,47 +2205,29 @@ object Similarity extends QueryModule {
     * SAME [[serveBatch]] kernel s30/es29 run, so the audit measures
     * production code, not a reimplementation.
     *
-    * Scale shape: the exact leg is batch × live-corpus through the
-    * bounded-memory TopK aggregator (s21's lesson — 5·batch rows cross
-    * the shuffle, never a per-query window over the scored corpus);
-    * the serving leg probes only the batch (row-local fold + the
-    * occupancy-bounded cell join). Batch salt "svr_" is independent of
-    * every other sample salt.
+    * Scale shape: the exact leg is [[exactTopK]] over batch × live
+    * corpus (5·batch rows cross the shuffle, never a per-query window
+    * over the scored corpus); the serving leg probes only the batch
+    * (row-local fold + the occupancy-bounded cell join); [[recall]]
+    * joins the two. Batch salt "svr_".
     */
   private def s31(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val (gArr, ranked) = sharedIndex(s, dir, split = true)
     // the exact-recall cartesian streams this corpus under the 50-query
     // broadcast — spread floors the dot-product stage's parallelism
     val corpus = Tables.spread(vecs(s, dir).filter(!isDeltaVec)).persist()
     val index = liveIndexFrom(corpus, membershipOf(ranked))
     val arrivals = vecs(s, dir).filter(isDeltaVec)
-    val sampled = arrivals
-      .orderBy(md5(concat(lit("svr_"), col("vec_id").cast("string")))).limit(RecallQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
+    val sampled = queryBatch(arrivals, "svr_", RecallQueries)
     val live = corpus.filter(Sampling.uhash("del_", col("vec_id")) >= DelFrac)
-    // arrivals and corpus are disjoint populations, so no self-pair cut
-    val exact = sampled.crossJoin(
-        live.select(col("vec_id").as("nid"), col("v").as("vb"), col("nrm").as("nb")))
-      .select(col("qid"), col("nid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .as[graft.functions.KnnRow]
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(5).toColumn.name("top"))
-      .flatMap { case (qid, top) => top.items.iterator.map(r => (qid, r.nid)) }
-      .toDF("qid", "nid")
+    // arrivals and corpus are disjoint populations, so the kernel's
+    // self-pair cut never fires here
+    val exact = exactTopK(qLeg(sampled), nLeg(live), 5)
       .persist() // read twice: hit join + per-query k (the s21 rule)
     val served = serveBatch(
-        arrivals.join(broadcast(sampled.select(col("qid").as("vec_id"))), "vec_id"),
-        index, gArr)
+        arrivals.join(broadcast(sampled.select(col("vec_id"))), "vec_id"), index, gArr)
       .select(col("qid"), col("nid"))
-    val hits = exact.join(served, Seq("qid", "nid"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
-    exact.groupBy(col("qid")).agg(count(lit(1)).as("k"))
-      .join(hits, Seq("qid"), "left_outer")
-      .select(col("qid"), col("k"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) / col("k")).as("recall"))
+    recall(exact, served)
   }
 
   /** Oracle: the dual-population chain (s30's) + the exact live-corpus
@@ -2371,14 +2243,12 @@ object Similarity extends QueryModule {
        |lidx AS (
        |  SELECT vec_id, cid AS cell FROM prall
        |  WHERE rn = 1 AND ${Sampling.uhashSql("del_", "vec_id")} >= $DelFrac),
-       |smp AS (
-       |  SELECT vec_id FROM nd
-       |  ORDER BY md5('svr_' || CAST(vec_id AS VARCHAR)) LIMIT $RecallQueries),
+       |${smpSql("nd", "svr_")},
        |srv AS (
        |  SELECT qid, nid FROM (
        |    SELECT c.qid, c.nid,
        |      row_number() OVER (PARTITION BY c.qid ORDER BY
-       |        list_sum(list_transform(range(1, ${Dim + 1}), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) DESC,
+       |        ${sqlCos("x", "y")} DESC,
        |        c.nid) AS rn
        |    FROM (
        |      SELECT p.vec_id AS qid, a.vec_id AS nid
@@ -2386,24 +2256,8 @@ object Similarity extends QueryModule {
        |      WHERE p.vec_id IN (SELECT vec_id FROM smp)) c
        |    JOIN nd x ON c.qid = x.vec_id JOIN nc y ON c.nid = y.vec_id)
        |  WHERE rn <= 5),
-       |ex AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT a.vec_id AS qid, b.vec_id AS nid,
-       |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |        list_sum(list_transform(range(1, ${Dim + 1}), i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) DESC,
-       |        b.vec_id) AS rn
-       |    FROM nd a JOIN smp USING (vec_id)
-       |    JOIN nc b ON ${Sampling.uhashSql("del_", "b.vec_id")} >= $DelFrac)
-       |  WHERE rn <= 5),
-       |h AS (
-       |  SELECT ex.qid, count(*) AS n_hits
-       |  FROM ex JOIN srv ON ex.qid = srv.qid AND ex.nid = srv.nid
-       |  GROUP BY 1)
-       |SELECT ex.qid, count(*) AS k,
-       |  coalesce(any_value(h.n_hits), 0) AS n_hits,
-       |  coalesce(any_value(h.n_hits), 0) / count(*) AS recall
-       |FROM ex LEFT JOIN h ON ex.qid = h.qid
-       |GROUP BY 1""".stripMargin
+       |${exSql("nd", "nc", s"${Sampling.uhashSql("del_", "b.vec_id")} >= $DelFrac")},
+       |${recallSql("srv")}""".stripMargin
 
   // ---- s32: serve FROM the stored index artifact -----------------------
 
@@ -2460,9 +2314,8 @@ object Similarity extends QueryModule {
     * re-read), append the arrival ranking to the stored membership and
     * PUBLISH it as the next generation through [[IndexGenerations]] —
     * write, verify, atomic `_current` pointer swap, predecessor
-    * reclaim (round-14 verdict #1: the scratch-write version proved
-    * the artifact grows exactly but nothing named it the serving
-    * generation). The emitted membership is read back THROUGH the
+    * reclaim (a scratch write alone would prove the artifact grows
+    * exactly without naming it the serving generation). The emitted membership is read back THROUGH the
     * pointer (integrity check on). This closes the artifact lifecycle
     * arc: s32 proves a stored index SERVES exactly, s33 proves it
     * GROWS exactly and lands atomically — the nightly publish a
@@ -2552,7 +2405,7 @@ object Similarity extends QueryModule {
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 
-  /** The RETRAIN-FREE drift signal (round-15 verdict #2):
+  /** The RETRAIN-FREE drift signal:
     * total-variation distance between the arrival population's cell
     * distribution UNDER THE FROZEN CODEBOOK and the stored corpus
     * membership's cell distribution — `0.5 · Σ_c |pΔ(c) − pC(c)|`,
@@ -2598,8 +2451,7 @@ object Similarity extends QueryModule {
     if (r.isNullAt(0)) 0.0 else r.getDouble(0) / 2.0
   }
 
-  /** The drift-triggered MAINTENANCE DECISION (round-14 verdict gap #2:
-    * "drift never triggers a retrain") — compactWhere's breach rule
+  /** The drift-triggered MAINTENANCE DECISION — compactWhere's breach rule
     * applied to the index lifecycle: measure how far the arrivals have
     * outgrown the frozen generation ([[arrivalDrift]] — the
     * total-variation occupancy divergence of Δ, assigned under the
@@ -2613,8 +2465,7 @@ object Similarity extends QueryModule {
     * so both branches certify the publish path, not just the decision.
     *
     * Scale shape: NO training happens to decide — unconditionally
-    * (round-15 verdict #2: the old decision measured
-    * [[migrationRate]] against a fresh retrain, so at production scale
+    * (measuring [[migrationRate]] against a fresh retrain instead, so at production scale
     * deciding whether to retrain cost a full retrain; the proxy needs
     * only the stored artifact + Δ, the same retrain-free shape as the
     * layout twin [[Compaction.basisDrift]]). The decision is |Δ|
@@ -2723,6 +2574,49 @@ object Similarity extends QueryModule {
 
   // ---- s16: second Lloyd iteration + migration audit ------------------
 
+  /** The one-Lloyd-step assignment shared by s16 (convergence audit)
+    * and s26 (cluster cards): seed codebook (md5-order KmK sample) →
+    * assign (cid1) → exact-decimal means → re-assign (cid2). Returns
+    * the corpus with BOTH generations' cell ids; the intermediate
+    * `assigned` is persisted because the means aggregate and the final
+    * assignment both read it.
+    */
+  private def oneStepAssigned(base0: DataFrame): DataFrame = {
+    val base = Tables.spread(base0) // K l2 distances per row, twice
+    val centArr = centArray(kmSeeds(base), col("cid"), col("cv"))
+    val assigned = assignCell(base, centArr, l2Key, "cid1").persist()
+    val cv2 = meansCodebook(assigned, "cid1")
+    val cv2Arr = centArray(cv2, col("cid"), col("cv"))
+    assignCell(assigned, cv2Arr, l2Key, "cid2")
+  }
+
+  /** The matching oracle CTE chain (cent → … → a2), spliced by s16Sql
+    * and s26Sql so the two entries' training text cannot drift (the
+    * p13 shared-declaration rule). Expects `n` in scope.
+    */
+  private lazy val oneStepCtes =
+    s"""${kmSeedCtes("d1")},
+       |a1 AS (SELECT vec_id, cid AS cid1 FROM (
+       |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+       |  FROM d1) WHERE rn = 1),
+       |px AS (
+       |  SELECT a1.cid1, unnest(range(1, len(n.v)+1)) AS pos,
+       |         unnest(list_transform(n.v, x -> CAST(x AS VARCHAR))) AS xs
+       |  FROM n JOIN a1 USING (vec_id)),
+       |m AS (
+       |  SELECT cid1, pos,
+       |    CAST(sum(CAST(xs AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS mx
+       |  FROM px GROUP BY 1, 2),
+       |cv2 AS (
+       |  SELECT cid1 AS cid,
+       |    list_transform(list_sort(list(struct_pack(pos := pos, mx := mx))),
+       |                   e -> e.mx) AS cv
+       |  FROM m GROUP BY 1),
+       |${l2DistSql("d2", "cv2")},
+       |a2 AS (SELECT vec_id, cid AS cid2 FROM (
+       |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+       |  FROM d2) WHERE rn = 1)""".stripMargin
+
   /** s16: k-means convergence velocity — run s10's Lloyd step, recompute
     * the centroids as the assigned means, REASSIGN, and report per final
     * cell: population and how many members arrived from a different
@@ -2745,65 +2639,6 @@ object Similarity extends QueryModule {
     * the cid-sorted array == ORDER BY d, cid, means from exact
     * float→string→DECIMAL(28,12) sums divided once in IEEE doubles.
     */
-  /** The one-Lloyd-step assignment shared by s16 (convergence audit)
-    * and s26 (cluster cards): seed codebook (md5-order KmK sample) →
-    * assign (cid1) → exact-decimal means → re-assign (cid2). Returns
-    * the corpus with BOTH generations' cell ids; the intermediate
-    * `assigned` is persisted because the means aggregate and the final
-    * assignment both read it.
-    */
-  private def oneStepAssigned(base0: DataFrame): DataFrame = {
-    val base = Tables.spread(base0) // K l2 distances per row, twice
-    val cents = base
-      .orderBy(md5(concat(lit("km_"), col("vec_id").cast("string")))).limit(KmK)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val centArr = centArray(cents, col("cid"), col("cv"))
-    val assigned = assignCell(base, centArr, l2Key, "cid1").persist()
-    val cv2 = meansCodebook(assigned, "cid1")
-    val cv2Arr = centArray(cv2, col("cid"), col("cv"))
-    assignCell(assigned, cv2Arr, l2Key, "cid2")
-  }
-
-  /** The matching oracle CTE chain (cent → … → a2), spliced by s16Sql
-    * and s26Sql so the two entries' training text cannot drift (the
-    * p13 shared-declaration rule). Expects `n` in scope.
-    */
-  private lazy val oneStepCtes =
-    s"""cent AS (
-       |  SELECT vec_id AS cid, v AS cv FROM n
-       |  ORDER BY md5('km_' || CAST(vec_id AS VARCHAR)) LIMIT $KmK),
-       |d1 AS (
-       |  SELECT n.vec_id, cent.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * n.v[i]))
-       |      - 2.0 * list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * cent.cv[i]))
-       |      + list_sum(list_transform(range(1, ${Dim + 1}), i -> cent.cv[i] * cent.cv[i])) AS d
-       |  FROM n CROSS JOIN cent),
-       |a1 AS (SELECT vec_id, cid AS cid1 FROM (
-       |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-       |  FROM d1) WHERE rn = 1),
-       |px AS (
-       |  SELECT a1.cid1, unnest(range(1, len(n.v)+1)) AS pos,
-       |         unnest(list_transform(n.v, x -> CAST(x AS VARCHAR))) AS xs
-       |  FROM n JOIN a1 USING (vec_id)),
-       |m AS (
-       |  SELECT cid1, pos,
-       |    CAST(sum(CAST(xs AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS mx
-       |  FROM px GROUP BY 1, 2),
-       |cv2 AS (
-       |  SELECT cid1 AS cid,
-       |    list_transform(list_sort(list(struct_pack(pos := pos, mx := mx))),
-       |                   e -> e.mx) AS cv
-       |  FROM m GROUP BY 1),
-       |d2 AS (
-       |  SELECT n.vec_id, cv2.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * n.v[i]))
-       |      - 2.0 * list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * cv2.cv[i]))
-       |      + list_sum(list_transform(range(1, ${Dim + 1}), i -> cv2.cv[i] * cv2.cv[i])) AS d
-       |  FROM n CROSS JOIN cv2),
-       |a2 AS (SELECT vec_id, cid AS cid2 FROM (
-       |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-       |  FROM d2) WHERE rn = 1)""".stripMargin
-
   private def s16(s: SparkSession, dir: String): DataFrame =
     oneStepAssigned(vecs(s, dir))
       .groupBy(col("cid2").as("cid"))
@@ -2842,10 +2677,7 @@ object Similarity extends QueryModule {
     */
   private def s17(s: SparkSession, dir: String): DataFrame = {
     val base = vecs(s, dir)
-    val cents = base
-      .orderBy(md5(concat(lit("km_"), col("vec_id").cast("string")))).limit(KmK)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val centArr = centArray(cents, col("cid"), col("cv"))
+    val centArr = centArray(kmSeeds(base), col("cid"), col("cv"))
     // the argmin struct carries BOTH fields: the cell (cid) and its
     // residual (k, the min squared distance) — one kernel evaluation
     base.crossJoin(broadcast(centArr))
@@ -2860,17 +2692,9 @@ object Similarity extends QueryModule {
         max(col("q")).as("max_err_q"))
   }
 
-  private val s17Sql =
+  private lazy val s17Sql =
     s"""WITH $oracleVecs,
-       |cent AS (
-       |  SELECT vec_id AS cid, v AS cv FROM n
-       |  ORDER BY md5('km_' || CAST(vec_id AS VARCHAR)) LIMIT $KmK),
-       |d AS (
-       |  SELECT n.vec_id, cent.cid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * n.v[i]))
-       |      - 2.0 * list_sum(list_transform(range(1, ${Dim + 1}), i -> n.v[i] * cent.cv[i]))
-       |      + list_sum(list_transform(range(1, ${Dim + 1}), i -> cent.cv[i] * cent.cv[i])) AS d
-       |  FROM n CROSS JOIN cent),
+       |${kmSeedCtes("d")},
        |a AS (
        |  SELECT vec_id, cid, CAST(floor(d * 1048576.0) AS BIGINT) AS q FROM (
        |    SELECT vec_id, cid, d,
@@ -2906,23 +2730,12 @@ object Similarity extends QueryModule {
     * this operator's contract.
     */
   private def s18(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val base = vecsWithLabel(s, dir)
-    val q = base
-      .orderBy(md5(concat(lit("fq_"), col("vec_id").cast("string")))).limit(FqQueries)
-      .select(col("vec_id").as("qid"), col("label"), col("v").as("vq"), col("nrm").as("nq"))
-    val scored = broadcast(q).join(base, "label")
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (dot(col("vq"), col("v")) / (col("nq") * col("nrm"))).as("sim"))
-      .as[graft.functions.KnnRow]
-    scored
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(5).toColumn.name("top"))
-      .flatMap { case (qid, top) =>
-        top.items.iterator.zipWithIndex.map { case (r, i) => (qid, r.nid, r.sim, (i + 1).toLong) }
-      }
-      .toDF("qid", "nid", "sim", "rn")
+    // the label is the one column both legs carry: the join key
+    val q = queryBatch(base, "fq_", FqQueries)
+      .select(col("vec_id").as("qid"), col("label"), col("v").as("va"), col("nrm").as("na"))
+    exactTopK(broadcast(q),
+      base.select(col("vec_id").as("nid"), col("label"), col("v").as("vb"), col("nrm").as("nb")), 5)
   }
 
   private val s18Sql =
@@ -2937,13 +2750,9 @@ object Similarity extends QueryModule {
        |  ORDER BY md5('fq_' || CAST(vec_id AS VARCHAR)) LIMIT $FqQueries),
        |p AS (
        |  SELECT q.qid, c.vec_id AS nid,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> q.vq[i] * c.v[i])) / (q.nq * c.nrm) AS sim
+       |    ${sqlDot("q.vq", "c.v")} / (q.nq * c.nrm) AS sim
        |  FROM q JOIN nl c ON q.label = c.label AND q.qid <> c.vec_id)
-       |SELECT qid, nid, sim, rn FROM (
-       |  SELECT qid, nid, sim,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rn
-       |  FROM p)
-       |WHERE rn <= 5""".stripMargin
+       |${topSql("p")}""".stripMargin
 
   // ---- s25: hybrid retrieval — BM25 + cosine, reciprocal-rank fused ----
 
@@ -2954,48 +2763,14 @@ object Similarity extends QueryModule {
   private val HybK       = 10  // fused results per query
   private val HybRrfK    = 60  // the standard RRF dampening constant
 
-  /** s25: HYBRID retrieval — the query-by-document shape RAG curation
-    * and retrieval-based decontamination actually run: each query doc's
-    * lexical neighbors (per-doc BM25 — t15's exact formula via the
-    * shared [[TextAnalysis.bm25Sc]], query = the doc's top-[[HybTerms]]
-    * informative terms) and semantic neighbors (exact cosine over the
-    * embedding, vec_id == doc_id by m04's record-assembly contract) are
-    * FUSED by reciprocal-rank fusion: rrf = Σ_lists 1/([[HybRrfK]] +
-    * rank). RRF needs no score calibration between BM25 and cosine —
-    * only ranks cross the fusion — which is why it is the production
-    * default for sparse+dense ensembles.
-    *
-    * Scale shape: the query batch is a constant-size md5-order sample
-    * (the pqq_/fq_ rule), so BOTH query frames ride capped broadcasts.
-    * Lexical candidates are an inverted-index equi-join on word — the
-    * classic sparse-retrieval shape, never all-pairs: the per-query
-    * term set is bounded by [[HybTerms]] and terms in > [[HybDfPct]]%
-    * of documents are dropped (a RELATIVE ubiquity cap — absolute df
-    * caps are vacuous on small vocabularies and over-eager on
-    * web-scale ones). Posting-list fanout for the surviving terms is
-    * the inherent cost of sparse retrieval; at index scale the
-    * standard refinement is impact-ordered/WAND pruning, which slots
-    * into the same join without changing the contract. Semantic candidates run the corpus ONCE against
-    * the broadcast query batch and keep top-[[HybListK]] through the
-    * bounded-memory TopKNeighbors Aggregator (<= k rows per query
-    * cross the shuffle — the s01 contract; swap in the s20 trained
-    * probe for sub-linear scan at 100 TB). The fusion full-outer join
-    * touches <= 2·HybListK rows per query. No stage is corpus×corpus.
-    *
-    * Determinism: BM25 is t15's quantized-idf formula (defined once);
-    * per-pair totals fold over term-SORTED matches (the q41/s08 rule);
-    * cosine is the shared vec_dot fold; rrf terms are exact double
-    * divisions 1/(60+rank) summed in fixed lexical-then-semantic
-    * order; every rank ties on the id column.
-    */
   /** The two ranked neighbor lists (lexical, semantic) shared by s25
     * (fusion) and s27 (training-pair mining): each (query_id, cand_id,
     * lrank/srank) with rank <= [[HybListK]]. Retrieved ONCE per
     * (process, corpus) through the store — the retrieval system runs
     * one pass and every consumer (the fused ranking, the mined
     * training pairs) reads the same materialized lists, the d07-labels
-    * discipline applied to retrieval output; round 14's bench paid the
-    * full BM25 + exact-cosine pass per entry per sample.
+    * discipline applied to retrieval output; without the store the
+    * bench paid the full BM25 + exact-cosine pass per entry per sample.
     */
   private def hybridLists(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val key = s"hybrid_lists|$dir|" +
@@ -3010,15 +2785,12 @@ object Similarity extends QueryModule {
   }
 
   private[graft] def buildHybridLists(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val base = vecs(s, dir)
     // query batch: md5-order sample of ids live on BOTH sides (text +
     // usable embedding), so each query has a lexical AND a semantic face
-    val qids = base.select(col("vec_id").as("query_id"))
-      .join(docs.select(col("doc_id").as("query_id")), "query_id")
-      .orderBy(md5(concat(lit("hyb_"), col("query_id").cast("string"))))
-      .limit(HybQueries)
+    val qids = queryBatch(base.select(col("vec_id").as("query_id"))
+      .join(docs.select(col("doc_id").as("query_id")), "query_id"), "hyb_", HybQueries, "query_id")
 
     // lexical list: per-query-doc BM25 over the shared-term equi-join
     val tf = docs
@@ -3060,22 +2832,46 @@ object Similarity extends QueryModule {
       .select(col("query_id"), col("cand_id"), col("lrank"))
 
     // semantic list: corpus vs broadcast query batch, bounded top-k agg
-    val qv = base.join(broadcast(qids), base("vec_id") === qids("query_id"))
-      .select(col("query_id"), col("v").as("qvv"), col("nrm").as("qn"))
-    val semTop = base.crossJoin(broadcast(qv))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id").as("qid"), col("vec_id").as("nid"),
-        (dot(col("qvv"), col("v")) / (col("qn") * col("nrm"))).as("sim"))
-      .as[graft.functions.KnnRow]
-      .groupByKey(_.qid)
-      .agg(new graft.functions.TopKNeighbors(HybListK).toColumn.name("top"))
-      .flatMap { case (qid, top) =>
-        top.items.iterator.zipWithIndex.map { case (r, i) => (qid, r.nid, (i + 1).toLong) }
-      }
-      .toDF("query_id", "cand_id", "srank")
+    val qv = qLeg(base.join(broadcast(qids), base("vec_id") === qids("query_id")))
+    val semTop = exactTopK(broadcast(qv), nLeg(base), HybListK)
+      .select(col("qid").as("query_id"), col("nid").as("cand_id"), col("rn").as("srank"))
     (lexTop, semTop)
   }
 
+  /** s25: HYBRID retrieval — the query-by-document shape RAG curation
+    * and retrieval-based decontamination actually run: each query doc's
+    * lexical neighbors (per-doc BM25 — t15's exact formula via the
+    * shared [[TextAnalysis.bm25Sc]], query = the doc's top-[[HybTerms]]
+    * informative terms) and semantic neighbors (exact cosine over the
+    * embedding, vec_id == doc_id by m04's record-assembly contract) are
+    * FUSED by reciprocal-rank fusion: rrf = Σ_lists 1/([[HybRrfK]] +
+    * rank). RRF needs no score calibration between BM25 and cosine —
+    * only ranks cross the fusion — which is why it is the production
+    * default for sparse+dense ensembles.
+    *
+    * Scale shape: the query batch is a constant-size md5-order sample
+    * (the pqq_/fq_ rule), so BOTH query frames ride capped broadcasts.
+    * Lexical candidates are an inverted-index equi-join on word — the
+    * classic sparse-retrieval shape, never all-pairs: the per-query
+    * term set is bounded by [[HybTerms]] and terms in > [[HybDfPct]]%
+    * of documents are dropped (a RELATIVE ubiquity cap — absolute df
+    * caps are vacuous on small vocabularies and over-eager on
+    * web-scale ones). Posting-list fanout for the surviving terms is
+    * the inherent cost of sparse retrieval; at index scale the
+    * standard refinement is impact-ordered/WAND pruning, which slots
+    * into the same join without changing the contract. Semantic candidates run the corpus ONCE against
+    * the broadcast query batch and keep top-[[HybListK]] through the
+    * bounded-memory TopKNeighbors Aggregator (<= k rows per query
+    * cross the shuffle — the s01 contract; swap in the s20 trained
+    * probe for sub-linear scan at 100 TB). The fusion full-outer join
+    * touches <= 2·HybListK rows per query. No stage is corpus×corpus.
+    *
+    * Determinism: BM25 is t15's quantized-idf formula (defined once);
+    * per-pair totals fold over term-SORTED matches (the q41/s08 rule);
+    * cosine is the shared vec_dot fold; rrf terms are exact double
+    * divisions 1/(60+rank) summed in fixed lexical-then-semantic
+    * order; every rank ties on the id column.
+    */
   private def s25(s: SparkSession, dir: String): DataFrame = {
     val (lexTop, semTop) = hybridLists(s, dir)
     // reciprocal-rank fusion over the two capped lists
@@ -3132,7 +2928,7 @@ object Similarity extends QueryModule {
        |  WHERE lrank <= $HybListK),
        |sp AS (
        |  SELECT q.query_id, b.vec_id AS cand_id,
-       |    list_sum(list_transform(range(1, ${Dim + 1}), i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) AS sim
+       |    ${sqlCos("a", "b")} AS sim
        |  FROM q JOIN n a ON a.vec_id = q.query_id
        |  JOIN n b ON b.vec_id <> q.query_id),
        |st AS (

@@ -56,15 +56,17 @@ object StreamingGate extends QueryModule {
     try body finally s.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  /** Run `body` in a fresh `java.io.tmpdir` directory named `prefix`
-    * plus a random suffix, and delete that directory in `finally`: the
-    * one owner of every gate's scratch state. Each invocation gets its
-    * own directory and deletes only that one, so a concurrent run of the
-    * same query (another session or process) never loses its live
-    * checkpoint to a prefix sweep.
+  /** Run `body` in a fresh directory named `prefix` plus a random
+    * suffix under the per-process store base ([[graft.core.ProcessStore]],
+    * whose shutdown hook reclaims what a killed run leaves), and delete
+    * that directory in `finally`: the one owner of every gate's scratch
+    * state. Each invocation gets its own directory and deletes only that
+    * one, so a concurrent run of the same query never loses its live
+    * checkpoint to a prefix sweep, and another process's runs never
+    * share its parent.
     */
   private def inScratchDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val dir = java.nio.file.Files.createTempDirectory(graft.core.ProcessStore.base.toPath, prefix)
     try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 

@@ -259,8 +259,10 @@ class Round12Spec extends AnyFunSuite {
     // the round-11 advisory: the old prefix sweep of the GLOBAL tmpdir
     // could delete a concurrent run's live checkpoint. Now: a planted
     // sibling directory with the same prefix must survive the query,
-    // and the query's own scratch must be gone when it returns.
-    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // and the query's own scratch must be gone when it returns. Listing
+    // and planting happen in this process's own scratch base, so a
+    // concurrent Bench or Verify run cannot change what is listed.
+    val tmpRoot = graft.core.ProcessStore.base
     def dirsWithPrefix(p: String): Set[String] =
       Option(tmpRoot.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith(p)).map(_.getName).toSet
@@ -269,7 +271,7 @@ class Round12Spec extends AnyFunSuite {
                             ("es25_stream_encode", "graft-es25"),
                             ("es27_stream_sketch", "graft-es27"),
                             ("es30_stream_blocks", "graft-es30"))) {
-      val sibling = java.nio.file.Files.createTempDirectory(prefix).toFile
+      val sibling = java.nio.file.Files.createTempDirectory(tmpRoot.toPath, prefix).toFile
       val canary = new java.io.File(sibling, "ckpt-canary")
       assert(canary.mkdir())
       val before = dirsWithPrefix(prefix)

@@ -503,6 +503,34 @@ class Round15Spec extends AnyFunSuite {
       "exprId/plan_id counter offsets must not enter the fp")
     assert(Bench.fpOf("Project [a#1, b#2]") !== Bench.fpOf("Project [a#1, b#1]"),
       "renumbering must keep distinct columns distinct")
+    // a typed encoder's loop variable and a CTE carry JVM-global ids too:
+    // renumbered by first appearance, each in its own numbering
+    val lv = "lambdavariable(MapObject, ObjectType(class java.lang.Object), true, "
+    assert(Bench.fpOf(s"Project [${lv}35), ${lv}36)]") ===
+      Bench.fpOf(s"Project [${lv}-7), ${lv}912)]"),
+      "lambdavariable id offsets must not enter the fp")
+    assert(Bench.fpOf(s"Project [${lv}35), ${lv}36)]") !==
+      Bench.fpOf(s"Project [${lv}35), ${lv}35)]"),
+      "distinct lambda variables must stay distinct")
+    assert(Bench.fpOf("CTERelationDef 3, false\n+- UnionLoop 3\n   +- UnionLoopRef 3, [none#0]\n" +
+        "CTERelationRef 3, true, [none#0]") ===
+      Bench.fpOf("CTERelationDef 6, false\n+- UnionLoop 6\n   +- UnionLoopRef 6, [none#0]\n" +
+        "CTERelationRef 6, true, [none#0]"),
+      "CTE id offsets must not enter the fp")
+    assert(Bench.fpOf("CTERelationRef 3, true\nCTERelationRef 4, true") !==
+      Bench.fpOf("CTERelationRef 3, true\nCTERelationRef 3, true"),
+      "distinct CTEs must stay distinct")
+  }
+
+  test("plan fingerprint is stable across two builds of the same query in one session") {
+    // s01's as[KnnRow] encoder allocates a fresh lambdavariable id per
+    // build and q40's recursive CTE a fresh CTE id: both must fingerprint
+    // the same on the second build, or fp:same can never hold for them
+    for (q <- Seq("s01_cosine_knn", "q40_recursive_cte")) {
+      val fn = SparkEntry.queries(q)
+      try assert(Bench.planFp(fn(spark, dir)) === Bench.planFp(fn(spark, dir)), q)
+      finally graft.core.Sessions.sweepPersistedState(spark)
+    }
   }
 
   test("sustained-inflation candidates and resolution obey the mover rule") {

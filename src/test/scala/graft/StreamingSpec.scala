@@ -985,9 +985,11 @@ class StreamingSpec extends AnyFunSuite with ScratchTests {
   }
 
   test("es22 run twice in one session: the second run leaves the first's frame readable") {
-    // each run owns its scratch dir: a prefix sweep of tmpdir by the second
-    // run would delete the files the first run's frame reads
-    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // each run owns its scratch dir: a prefix sweep of the scratch base by
+    // the second run would delete the files the first run's frame reads.
+    // The base is this process's own, so another process running es22
+    // cannot change what this test lists.
+    val tmpRoot = graft.core.ProcessStore.base
     def es22Dirs: Set[String] = Option(tmpRoot.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("graft-es22")).map(_.getName).toSet
     val before = es22Dirs
