@@ -173,16 +173,22 @@ object Bench {
     *    id of a CTE (`CTERelationDef`/`CTERelationRef`/`UnionLoop`/
     *    `UnionLoopRef`; q40 counts its own earlier runs). Both are
     *    renumbered by first appearance the same way, each in its own
-    *    numbering.
+    *    numbering;
+    *  - canonicalization flattens a chain of one commutative operator
+    *    into `multicommutativeop(operands..., class <op>, <evalMode>)`
+    *    and orders the operands by hash, and that order differed between
+    *    two runs of the same code (t03/t20's `a + b + c + d = 0`). Each
+    *    such node's operands are sorted by their text, before the
+    *    renumbering, so it cannot move the first appearance of an id.
     * The fingerprint must track plan STRUCTURE only.
     */
   private[graft] def normalize(plan: String): String = {
-    val s = plan
+    val s = sortCommutativeOperands(plan
       .replaceAll("\\$\\$?Lambda\\$\\d+(/0x[0-9a-f]+)?", "\\$Lambda")
       .replaceAll("@[0-9a-f]{4,}", "@id")
       .replaceAll("keys: \\[[^\\]]*\\], values: \\[[^\\]]*\\]",
         "keys: [...], values: [...]")
-      .replaceAll(", \\[plan_id=\\d+\\]", "")
+      .replaceAll(", \\[plan_id=\\d+\\]", ""))
     // (prefix)(id)(suffix) patterns, each renumbered by first appearance
     Seq("(#)(\\d+)()",
         "(lambdavariable\\((?:[^()]|\\([^()]*\\))*?, (?:true|false), )(-?\\d+)(\\))",
@@ -192,6 +198,38 @@ object Bench {
         re.r.replaceAllIn(acc, m => scala.util.matching.Regex.quoteReplacement(
           m.group(1) + renumber.getOrElseUpdate(m.group(2), renumber.size) + m.group(3)))
       }
+  }
+
+  /** `plan` with the operands of every `multicommutativeop(...)` sorted
+    * by their text (nested nodes first); its trailing operator class and
+    * eval mode stay last. A node whose brackets do not balance is left
+    * as it is.
+    */
+  private def sortCommutativeOperands(plan: String): String = {
+    val open = "multicommutativeop("
+    val at = plan.indexOf(open)
+    if (at < 0) return plan
+    val start = at + open.length
+    val cuts = scala.collection.mutable.ArrayBuffer(start - 1)
+    var depth = 0
+    var i = start
+    while (i < plan.length && depth >= 0) {
+      plan(i) match {
+        case '(' | '[' => depth += 1
+        case ')' | ']' => depth -= 1
+        case ',' if depth == 0 => cuts += i
+        case _ =>
+      }
+      i += 1
+    }
+    if (depth >= 0) return plan
+    cuts += i - 1
+    val args = cuts.zip(cuts.tail).map { case (a, b) =>
+      sortCommutativeOperands(plan.substring(a + 1, b).trim)
+    }.toSeq
+    val (operands, rest) = args.span(!_.startsWith("class "))
+    plan.substring(0, start) + (operands.sorted ++ rest).mkString(", ") + ")" +
+      sortCommutativeOperands(plan.substring(i))
   }
 
   private[graft] def fpOf(plan: String): String =

@@ -1,8 +1,12 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** The reference engine's generic MapReduce contract, re-expressed on
   * Datasets.
@@ -16,27 +20,45 @@ import org.apache.spark.sql.functions._
   *   - observable output: total lexicographic order by key, `key: value`
   *     text lines (`mapreduce.go:312-328`)
   *
-  * Spark-first mapping: `flatMap` -> `groupByKey` -> `mapGroups` -> `orderBy`.
-  * The shuffle, barrier scheduling, retry and worker lifecycle of the
-  * reference (master.go/worker.go) are inherited from Spark and not ported.
+  * Spark-first mapping: `mapPartitions` (user Map + in-mapper combining)
+  * -> `groupBy(key)` -> `mapGroups` -> `orderBy`. The shuffle, barrier
+  * scheduling, retry and worker lifecycle of the reference
+  * (master.go/worker.go) are inherited from Spark and not ported.
   *
-  * Scale note (100 TB): the general contract (`run`) delivers the FULL value
-  * list to one reduce call, so it cannot do map-side partial aggregation —
-  * exactly like the reference, which ships every (k,v) record across the
-  * shuffle (`mapreduce.go:194-211`). For algebraic reducers use
-  * [[runReduced]] (reduceGroups => partial aggregation before shuffle) or
-  * [[runAggregated]] (an [[Aggregator]], fully codegen-friendly partial/final
-  * agg). A 100 TB word count must take one of those paths; `run` exists for
-  * contract parity with non-algebraic user reducers.
+  * Scale note (100 TB): the general contract (`run`) still delivers the
+  * FULL value list to one reduce call, so it cannot fold values map-side
+  * the way an algebraic reducer can. It does pack them map-side: each map
+  * task groups its own output by key in a bounded buffer and ships one
+  * `(key, values-chunk)` record per key per flush, where the reference
+  * ships every (k,v) record across the shuffle (`mapreduce.go:194-211`).
+  * A word count over few distinct words thus shuffles a few records per
+  * key and map task instead of one per word, but the reduce side still
+  * reads every value. For algebraic reducers use [[runReduced]]
+  * (reduceGroups => partial aggregation before shuffle) or
+  * [[runAggregated]] (an [[Aggregator]], fully codegen-friendly
+  * partial/final agg). A 100 TB word count must take one of those paths;
+  * `run` exists for contract parity with non-algebraic user reducers.
   */
 object MapReduceJob {
 
-  /** General (non-algebraic) contract: reduce sees all values of a key.
+  /** General (non-algebraic) contract: reduce sees all values of a key,
+    * each exactly once, in no specified order.
     *
-    * One shuffle: groupByKey hash-partitions on the key exactly like the
-    * reference's FNV%nReduce bucketing (an explicit repartition(nReduce)
-    * first would shuffle the data a second time for nothing). `nReduce`
-    * is accepted for contract parity; the actual reduce parallelism is
+    * Map side: each map task runs `map` over its lines and combines the
+    * pairs in a buffer keyed by key (in-mapper combining), flushing one
+    * `(key, values-chunk)` row per buffered key whenever the buffer holds
+    * [[CombineBufferBytes]], and once at the end of the task. No value is
+    * merged or dropped — a chunk only packs the values' bytes — and the
+    * bound is on bytes, not on a value count, so one huge value cannot
+    * grow the buffer past it by more than itself.
+    *
+    * Reduce side: one shuffle — grouping on the key column hash-partitions
+    * on the key exactly like the reference's FNV%nReduce bucketing (an
+    * explicit repartition(nReduce) first would shuffle the data a second
+    * time for nothing; `groupByKey` would ship a second copy of the key)
+    * — and `reduce` gets an iterator over the key's chunks, flattened and
+    * decoded lazily; no per-key list is built beyond one chunk. `nReduce` is
+    * accepted for contract parity; the actual reduce parallelism is
     * governed by spark.sql.shuffle.partitions/AQE, which is the point of
     * building on Spark — results are partition-count invariant either way
     * (PropertySpec).
@@ -49,9 +71,55 @@ object MapReduceJob {
     val spark = input.sparkSession
     import spark.implicits._
     input
-      .flatMap(map)
-      .groupByKey(_._1)
-      .mapGroups((k, vs) => (k, reduce(k, vs.map(_._2))))
+      .mapPartitions(lines => combined(lines.flatMap(map)))
+      .groupBy(col("_1")).as[String, (String, Array[Byte])]
+      .mapGroups((k, chunks) => (k, reduce(k, chunks.flatMap(c => values(c._2)))))
+  }
+
+  /** The map-side buffer bound of [[run]], in buffered bytes: each
+    * buffered key's length, and each value's UTF-8 bytes behind a 4-byte
+    * length.
+    */
+  private[graft] val CombineBufferBytes: Long = 1L << 20
+
+  /** `pairs` packed into `(key, values-chunk)` rows, one per key per buffer
+    * flush, in no specified order; a chunk is its values, each as a 4-byte
+    * length (-1 for null) and its UTF-8 bytes. The input is consumed
+    * lazily, one buffer at a time.
+    */
+  private def combined(pairs: Iterator[(String, String)]): Iterator[(String, Array[Byte])] =
+    Iterator.continually(nextBuffer(pairs)).takeWhile(_.nonEmpty).flatMap { buffer =>
+      buffer.iterator.map { case (k, chunk) => (k, chunk.result()) }
+    }
+
+  private def nextBuffer(pairs: Iterator[(String, String)])
+      : mutable.HashMap[String, mutable.ArrayBuilder.ofByte] = {
+    val buffer = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofByte]
+    var bytes = 0L
+    while (bytes < CombineBufferBytes && pairs.hasNext) {
+      val (k, v) = pairs.next()
+      val chunk = buffer.getOrElseUpdate(k, {
+        if (k != null) bytes += k.length
+        new mutable.ArrayBuilder.ofByte
+      })
+      val b = if (v == null) Array.emptyByteArray else v.getBytes(UTF_8)
+      val n = if (v == null) -1 else b.length
+      chunk.addOne((n >>> 24).toByte).addOne((n >>> 16).toByte).addOne((n >>> 8).toByte).addOne(n.toByte)
+      chunk.addAll(b)
+      bytes += 4 + b.length
+    }
+    buffer
+  }
+
+  /** The values of one chunk written by [[nextBuffer]]. */
+  private def values(chunk: Array[Byte]): Iterator[String] = {
+    val in = java.nio.ByteBuffer.wrap(chunk)
+    Iterator.continually(in).takeWhile(_.hasRemaining).map { in =>
+      val n = in.getInt()
+      val at = in.position()
+      in.position(at + math.max(n, 0))
+      if (n < 0) null else new String(chunk, at, n, UTF_8)
+    }
   }
 
   /** Algebraic contract: value-merge function is associative+commutative, so

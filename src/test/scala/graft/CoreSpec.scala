@@ -75,6 +75,61 @@ class CoreSpec extends AnyFunSuite with ScratchTests {
     assert(declarative === contract)
   }
 
+  test("run combines map output: shuffle records <= map tasks x distinct keys x buffer flushes") {
+    import spark.implicits._
+    // wc02's shape: few distinct words, each repeated thousands of times
+    val vocab = Vector.tabulate(31)(i => s"w$i")
+    val mapTasks = 4
+    val lines = spark.range(0, 20000, 1, mapTasks)
+      .map(i => Seq.tabulate(10)(j => vocab(((i * 7 + j * 13) % 31).toInt)).mkString(" "))
+    val words = lines.collect().toSeq.flatMap(_.split(" "))
+    val (out, fired) = Jobs.observed(spark) {
+      MapReduceJob.run(
+        lines, l => l.split(" ").iterator.map(w => (w, "1")),
+        (_, vs) => vs.map(_.toInt).sum.toString, nReduce = 4).collect().toMap
+    }
+    assert(out === words.groupBy(identity).map { case (w, ws) => w -> ws.size.toString })
+    // a map task flushes its buffer each time it reaches the bound, and
+    // once at its end; each flush ships one record per buffered key. A
+    // pair buffers at most its key, its value and the value's 4-byte length
+    val bytes = words.map(_.length + "1".length + 4).sum.toLong
+    val flushes = bytes / MapReduceJob.CombineBufferBytes + 1
+    assert(fired.shuffleRecords >= vocab.size && fired.shuffleRecords <= mapTasks * vocab.size * flushes,
+      s"${fired.shuffleRecords} shuffle records for ${words.size} pairs")
+  }
+
+  test("run carries null, empty and non-ASCII keys and values through its map-side chunks unchanged") {
+    import spark.implicits._
+    val pairs = Seq(("", ""), ("", "x"), ("é", "日本"), ("é", ""), ("k", "a\u0000b"), ("k", "😀"),
+      ("k", "a\u0000b"), ("k", null), (null, "n"), (null, null))
+    val lines = spark.range(0, pairs.size, 1, 2).map(_.toString)
+    def show(vs: Iterable[String]) = vs.map(v => if (v == null) "<null>" else v).toSeq.sorted.mkString("|")
+    val out = MapReduceJob.run(
+      lines, l => Iterator(pairs(l.toInt)), (_, vs) => show(vs.toSeq)).collect().toMap
+    assert(out === pairs.groupBy(_._1).map { case (k, kvs) => k -> show(kvs.map(_._2)) })
+  }
+
+  test("run's map-side buffer bound is a fixed 1 MiB") {
+    assert(MapReduceJob.CombineBufferBytes === (1L << 20))
+  }
+
+  test("tools.FaultDemo: contract word counts survive injected task failures (child JVM, local[4,4])") {
+    import scala.jdk.CollectionConverters._
+    // FaultDemo needs a context of its own with task retries; the shared
+    // test session does not retry (local[4])
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.tools.FaultDemo")
+    val out, err = new StringBuilder
+    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => err.append(l).append('\n')))
+    val ok = out.toString.linesIterator.filter(_.startsWith("[fault-demo] OK")).toSeq
+    assert(code === 0, s"stdout:\n$out\nstderr (tail):\n${err.takeRight(4000)}")
+    assert(ok.map(_.takeWhile(_ != ':')) === Seq(
+      "[fault-demo] OK one-failure", "[fault-demo] OK many-failures", "[fault-demo] OK"), out.toString)
+  }
+
   scratchTest("writeSortedText emits `key: value` lines in total key order") { tmp =>
     import spark.implicits._
     val kvs = Seq(("b", "2"), ("a", "1"), ("c", "3")).toDS()

@@ -224,6 +224,24 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("non-commutative-safe: one key past the map-side buffer bound in each map task, every value once") {
+    import spark.implicits._
+    // ~3x the bound on one key in each of two map tasks (one task would
+    // satisfy the grouping without a shuffle): each task flushes the
+    // key's values in several chunks, and reduce must see each value once
+    val pad = "x" * 100
+    val n = 2 * (3 * MapReduceJob.CombineBufferBytes / (pad.length + 4)).toInt
+    val lines = spark.range(0, n, 1, 2).map(i => s"$i:$pad")
+    val (out, fired) = Jobs.observed(spark) {
+      MapReduceJob.run(
+        lines, l => Iterator(("k", l)),
+        (_, vs) => vs.map(_.takeWhile(_ != ':').toInt).toVector.sorted.mkString(","), 3
+      ).collect().toSeq
+    }
+    assert(out === Seq(("k", (0 until n).mkString(","))))
+    assert(fired.shuffleRecords >= 2 * 3, s"${fired.shuffleRecords} chunks: the key must cross the shuffle in several")
+  }
+
   test("d17 triangle kernel is invariant to edge partitioning and edge order (6 seeded cases)") {
     import spark.implicits._
     for (seed <- 61 to 66) {
